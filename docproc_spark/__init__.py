@@ -20,6 +20,11 @@ Layout:
   sources/      table loaders, lineage/checkpoint + resume
   plans/        plan-inspection helpers (pushdown/broadcast assertions)
   streaming/    Structured Streaming variants of the batch operators
+  zipcache.py   Python workers skip per-task re-reads of Spark's zip archives
 """
 
 __version__ = "0.1.0"
+
+from docproc_spark.zipcache import freeze_installation_archives as _freeze
+
+_freeze()  # a no-op outside PySpark workers (zipcache.py)

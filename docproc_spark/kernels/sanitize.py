@@ -72,7 +72,16 @@ def _nfc_series(s: pd.Series) -> pd.Series:
 
 
 def sanitize_series(s: pd.Series) -> pd.Series:
-    """Vectorized sanitize over a pandas string series (pandas-UDF path)."""
+    """Vectorized sanitize over a pandas string series (pandas-UDF path).
+
+    Nulls map to "" without entering the chain: ``sanitize_hybrid_col``
+    masks every ASCII row to null, so a pipeline batch is ~98% null."""
+    live = s.notna()
+    if not live.all():
+        out = pd.Series("", index=s.index, dtype=object)
+        if live.any():
+            out[live] = sanitize_series(s[live]).to_numpy()
+        return out
     out = _nfc_series(s)
     out = out.str.replace(_CTRL_RE, "", regex=True)
     out = out.str.replace(_ZERO_WIDTH_RE, "", regex=True)

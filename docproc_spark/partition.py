@@ -17,8 +17,28 @@ no extra exchange at 100 TB, where inputs are already well-split.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# What plan introspection raises when a fast path cannot run: AttributeError
+# where a DataFrame has no ``_jdf`` (Spark Connect), NotImplementedError
+# for Connect's ``.rdd``, Py4JError when the JVM call itself fails. Any
+# other error is a bug and propagates.
+INTROSPECTION_ERRORS = (AttributeError, NotImplementedError, Py4JError)
+
+_log = logging.getLogger(__name__)
+_disabled_logged: set[str] = set()
+
+
+def fast_path_disabled(what: str, exc: BaseException) -> None:
+    """Log, once per process and call site, that a plan-introspection fast
+    path fell back to its slow form."""
+    if what not in _disabled_logged:
+        _disabled_logged.add(what)
+        _log.warning("%s disabled: %s: %s", what, type(exc).__name__, exc)
 
 
 def scan_fanout(
@@ -49,12 +69,24 @@ def scan_fanout(
     partition-order-independent for every relational consumer
     (aggregations, windows keyed on columns, joins); callers relying on
     physical row order should not use this.
+
+    ``sizeInBytes`` tracks the COMPRESSED parquet size of the scanned
+    files (times the pruned-column fraction), not the decoded rows, which
+    run ~5-10x larger for text columns. The ``min_bytes`` thresholds of
+    the call sites are therefore calibrated to the current file layout
+    and codec; re-measure them if either changes.
+
+    A streaming input passes through unchanged. Where the plan cannot be
+    inspected (Spark Connect, a failing JVM call) the input passes through
+    and, for the size gate, the fanout is applied ungated; both log once.
     """
-    spark = df.sparkSession
-    t = target or spark.sparkContext.defaultParallelism
+    if df.isStreaming:
+        return df
     try:
+        t = target or df.sparkSession.sparkContext.defaultParallelism
         n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover — e.g. streaming plans
+    except INTROSPECTION_ERRORS as exc:
+        fast_path_disabled("scan_fanout partition count", exc)
         return df
     if n >= t:
         return df
@@ -63,7 +95,8 @@ def scan_fanout(
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-        except Exception:  # pragma: no cover — stats unavailable
+        except INTROSPECTION_ERRORS as exc:
+            fast_path_disabled("scan_fanout min_bytes gate", exc)
             est = None
         if est is not None and est < min_bytes:
             return df

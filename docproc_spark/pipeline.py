@@ -47,6 +47,7 @@ from docproc_spark.kernels.sanitize import (
     TITLE_MAX_LEN,
     sanitize_series,
 )
+from docproc_spark.partition import INTROSPECTION_ERRORS, fast_path_disabled
 from docproc_spark.schema import SPAN_STRUCT
 
 _OUT_SPANS_T = (
@@ -796,7 +797,8 @@ def _is_scan_like(docs: DataFrame) -> bool:
     parse — so those keep the static two-branch routing instead."""
     try:
         plan = docs._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # pragma: no cover — plan introspection unavailable
+    except INTROSPECTION_ERRORS as exc:
+        fast_path_disabled("extract routing probe", exc)
         return False
     for line in plan.splitlines():
         node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]

@@ -421,6 +421,25 @@ def test_sanitize_series_nonstring_matches_scalar():
     assert got == want
 
 
+def test_sanitize_series_all_null_batch():
+    """The pipeline's pandas UDF sees ASCII rows masked to null: an
+    all-null batch comes back as "" per row, same length and index."""
+    s = pd.Series([None] * 5, dtype=object, index=range(10, 15))
+    got = sanitize_series(s)
+    assert got.tolist() == [""] * 5
+    assert got.index.equals(s.index)
+
+
+def test_sanitize_series_mixed_null_batch_matches_scalar():
+    vals = [None, "Cafe\u0301  au\tlait\n\n\n\nok", None, "\u200bx", None,
+            "zero\u200dwidth  text ", float("nan")]
+    s = pd.Series(vals, dtype=object)
+    got = sanitize_series(s)
+    assert got.tolist() == [sanitize_text(v) for v in vals]
+    assert got.tolist()[1] == "Caf\u00e9 au lait\n\nok"
+    assert got.index.equals(s.index)
+
+
 def test_html_table_caption_becomes_a_row():
     from docproc_spark.kernels.html import html_main_blocks
 

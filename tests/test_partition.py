@@ -3,7 +3,10 @@ input repair) and the minhash band-exclusion pushdown fix."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pyspark.sql.functions as F
+import pytest
 
 from docproc_spark.partition import scan_fanout
 
@@ -109,3 +112,57 @@ def test_image_signatures_fanout_preserves_values(spark):
         sig = image_signature(b)
         ref = hashlib.sha256(b).hexdigest()
         assert got[ref] == (sig["dhash64"], sig["ahash64"])
+
+
+# ---------------------------------------------------------------------------
+# narrow fallbacks: only "cannot introspect" errors take the slow path
+# ---------------------------------------------------------------------------
+class _NoJdf:
+    """A DataFrame stand-in with no ``_jdf`` (as on Spark Connect) and a
+    single partition; ``repartition`` records its argument."""
+
+    isStreaming = False
+    sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    rdd = SimpleNamespace(getNumPartitions=lambda: 1)
+
+    def repartition(self, n):
+        return ("repartitioned", n)
+
+
+def _failing_jdf(exc: Exception):
+    def raise_(*_):
+        raise exc
+
+    return SimpleNamespace(queryExecution=raise_)
+
+
+def test_fallbacks_take_only_introspection_errors(monkeypatch, caplog):
+    from docproc_spark import partition
+    from docproc_spark.pipeline import _is_scan_like
+
+    monkeypatch.setattr(partition, "_disabled_logged", set())
+    stub = _NoJdf()
+    with caplog.at_level("WARNING", logger="docproc_spark.partition"):
+        assert _is_scan_like(stub) is False
+        assert _is_scan_like(stub) is False
+        # size gate unavailable → the fanout runs ungated
+        assert scan_fanout(stub, min_bytes=10**9) == ("repartitioned", 4)
+        no_rdd = SimpleNamespace(isStreaming=False, sparkSession=_NoJdf.sparkSession)
+        assert scan_fanout(no_rdd) is no_rdd
+    sites = [r.getMessage().split(" disabled")[0] for r in caplog.records]
+    assert sites == ["extract routing probe", "scan_fanout min_bytes gate",
+                     "scan_fanout partition count"], "each site logs once"
+
+    broken = SimpleNamespace(_jdf=_failing_jdf(ValueError("bug")))
+    with pytest.raises(ValueError):
+        _is_scan_like(broken)
+    stub._jdf = _failing_jdf(KeyError("bug"))
+    with pytest.raises(KeyError):
+        scan_fanout(stub, min_bytes=10**9)
+
+    def count_fails():
+        raise RuntimeError("bug")
+
+    stub.rdd = SimpleNamespace(getNumPartitions=count_fails)
+    with pytest.raises(RuntimeError):
+        scan_fanout(stub)
