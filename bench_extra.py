@@ -26,34 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = (
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_region_revenue",
-    "top3_orders_per_customer",
-    "session_stats",
-    "events_hourly",
-    "doc_quality",
-    "lang_pred_markers",
-    "first_wins_dedupe",
-    "minhash_band_stats",
-    "simhash64",
-    "cosine_topk",
-    "ngram_jaccard_pairs",
-    "web_curation",
-    "pagerank_101",
-    "curate_interleaved",
-    "image_signatures",
-)
-
-_CORPUS_SIZE = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 20000}
-
-
-def _force(df):
-    from pyspark.sql import functions as F
-
-    h = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(1_000_000_007))
-    df.select(F.sum(h)).collect()
+from bench import _CORPUS_SIZE, BENCH_QUERIES, _force  # noqa: E402
 
 
 def _qs(spark, sf_dir, n_docs):

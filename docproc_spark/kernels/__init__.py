@@ -1,15 +1,15 @@
 """Pure pandas/numpy kernels — unit-testable without a SparkSession.
 
-Each kernel has a scalar form (used by the single-process oracle) and a
-vectorized pandas form (used inside pandas UDFs / mapInPandas on the
-cluster). Tests assert the two forms agree on every fixture.
+Each kernel has one implementation, the scalar reference function the
+single-process oracle calls. A pandas UDF on the cluster applies that
+same function to every element of an Arrow batch (one Python call per
+batch), so the two paths cannot drift apart.
 """
 
 from docproc_spark.kernels.sanitize import (  # noqa: F401
     sanitize_text,
     sanitize_series,
     boilerplate_kind,
-    boilerplate_kind_series,
     DROP_KINDS_DEFAULT,
 )
 from docproc_spark.kernels.captions import caption_stub, caption_series  # noqa: F401

@@ -27,8 +27,16 @@ def caption_stub(media_ref: str, ctx: str) -> str:
 
 
 def caption_series(media_ref: pd.Series, ctx: pd.Series) -> pd.Series:
-    """Vectorized caption stub (pandas-UDF path)."""
-    return "Figure " + media_ref.str.slice(0, 12) + ": " + ctx
+    """``caption_stub`` per element of one batch; a missing or non-string
+    ref or context gives a null caption."""
+    return pd.Series(
+        [
+            caption_stub(r, c) if isinstance(r, str) and isinstance(c, str) else None
+            for r, c in zip(media_ref, ctx)
+        ],
+        index=media_ref.index,
+        dtype=object,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,8 @@
 """LLM-input sanitization (reference: docproc/sanitize/llm_input.py:38-70).
 
 Strip prompt-injection phrasing, collapse whitespace, truncate to a
-character budget at the last space — semantics reproduced exactly,
-vectorized for the pandas-UDF path.
+character budget at the last space — semantics reproduced exactly; the
+pandas-UDF path applies the scalar per element.
 """
 
 from __future__ import annotations
@@ -51,16 +51,7 @@ def sanitize_for_llm(text: object, max_tokens: int = 2000) -> str:
 
 
 def sanitize_for_llm_series(s: pd.Series, max_tokens: int = 2000) -> pd.Series:
-    out = s.fillna("").astype(str).str.strip()
-    for pat in _COMPILED:
-        out = out.str.replace(pat, " ", regex=True)
-    out = out.str.replace(_WS, " ", regex=True).str.strip()
-    max_chars = max(1, max_tokens * _CHARS_PER_TOKEN)
-    too_long = out.str.len() > max_chars
-    if too_long.any():
-        def cut(v: str) -> str:
-            head = v[:max_chars]
-            return (head.rsplit(" ", 1)[0] if " " in head else head).strip()
-        out = out.copy()
-        out[too_long] = out[too_long].map(cut)
-    return out
+    """``sanitize_for_llm`` over one Arrow batch; nulls map to ""."""
+    return s.map(
+        lambda v: sanitize_for_llm(v, max_tokens), na_action="ignore"
+    ).fillna("")

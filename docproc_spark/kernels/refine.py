@@ -19,8 +19,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 CHUNK_CHARS = 80_000
 
 _PAGE_MARKER_SPLIT = re.compile(r"(\[Page \d+\])")
@@ -76,13 +74,6 @@ def refine_mechanical(text: str) -> str:
     if text is None:
         return ""
     return normalize_symbols(strip_page_markers(text))
-
-
-def refine_series(s: pd.Series) -> pd.Series:
-    out = s.fillna("").str.replace(_PAGE_MARKER, "", regex=True)
-    for sym, latex in SYMBOL_TABLE:
-        out = out.str.replace(sym, latex, regex=False)
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Sanitization + boilerplate kernels (reference semantics, vectorized).
+"""Sanitization + boilerplate kernels (reference semantics).
 
 Semantics reproduced from the reference extractor (behavior only):
   - sanitize:     /root/reference/docproc/sanitize/sanitizer.py:25-71
@@ -14,8 +14,9 @@ Order of sanitize steps (each step's output feeds the next):
   7. strip(); drop to "" if fewer than 2 chars remain
 
 The Cc category is exactly C0 (U+0000-U+001F) + DEL (U+007F) + C1
-(U+0080-U+009F), so step 2 is a fixed character class — fully regex
-expressible and therefore vectorizable with pandas .str ops.
+(U+0080-U+009F), so step 2 is a fixed character class; its ASCII part is
+what the JVM-side ASCII twin (pipeline.sanitize_ascii_col) deletes with
+one F.translate.
 """
 
 from __future__ import annotations
@@ -52,45 +53,16 @@ def sanitize_text(text: object) -> str:
     return s
 
 
-def _nfc_series(s: pd.Series) -> pd.Series:
-    """NFC-normalize a string series.
-
-    pyarrow.compute.utf8_normalize(form="NFC") does not actually compose
-    (verified: 0x61+0x300 stays decomposed in pyarrow 16), so we use
-    unicodedata — but only on the non-ASCII minority (ASCII is NFC-invariant),
-    keeping the common path fully vectorized.
-    """
-    # non-str objects map to "" like the scalar twin's isinstance guard —
-    # astype(str) alone coerced 123/True to "123"/"True", so the two
-    # must-agree paths diverged on any non-string payload
-    out = s.map(lambda x: x if isinstance(x, str) else "")
-    non_ascii = out.str.contains(r"[^\x00-\x7f]", regex=True)
-    if non_ascii.any():
-        out = out.copy()
-        out[non_ascii] = out[non_ascii].map(lambda x: unicodedata.normalize("NFC", x))
-    return out
-
-
 def sanitize_series(s: pd.Series) -> pd.Series:
-    """Vectorized sanitize over a pandas string series (pandas-UDF path).
+    """``sanitize_text`` over one Arrow batch (the pandas-UDF path).
 
-    Nulls map to "" without entering the chain: ``sanitize_hybrid_col``
-    masks every ASCII row to null, so a pipeline batch is ~98% null."""
-    live = s.notna()
-    if not live.all():
-        out = pd.Series("", index=s.index, dtype=object)
-        if live.any():
-            out[live] = sanitize_series(s[live]).to_numpy()
-        return out
-    out = _nfc_series(s)
-    out = out.str.replace(_CTRL_RE, "", regex=True)
-    out = out.str.replace(_ZERO_WIDTH_RE, "", regex=True)
-    out = out.str.replace(_WS_RE, " ", regex=True)
-    out = out.str.replace(_NL_PAD_RE, "\n", regex=True)
-    out = out.str.replace(_NL_RUN_RE, "\n\n", regex=True)
-    out = out.str.strip()
-    out = out.where(out.str.len() >= MIN_CONTENT_LENGTH, "")
-    return out
+    Nulls map to "" without a call: ``sanitize_hybrid_col`` masks every
+    ASCII row to null, so a pipeline batch is ~98% null. On object dtype
+    a pandas ``.str`` chain is a per-element Python loop too, so one map
+    of the scalar is no slower than a vectorized restatement of it.
+    pyarrow's ``utf8_normalize(form="NFC")`` is not an option: it does
+    not compose (0x61+0x300 stays decomposed in pyarrow 16)."""
+    return s.map(sanitize_text, na_action="ignore").fillna("")
 
 
 # ---------------------------------------------------------------------------
@@ -130,32 +102,6 @@ def boilerplate_kind(text: object) -> str:
     if len(cleaned) < TITLE_MAX_LEN and len(lines) <= 1:
         return "title"
     return "none"
-
-
-def boilerplate_kind_series(sanitized: pd.Series) -> pd.Series:
-    """Vectorized classifier over ALREADY-SANITIZED text."""
-    s = sanitized.fillna("")
-    out = pd.Series("none", index=s.index, dtype=object)
-    n_lines = s.str.count("\n") + 1
-    first_line = s.str.split("\n").str[0].str.strip()
-
-    blank = (s == "") | (first_line == "")
-    out[blank] = "blank"
-
-    undecided = ~blank
-    for kind, pat in BOILERPLATE_PATTERNS:
-        if not undecided.any():
-            break
-        hit = undecided & (
-            first_line.str.contains(pat, regex=True)
-            | ((n_lines <= 2) & s.str.contains(pat, regex=True))
-        )
-        out[hit] = kind
-        undecided &= ~hit
-
-    title = undecided & (s.str.len() < TITLE_MAX_LEN) & (n_lines <= 1)
-    out[title] = "title"
-    return out
 
 
 def content_hash(sanitized: str) -> str:

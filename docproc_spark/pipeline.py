@@ -3,9 +3,9 @@
 DataFrame-first reimplementation of the reference's deterministic extraction
 path (see docproc_spark.oracle for the single-process truth). Everything
 stays JVM-side in whole-stage codegen except two kernels that genuinely need
-Python: unicode-NFC sanitize (vectorized pandas UDF over Arrow batches) and
-the HTML main-content parser (pandas UDF, one call per HTML doc). No per-row
-Python UDFs anywhere.
+Python: unicode-NFC sanitize (a pandas UDF applying the oracle's own
+sanitize_text to each element of an Arrow batch) and the HTML main-content
+parser (pandas UDF, one call per HTML doc). No per-row Python UDFs anywhere.
 
 Scale design — a true SINGLE-PASS plan (what a 1000-executor cluster runs):
 
@@ -97,8 +97,8 @@ _CTRL_STRIP = "".join(
 
 def sanitize_ascii_col(text: Column) -> Column:
     """The sanitize chain for ASCII input, where NFC and zero-width
-    stripping are no-ops — exact twin of the Python kernel
-    (kernels/sanitize.py), hypothesis-tested against it.
+    stripping are no-ops — the one JVM-side twin of the Python kernel
+    (kernels/sanitize.py), kept for speed and hypothesis-tested against it.
 
     Cheap primitives carry the endpoints: F.translate (linear scan, no
     regex) deletes control chars, and F.btrim with the explicit set
@@ -124,7 +124,8 @@ def sanitize_ascii_col(text: Column) -> Column:
 
 def sanitize_hybrid_col(text: Column) -> Column:
     """Route: ASCII rows through whole-stage-codegen regexes; the non-ASCII
-    minority through the vectorized pandas kernel (NFC needs ICU). This
+    minority through sanitize_udf, which applies the scalar sanitize_text
+    per element of each Arrow batch (NFC needs unicodedata). This
     keeps Python worker traffic ~proportional to the non-ASCII fraction —
     the lever that makes the map stage scale past ~cores/2 threads in
     local mode (JVM task threads and Python workers both want a core).
@@ -283,9 +284,11 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def enrich_spans(rows: DataFrame) -> DataFrame:
-    """Narrow (no-shuffle) per-span enrichment.
+    """Narrow (no-shuffle) per-span enrichment — the one definition of the
+    per-span classification both physical plans use (the salted path
+    flattens this struct).
 
-    The map side produces the sanitized text (the Python kernel) PLUS the
+    The map side produces the sanitized text (sanitize_hybrid_col) PLUS the
     cheap derived fields — boilerplate class (~10 bytes) and the four
     classification booleans — because here they run inside whole-stage
     codegen on flat rows, while recomputing them post-shuffle costs an
@@ -293,12 +296,9 @@ def enrich_spans(rows: DataFrame) -> DataFrame:
     lambdas (measured: moving bp map-side cut the post-shuffle stage
     materially at sf0.1; the extra shuffle bytes are ~15/span). The
     dedupe hash (64 hex bytes/span!) and the drop_kinds-dependent
-    `survives` stay post-shuffle in _srt_col: the hash would dominate
-    shuffle bytes, and survives is a two-comparison expression.
-
-    DRIFT GUARD: pipeline_salted._flat_rows carries column-form twins of
-    these flag definitions — change them TOGETHER; the executable guard
-    is test_salted_equals_array_path_fresh_seed.
+    `survives` stay post-shuffle in _srt_col (survives_and_hash): the hash
+    would dominate shuffle bytes, and survives is a two-comparison
+    expression.
     """
     is_textual = F.col("kind").isin(*TEXTUAL_KINDS)
     is_media = F.col("kind").isin(*MEDIA_KINDS)
@@ -358,6 +358,20 @@ def _first_per_key(sorted_arr: Column, key) -> Column:
     )
 
 
+def survives_and_hash(
+    is_textual: Column, bp: Column, sanitized: Column, drop_kinds: frozenset
+) -> tuple[Column, Column]:
+    """(survives, hash) of one enriched span: a textual span survives when
+    its boilerplate class is not dropped and its sanitized text is
+    non-empty; only survivors get the sha256 dedupe hash. Column args, so
+    it serves a struct field inside a HOF lambda (_srt_col) and a flat
+    column (pipeline_salted) alike."""
+    survives = F.coalesce(
+        is_textual & ~bp.isin(*drop_kinds) & (sanitized != ""), F.lit(False)
+    )
+    return survives, F.when(survives, F.sha2(sanitized, 256))
+
+
 def _srt_col(spans: Column, drop_kinds: frozenset) -> Column:
     """Spans in document order (page, offset), deriving only what the map
     side could not: ``survives`` depends on the caller's drop_kinds and
@@ -372,16 +386,12 @@ def _srt_col(spans: Column, drop_kinds: frozenset) -> Column:
     (kernels/assembly.py:108-114,128) and reference
     (vision_llm.py:395-399,494-496) enumerate raw_images themselves —
     while ref-less RASTERS are inert (assembly.py:133-134 skips ''/null
-    refs before captioning).
-
-    DRIFT GUARD: pipeline_salted._flat_rows carries the column-form twins
-    of the survives/hash definitions — change them TOGETHER; the
-    executable guard is test_salted_equals_array_path_fresh_seed."""
+    refs before captioning). survives/hash come from survives_and_hash,
+    which the salted path shares."""
 
     def finalize(y):
-        survives = F.coalesce(
-            y["is_textual"] & ~y["bp"].isin(*drop_kinds) & (y["sanitized"] != ""),
-            F.lit(False),
+        survives, hash_ = survives_and_hash(
+            y["is_textual"], y["bp"], y["sanitized"], drop_kinds
         )
         return F.struct(
             y["page"].alias("page"),
@@ -393,7 +403,7 @@ def _srt_col(spans: Column, drop_kinds: frozenset) -> Column:
             y["kind"].alias("kind"),
             y["text"].alias("text"),
             y["sanitized"].alias("sanitized"),
-            F.when(survives, F.sha2(y["sanitized"], 256)).alias("hash"),
+            hash_.alias("hash"),
             y["media_ref"].alias("media_ref"),
             y["is_textual"].alias("is_textual"),
             y["is_media"].alias("is_media"),

@@ -31,17 +31,16 @@ mega-doc fixture).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from docproc_spark.kernels.assembly import MEDIA_KINDS, RASTER_KIND, TEXTUAL_KINDS
 from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
 from docproc_spark.pipeline import (
     _OUT_SPANS_T,
     _caption,
-    boilerplate_kind_col,
+    enrich_spans,
     explode_spans,
-    has_nonblank_col,
+    survives_and_hash,
     with_derived_spans,
 )
 
@@ -49,8 +48,9 @@ _PAGE_SPANS_T = "array<struct<kind:string,text:string,media_ref:string>>"
 
 
 def _flat_rows(docs: DataFrame, drop_kinds: frozenset, persist: bool = True) -> DataFrame:
-    """Exploded enriched spans as flat columns with the per-span flags of
-    pipeline._srt_col (same semantics, column form).
+    """Exploded spans as flat columns: pipeline.enrich_spans's struct,
+    flattened, plus survives/hash from pipeline.survives_and_hash — the
+    same definitions pipeline._srt_col uses, so the two plans share them.
 
     Two deliberate physical choices for the mega-doc regime:
       1. repartition(doc_id, page) BETWEEN explode and enrichment — a
@@ -75,47 +75,11 @@ def _flat_rows(docs: DataFrame, drop_kinds: frozenset, persist: bool = True) -> 
     raw = explode_spans(with_derived_spans(docs)).repartition(
         F.col("doc_id"), F.col("page")
     )
-    from docproc_spark.pipeline import sanitize_hybrid_col
-
-    # DRIFT GUARD: the flag/survives/hash definitions below are the
-    # column-form TWINS of pipeline._srt_col's classify/finalize struct
-    # lambdas — any semantic change there must be mirrored here (and vice
-    # versa). The executable guard is
-    # tests/test_salted_pipeline.py::test_salted_equals_array_path_fresh_seed,
-    # which compares the two paths' full outputs on a fresh-seed corpus.
-    is_textual = F.col("kind").isin(*TEXTUAL_KINDS)
-    is_media = F.col("kind").isin(*MEDIA_KINDS)
-    is_raster = (
-        (F.col("kind") == RASTER_KIND)
-        & F.col("media_ref").isNotNull()
-        & (F.col("media_ref") != "")
+    flat = enrich_spans(raw).select("doc_id", "s.*")
+    survives, hash_ = survives_and_hash(
+        F.col("is_textual"), F.col("bp"), F.col("sanitized"), drop_kinds
     )
-    sanitized = F.when(is_textual, sanitize_hybrid_col(F.col("text"))).otherwise(
-        F.lit(None)
-    )
-    enriched = raw.withColumn("sanitized", sanitized)
-    bp = boilerplate_kind_col(F.col("sanitized"))
-    survives = F.coalesce(
-        is_textual & ~bp.isin(*drop_kinds) & (F.col("sanitized") != ""),
-        F.lit(False),
-    )
-    out = enriched.select(
-        "doc_id",
-        "page",
-        "offset",
-        "pos",
-        "kind",
-        "text",
-        "sanitized",
-        "media_ref",
-        is_textual.alias("is_textual"),
-        is_media.alias("is_media"),
-        is_raster.alias("is_raster"),
-        survives.alias("survives"),
-        # bool(text.strip()) equivalent — F.trim strips ASCII space only
-        (is_textual & has_nonblank_col(F.col("text"))).alias("raw_nonblank"),
-        F.when(survives, F.sha2(F.col("sanitized"), 256)).alias("hash"),
-    )
+    out = flat.select("*", survives.alias("survives"), hash_.alias("hash"))
     return out.persist(StorageLevel.MEMORY_AND_DISK) if persist else out
 
 

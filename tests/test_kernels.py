@@ -16,7 +16,6 @@ from docproc_spark.kernels.assembly import assemble_document
 from docproc_spark.kernels.html import html_main_blocks
 from docproc_spark.kernels.sanitize import (
     boilerplate_kind,
-    boilerplate_kind_series,
     sanitize_series,
     sanitize_text,
 )
@@ -83,13 +82,6 @@ class TestBoilerplate:
     def test_multiline_substantive_kept(self):
         text = "Agenda\nitem one is long enough\nitem two is long enough\nmore"
         assert boilerplate_kind(text) == "agenda"  # first-line match
-
-    @given(st.text(max_size=120))
-    @settings(max_examples=300, deadline=None)
-    def test_vectorized_matches_scalar(self, s):
-        sanitized = sanitize_text(s)
-        got = boilerplate_kind_series(pd.Series([sanitized], dtype=object)).iloc[0]
-        assert got == boilerplate_kind(s)
 
 
 class TestAssembly:

@@ -170,3 +170,36 @@ def test_salted_equals_array_path_fresh_seed(spark):
         assert a[d]["markdown"] == b[d]["markdown"], d
         assert a[d]["n_pages"] == b[d]["n_pages"], d
         assert _tuples(a[d]["spans"]) == _tuples(b[d]["spans"]), d
+
+
+@pytest.mark.parametrize(
+    "drop_kinds", [frozenset(), frozenset({"title", "agenda"})], ids=["none", "title_agenda"]
+)
+def test_drop_kinds_parity_both_plans(spark, drop_kinds):
+    """A non-default drop_kinds (frozenset() is what drop_boilerplate: false
+    gives) reaches the shared survives definition through both physical
+    plans, and both match the assembly kernel run with the same set."""
+    from docproc_spark.kernels.assembly import assemble_document
+
+    n, seed = 72, 17
+    docs = corpus.corpus_df(spark, n, seed=seed, mega_spans=300, partitions=4)
+    want, differs = {}, 0
+    for i in range(n):
+        d = corpus.gen_doc(i, seed=seed, mega_spans=300)
+        spans = list(d["spans"] or [])
+        if d.get("raw_html"):
+            spans += oracle.html_to_spans(d["raw_html"])
+        md, out = assemble_document(spans, drop_kinds=drop_kinds)
+        n_pages = max(s["page"] for s in out) + 1 if out else 0
+        want[d["doc_id"]] = (md, n_pages, _tuples(out))
+        differs += md != assemble_document(spans)[0]
+    assert differs, "the sample must exercise drop_kinds"
+    for res in (
+        extract(docs, drop_kinds=drop_kinds, mega_doc_threshold=None),
+        extract_salted(docs, drop_kinds=drop_kinds),
+    ):
+        got = {
+            r["doc_id"]: (r["markdown"], r["n_pages"], _tuples(r["spans"]))
+            for r in res.collect()
+        }
+        assert got == want
