@@ -22,15 +22,12 @@ from pyspark.sql import functions as F
 
 _COUNTER = itertools.count()
 
-# corpus size per driver scale factor (deterministic from the dir name)
-_CORPUS_SIZE = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 20000}
-
 
 def _corpus_docs(spark: SparkSession, sf_dir: str):
-    from docproc_spark.corpus import corpus_df
+    from docproc_spark.corpus import CORPUS_SIZE, corpus_df
 
     key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    n = _CORPUS_SIZE.get(key, 2000)
+    n = CORPUS_SIZE.get(key, 2000)
     return corpus_df(spark, n, seed=42, mega_spans=2000)
 
 

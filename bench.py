@@ -23,13 +23,12 @@ import shutil
 import sys
 import time
 
+from docproc_spark.corpus import CORPUS_SIZE
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 DO_SCALING = os.environ.get("BENCH_SCALING", "1") != "0"
 CACHE_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cache")
-
-# corpus size keyed to the sf dir (same map as __spark_entry__)
-_CORPUS_SIZE = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 20000}
 
 BENCH_QUERIES = (
     "q1_pricing_summary",
@@ -326,7 +325,7 @@ def main() -> None:
     from docproc_spark.session import get_spark
 
     sf_key = SF_DIR.rstrip("/").rsplit("/", 1)[-1]
-    n_docs = _CORPUS_SIZE.get(sf_key, 2000)
+    n_docs = CORPUS_SIZE.get(sf_key, 2000)
 
     # stage the corpus once (generation excluded from all timings)
     spark = get_spark(app_name="bench_stage", master=f"local[{CPUS}]", shuffle_partitions=CPUS)

@@ -26,7 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import _CORPUS_SIZE, BENCH_QUERIES, _force  # noqa: E402
+from bench import BENCH_QUERIES, _force  # noqa: E402
+from docproc_spark.corpus import CORPUS_SIZE  # noqa: E402
 
 
 def _qs(spark, sf_dir, n_docs):
@@ -79,7 +80,7 @@ def cmd_time(args):
     from docproc_spark.session import get_spark
 
     sf_key = args.sf.rstrip("/").rsplit("/", 1)[-1]
-    n_docs = _CORPUS_SIZE.get(sf_key, 2000)
+    n_docs = CORPUS_SIZE.get(sf_key, 2000)
     spark = get_spark(
         app_name="bench_extra", master=f"local[{args.cpus}]", shuffle_partitions=args.cpus
     )
@@ -105,7 +106,7 @@ def cmd_explain(args):
     from docproc_spark.session import get_spark
 
     sf_key = args.sf.rstrip("/").rsplit("/", 1)[-1]
-    n_docs = _CORPUS_SIZE.get(sf_key, 2000)
+    n_docs = CORPUS_SIZE.get(sf_key, 2000)
     spark = get_spark(
         app_name="bench_extra_explain",
         master=f"local[{args.cpus}]",

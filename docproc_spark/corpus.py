@@ -69,6 +69,11 @@ _TOTAL_W = _CUM[-1]
 # staged span corpus exercises mine_caption_pairs' alt-first path.
 CORPUS_VERSION = 8
 
+# Documents in the deterministic corpus staged for a scale-factor table
+# dir, keyed by the dir's name (bench.py and __spark_entry__ default to
+# 2000).
+CORPUS_SIZE = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 20000}
+
 # Shared logo ref: the corpus-wide hot key for the media-dedupe skew path.
 LOGO_REF = hashlib.sha256(b"docproc_spark:logo").hexdigest()
 

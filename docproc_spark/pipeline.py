@@ -31,11 +31,24 @@ Scale design — a true SINGLE-PASS plan (what a 1000-executor cluster runs):
   indexing, bounded by media-per-page). Map-side partial collect keeps the
   shuffle write balanced; a 10^5-span mega-doc is a single ~10 MB row,
   fine; beyond that, route through operators.salting.
+
+  Construction: the plan's Columns (derived spans, explode, enrichment,
+  the staged array program) are built once per SparkContext and option
+  set (drop_kinds, drop_exact_duplicates) and reused by every later call
+  (_program). Building them takes ~8.8k py4j round trips, seconds of
+  driver time per call; reusing them leaves 88 (local[4], 4-CPU host).
+  A call still makes its own DataFrame calls, so every plan is analyzed
+  afresh and its shape does not depend on the memo.
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+from typing import Any
+
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -214,6 +227,40 @@ def boilerplate_kind_col(sanitized: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# The Column program, built once per SparkContext
+# ---------------------------------------------------------------------------
+_PROGRAM: dict = {}
+_PROGRAM_CONTEXT: SparkContext | None = None
+_PROGRAM_LOCK = threading.Lock()
+
+
+def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
+    """``build()``'s Columns, built once per ``key`` and active SparkContext.
+
+    Building the extract plan's Columns costs ~8.8k py4j round trips
+    (~16 per Column-function call: name lookups and PySpark's call-site
+    bookkeeping), seconds of driver time on every call, while a Column
+    is an immutable, unresolved expression that any DataFrame can take.
+    The entries belong to the SparkContext they were built under and are
+    all dropped when it changes, so a new context never plans with JVM
+    objects made for a stopped one. Under Spark Connect there is no
+    active context (None) and Columns are plain Python trees, so the
+    memo holds for the process. Concurrent callers build each entry
+    once: the lock is held during ``build``, which therefore must not
+    call _program."""
+    global _PROGRAM_CONTEXT
+    with _PROGRAM_LOCK:
+        sc = SparkContext._active_spark_context
+        if sc is not _PROGRAM_CONTEXT:
+            _PROGRAM.clear()
+            _PROGRAM_CONTEXT = sc
+        got = _PROGRAM.get(key)
+        if got is None:
+            got = _PROGRAM[key] = build()
+        return got
+
+
+# ---------------------------------------------------------------------------
 # Stage A: derive + explode + narrow per-span enrichment
 # ---------------------------------------------------------------------------
 def with_derived_spans(docs: DataFrame) -> DataFrame:
@@ -228,10 +275,19 @@ def with_derived_spans(docs: DataFrame) -> DataFrame:
     null text.
     """
     # canonical span-only tables (the engine's input contract is just
-    # (doc_id, spans)) have no raw_html column — skip the HTML merge
+    # (doc_id, spans)) have no raw_html column — skip the HTML merge; the
+    # page URL (WARC tables carry one) anchors relative image srcs, tables
+    # without it keep verbatim-ref identity
     has_html_col = "raw_html" in docs.columns
-    if has_html_col:
-        has_html = F.col("raw_html").isNotNull() & (F.length("raw_html") > 0)
+    has_url_col = has_html_col and "url" in docs.columns
+    spans = _program(
+        ("derived_spans", has_html_col, has_url_col),
+        lambda: _derived_spans_col(has_html_col, has_url_col),
+    )
+    return docs.withColumn("spans", spans)
+
+
+def _derived_spans_col(has_html_col: bool, has_url_col: bool) -> Column:
     empty = F.array().cast(_OUT_SPANS_T)
     sentinel = F.array(
         F.struct(
@@ -242,24 +298,14 @@ def with_derived_spans(docs: DataFrame) -> DataFrame:
             F.lit(-1).cast("int").alias("offset"),
         )
     )
-    # the page URL (WARC tables carry one) anchors relative image srcs;
-    # tables without it keep verbatim-ref identity
-    url_col = (
-        F.col("url")
-        if has_html_col and "url" in docs.columns
-        else F.lit(None).cast("string")
-    )
-    html_part = (
-        F.when(has_html, html_spans_udf(F.col("raw_html"), url_col)).otherwise(
-            empty
-        )
-        if has_html_col
-        else empty
-    )
-    return docs.withColumn(
-        "spans",
-        F.concat(F.coalesce(F.col("spans"), empty), html_part, sentinel),
-    )
+    html_part = empty
+    if has_html_col:
+        has_html = F.col("raw_html").isNotNull() & (F.length("raw_html") > 0)
+        url_col = F.col("url") if has_url_col else F.lit(None).cast("string")
+        html_part = F.when(
+            has_html, html_spans_udf(F.col("raw_html"), url_col)
+        ).otherwise(empty)
+    return F.concat(F.coalesce(F.col("spans"), empty), html_part, sentinel)
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -272,14 +318,24 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     an empty-string kind in neither the textual nor the media set and
     silently diverge on dirty external span tables. Null page/offset → 0.
     Both physical paths (flagship and salted) share this function."""
-    return docs.select("doc_id", F.posexplode("spans").alias("pos", "s")).select(
-        "doc_id",
-        F.coalesce(F.nullif(F.col("s.kind"), F.lit("")), F.lit("text")).alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.coalesce(F.col("s.page"), F.lit(0)).alias("page"),
-        F.coalesce(F.col("s.offset"), F.lit(0)).alias("offset"),
-        F.col("pos").cast("int").alias("pos"),
+    exploded, flat = _program("explode", _explode_cols)
+    return docs.select(*exploded).select(*flat)
+
+
+def _explode_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    return (
+        (F.col("doc_id"), F.posexplode("spans").alias("pos", "s")),
+        (
+            F.col("doc_id"),
+            F.coalesce(F.nullif(F.col("s.kind"), F.lit("")), F.lit("text")).alias(
+                "kind"
+            ),
+            F.col("s.text").alias("text"),
+            F.col("s.media_ref").alias("media_ref"),
+            F.coalesce(F.col("s.page"), F.lit(0)).alias("page"),
+            F.coalesce(F.col("s.offset"), F.lit(0)).alias("offset"),
+            F.col("pos").cast("int").alias("pos"),
+        ),
     )
 
 
@@ -300,6 +356,16 @@ def enrich_spans(rows: DataFrame) -> DataFrame:
     would dominate shuffle bytes, and survives is a two-comparison
     expression.
     """
+    san, s = _program("enrich", _enrich_cols)
+    # _san staged as a real column: it feeds BOTH the struct field and the
+    # boilerplate classifier, and a multi-use non-cheap alias (it embeds
+    # the pandas UDF) blocks CollapseProject from inlining — the UDF runs
+    # once, bp consumes the attribute (the hash_embed lesson)
+    return rows.withColumn("_san", san).select("doc_id", s)
+
+
+def _enrich_cols() -> tuple[Column, Column]:
+    """enrich_spans's ``_san`` column and ``s`` struct."""
     is_textual = F.col("kind").isin(*TEXTUAL_KINDS)
     is_media = F.col("kind").isin(*MEDIA_KINDS)
     is_raster = (
@@ -307,35 +373,25 @@ def enrich_spans(rows: DataFrame) -> DataFrame:
         & F.col("media_ref").isNotNull()
         & (F.col("media_ref") != "")
     )
-    # _san staged as a real column: it feeds BOTH the struct field and the
-    # boilerplate classifier, and a multi-use non-cheap alias (it embeds
-    # the pandas UDF) blocks CollapseProject from inlining — the UDF runs
-    # once, bp consumes the attribute (the hash_embed lesson)
-    staged = rows.withColumn(
-        "_san",
-        F.when(is_textual, sanitize_hybrid_col(F.col("text"))).otherwise(
-            F.lit(None)
-        ),
+    san = F.when(is_textual, sanitize_hybrid_col(F.col("text"))).otherwise(
+        F.lit(None)
     )
-    return staged.select(
-        "doc_id",
-        F.struct(
-            F.col("page"),
-            F.col("offset"),
-            F.col("pos"),
-            F.col("kind"),
-            F.col("text"),
-            F.col("_san").alias("sanitized"),
-            F.col("media_ref"),
-            is_textual.alias("is_textual"),
-            is_media.alias("is_media"),
-            is_raster.alias("is_raster"),
-            boilerplate_kind_col(F.col("_san")).alias("bp"),
-            # bool(text.strip()) — F.trim strips ASCII space ONLY and would
-            # let whitespace-only raw text block the raster fallback
-            (is_textual & has_nonblank_col(F.col("text"))).alias("raw_nonblank"),
-        ).alias("s"),
-    )
+    return san, F.struct(
+        F.col("page"),
+        F.col("offset"),
+        F.col("pos"),
+        F.col("kind"),
+        F.col("text"),
+        F.col("_san").alias("sanitized"),
+        F.col("media_ref"),
+        is_textual.alias("is_textual"),
+        is_media.alias("is_media"),
+        is_raster.alias("is_raster"),
+        boilerplate_kind_col(F.col("_san")).alias("bp"),
+        # bool(text.strip()) — F.trim strips ASCII space ONLY and would
+        # let whitespace-only raw text block the raster fallback
+        (is_textual & has_nonblank_col(F.col("text"))).alias("raw_nonblank"),
+    ).alias("s")
 
 
 # ---------------------------------------------------------------------------
@@ -792,6 +848,107 @@ def _out_spans_col(
     )
 
 
+def _array_program(
+    drop_kinds: frozenset, drop_exact_duplicates: bool
+) -> tuple[tuple[tuple[str, Column], ...], tuple[Column, ...]]:
+    """The per-document array program over the collected ``spans``: the
+    staged ``(name, column)`` pairs extract() adds with withColumn, in
+    order, and its final select list."""
+    empty_smap = F.map_from_entries(
+        F.array().cast("array<struct<page:int,v:struct<start:int,len:int>>>")
+    )
+    empty_pflags = F.map_from_entries(
+        F.array().cast("array<struct<page:int,v:struct<raw:boolean,med:boolean>>>")
+    )
+    empty_rasters = F.array().cast(
+        "array<struct<page:int,offset:int,pos:int,kind:string,"
+        "text:string,sanitized:string,hash:string,media_ref:string,"
+        "is_textual:boolean,is_media:boolean,is_raster:boolean,"
+        "survives:boolean,raw_nonblank:boolean>>"
+    )
+    has_raster = F.col("has_raster")
+    staged = (
+        ("srt", _srt_col(F.col("spans"), drop_kinds)),
+        ("texts", _texts_col(F.col("srt"), drop_exact_duplicates)),
+        ("media_all", F.filter(F.col("srt"), lambda x: x["is_media"])),
+        ("mmap", _page_slices(F.col("media_all"))),
+        ("media_idx", _media_idx_col(F.col("media_all"), F.col("mmap"))),
+        # raster machinery only for docs that HAVE raster spans (rare):
+        # one O(n) exists probe gates two O(n)-but-interpreter-heavy array
+        # passes (page slice map + per-page flags) — measured ~15% of
+        # extract wall when computed unconditionally
+        ("has_raster", F.exists(F.col("srt"), lambda x: x["is_raster"])),
+        (
+            "smap",
+            F.when(has_raster, _page_slices(F.col("srt"))).otherwise(empty_smap),
+        ),
+        (
+            "pflags",
+            F.when(has_raster, _page_flags(F.col("srt"), F.col("smap"))).otherwise(
+                empty_pflags
+            ),
+        ),
+        (
+            "total_pages",
+            F.when(
+                has_raster,
+                F.coalesce(
+                    F.array_max(F.transform(F.col("srt"), lambda x: x["page"])) + 1,
+                    F.lit(0),
+                ),
+            ).otherwise(F.lit(0)),
+        ),
+        (
+            "rasters",
+            F.when(has_raster, _rasters_col(F.col("srt"), F.col("pflags"))).otherwise(
+                empty_rasters
+            ),
+        ),
+        (
+            "captions",
+            _captions_col(F.col("media_idx"), F.col("rasters"), F.col("total_pages")),
+        ),
+        ("figs", _figs_col(F.col("media_idx"), F.col("rasters"), F.col("captions"))),
+        # page→(start,len) slice maps, materialized ONCE per row (see
+        # _nonempty_pages_col docstring for why these must be columns)
+        ("tmap", _page_slices(F.col("texts"))),
+        ("fmap", _page_slices(F.col("figs"))),
+        (
+            "nonempty",
+            _nonempty_pages_col(
+                F.col("texts"), F.col("figs"), F.col("captions"),
+                F.col("tmap"), F.col("fmap"),
+            ),
+        ),
+        ("md", _markdown_col(F.col("nonempty"))),
+        (
+            "outs",
+            _out_spans_col(
+                F.col("nonempty"), F.col("texts"), F.col("figs"), F.col("captions"),
+                F.col("tmap"), F.col("fmap"),
+            ),
+        ),
+    )
+    raw_all = F.array_join(
+        F.transform(
+            F.filter(F.col("srt"), lambda x: x["text"].isNotNull()),
+            lambda x: x["text"],
+        ),
+        "\n\n",
+    )
+    out = (
+        F.col("doc_id"),
+        F.when(F.col("md") == "", raw_all).otherwise(F.col("md")).alias("markdown"),
+        F.when(F.size("nonempty") > 0, F.element_at("nonempty", -1)["page"] + 1)
+        .otherwise(F.lit(0))
+        .cast("int")
+        .alias("n_pages"),
+        F.when(F.col("md") == "", F.array().cast(_OUT_SPANS_T))
+        .otherwise(F.col("outs"))
+        .alias("spans"),
+    )
+    return staged, out
+
 
 # ---------------------------------------------------------------------------
 # the pipeline
@@ -861,7 +1018,15 @@ def extract(
     would need the full spans array — not a cheap probe), and for
     non-scan-like plans (mapInPandas parses, joins, unions — probing
     would execute the upstream computation twice; `_is_scan_like`).
-    ``probe_routing=False`` disables it outright.
+    ``probe_routing=False`` disables it outright. The probe runs with
+    the job description ``docproc extract: routing probe``; the caller's
+    description is restored afterwards.
+
+    The Column program is built on the first call per SparkContext and
+    (drop_kinds, drop_exact_duplicates), then reused (_program): a
+    repeated call pays its DataFrame calls and analysis, not the ~8.8k
+    py4j round trips of building the expression tree again. A new
+    SparkContext (stop() then get_spark()) rebuilds it.
     """
     if mega_doc_threshold is not None:
         from docproc_spark.pipeline_salted import extract_salted
@@ -907,7 +1072,13 @@ def extract(
             probe = base
             if "raw_html" in docs.columns:
                 probe = base + html_est
-            mx = docs.agg(F.max(probe).alias("mx")).first()["mx"]
+            sc = docs.sparkSession.sparkContext
+            caller_desc = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription("docproc extract: routing probe")
+            try:
+                mx = docs.agg(F.max(probe).alias("mx")).first()["mx"]
+            finally:
+                sc.setJobDescription(caller_desc)
             if mx is None or mx <= mega_doc_threshold:
                 mega_doc_threshold = None
         if mega_doc_threshold is None:
@@ -937,104 +1108,11 @@ def extract(
 
     # staged withColumns keep each analyzer pass small; the optimizer
     # collapses them back into one projection over the single shuffle.
-    staged = (
-        collected.withColumn("srt", _srt_col(F.col("spans"), drop_kinds))
-        .withColumn("texts", _texts_col(F.col("srt"), drop_exact_duplicates))
-        .withColumn("media_all", F.filter(F.col("srt"), lambda x: x["is_media"]))
-        .withColumn("mmap", _page_slices(F.col("media_all")))
-        .withColumn("media_idx", _media_idx_col(F.col("media_all"), F.col("mmap")))
-        # raster machinery only for docs that HAVE raster spans (rare):
-        # one O(n) exists probe gates two O(n)-but-interpreter-heavy array
-        # passes (page slice map + per-page flags) — measured ~15% of
-        # extract wall when computed unconditionally
-        .withColumn(
-            "has_raster", F.exists(F.col("srt"), lambda x: x["is_raster"])
-        )
-        .withColumn(
-            "smap",
-            F.when(F.col("has_raster"), _page_slices(F.col("srt"))).otherwise(
-                F.map_from_entries(
-                    F.array().cast("array<struct<page:int,v:struct<start:int,len:int>>>")
-                )
-            ),
-        )
-        .withColumn(
-            "pflags",
-            F.when(
-                F.col("has_raster"), _page_flags(F.col("srt"), F.col("smap"))
-            ).otherwise(
-                F.map_from_entries(
-                    F.array().cast(
-                        "array<struct<page:int,v:struct<raw:boolean,med:boolean>>>"
-                    )
-                )
-            ),
-        )
-        .withColumn(
-            "total_pages",
-            F.when(
-                F.col("has_raster"),
-                F.coalesce(
-                    F.array_max(F.transform(F.col("srt"), lambda x: x["page"])) + 1,
-                    F.lit(0),
-                ),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "rasters",
-            F.when(
-                F.col("has_raster"), _rasters_col(F.col("srt"), F.col("pflags"))
-            ).otherwise(
-                F.array().cast(
-                    "array<struct<page:int,offset:int,pos:int,kind:string,"
-                    "text:string,sanitized:string,hash:string,media_ref:string,"
-                    "is_textual:boolean,is_media:boolean,is_raster:boolean,"
-                    "survives:boolean,raw_nonblank:boolean>>"
-                )
-            ),
-        )
-        .withColumn(
-            "captions",
-            _captions_col(F.col("media_idx"), F.col("rasters"), F.col("total_pages")),
-        )
-        .withColumn(
-            "figs", _figs_col(F.col("media_idx"), F.col("rasters"), F.col("captions"))
-        )
-        # page→(start,len) slice maps, materialized ONCE per row (see
-        # _nonempty_pages_col docstring for why these must be columns)
-        .withColumn("tmap", _page_slices(F.col("texts")))
-        .withColumn("fmap", _page_slices(F.col("figs")))
-        .withColumn(
-            "nonempty",
-            _nonempty_pages_col(
-                F.col("texts"), F.col("figs"), F.col("captions"),
-                F.col("tmap"), F.col("fmap"),
-            ),
-        )
-        .withColumn("md", _markdown_col(F.col("nonempty")))
-        .withColumn(
-            "outs",
-            _out_spans_col(
-                F.col("nonempty"), F.col("texts"), F.col("figs"), F.col("captions"),
-                F.col("tmap"), F.col("fmap"),
-            ),
-        )
+    staged_cols, out_cols = _program(
+        ("extract", frozenset(drop_kinds), bool(drop_exact_duplicates)),
+        lambda: _array_program(drop_kinds, drop_exact_duplicates),
     )
-    raw_all = F.array_join(
-        F.transform(
-            F.filter(F.col("srt"), lambda x: x["text"].isNotNull()),
-            lambda x: x["text"],
-        ),
-        "\n\n",
-    )
-    return staged.select(
-        "doc_id",
-        F.when(F.col("md") == "", raw_all).otherwise(F.col("md")).alias("markdown"),
-        F.when(F.size("nonempty") > 0, F.element_at("nonempty", -1)["page"] + 1)
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("n_pages"),
-        F.when(F.col("md") == "", F.array().cast(_OUT_SPANS_T))
-        .otherwise(F.col("outs"))
-        .alias("spans"),
-    )
+    staged = collected
+    for name, col in staged_cols:
+        staged = staged.withColumn(name, col)
+    return staged.select(*out_cols)

@@ -29,7 +29,10 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
+
+from docproc_spark.partition import fast_path_disabled
 
 _ACCUM_FILTER_INSTALLED = False
 
@@ -44,7 +47,9 @@ def _install_benign_accumulator_filter(spark: SparkSession) -> None:
     (r5 verdict item #2). Scoped by MESSAGE, not by level: a log4j
     RegexFilter matching only this record class — genuine scheduler
     errors still log. Installed once per JVM (the gateway outlives
-    SparkSession.stop())."""
+    SparkSession.stop()). A failing log4j call (its internals shifted)
+    leaves the records unfiltered and is logged once; session creation
+    goes on."""
     global _ACCUM_FILTER_INSTALLED
     if _ACCUM_FILTER_INSTALLED:
         return
@@ -61,8 +66,8 @@ def _install_benign_accumulator_filter(spark: SparkSession) -> None:
         lc.addFilter(flt)
         ctx.updateLoggers()
         _ACCUM_FILTER_INSTALLED = True
-    except Exception:  # pragma: no cover — log4j internals shifted
-        pass  # cosmetic: never fail session creation over log noise
+    except Py4JError as exc:
+        fast_path_disabled("benign accumulator log filter", exc)
 
 
 def get_spark(

@@ -18,6 +18,7 @@ from pathlib import Path
 import pandas as pd
 import pyspark
 import pyspark.sql.functions as F
+import pytest
 from pyspark import cloudpickle
 
 import docproc_spark
@@ -130,3 +131,39 @@ def test_package_shipped_only_with_py_files(tmp_path):
     assert got["loaded"]["value"] == 42
     assert got["loaded"]["loader"] == "zipimporter"
     assert got["loaded"]["archive"] in got["late"]["reread"], got
+
+
+class _NoLog4jContext:
+    """A SparkContext stand-in whose JVM access raises ``exc``."""
+
+    def __init__(self, exc):
+        self.exc = exc
+
+    @property
+    def _jvm(self):
+        raise self.exc
+
+
+class _Session:
+    def __init__(self, exc):
+        self.sparkContext = _NoLog4jContext(exc)
+
+
+def test_accumulator_filter_failure_is_logged_once(monkeypatch, caplog):
+    import logging
+
+    from py4j.protocol import Py4JError
+
+    from docproc_spark import partition, session
+
+    monkeypatch.setattr(session, "_ACCUM_FILTER_INSTALLED", False)
+    monkeypatch.setattr(partition, "_disabled_logged", set())
+    with caplog.at_level(logging.WARNING, logger=partition.__name__):
+        for _ in range(2):
+            session._install_benign_accumulator_filter(_Session(Py4JError("moved")))
+    logged = [r.getMessage() for r in caplog.records]
+    assert logged == ["benign accumulator log filter disabled: Py4JError: moved"]
+    assert not session._ACCUM_FILTER_INSTALLED
+    # anything but a py4j failure is a bug and propagates
+    with pytest.raises(RuntimeError):
+        session._install_benign_accumulator_filter(_Session(RuntimeError("bug")))
