@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from docproc_spark.operators.dedupe import fingerprint_col, tokens_col
+from docproc_spark.pipeline import context_pandas_udf
 
 # Marker stopwords per language — deliberately tiny and fixed; the SQL
 # oracle reproduces the same counts.
@@ -324,7 +325,7 @@ _NGRAM_PROFILES = {
 }
 
 
-@F.pandas_udf(T.StringType())
+@context_pandas_udf(T.StringType())
 def lang_id_ngram_udf(text: pd.Series) -> pd.Series:
     """Character-trigram profile vote; vectorized via pandas str.count."""
     s = " " + text.fillna("").str.lower() + " "
@@ -1414,7 +1415,7 @@ def _mojibake_fix_py(x: str) -> str:
         return x
 
 
-@F.pandas_udf(T.StringType())
+@context_pandas_udf(T.StringType())
 def _mojibake_fix_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda x: None if x is None else _mojibake_fix_py(x))
 

@@ -264,17 +264,17 @@ def minhash_neardup_pairs(
     (a, b, shared, jaccard) with jaccard ≥ min_jaccard.
 
     The ``max_bucket`` skew cap is NOT silent: with log_dropped=True the
-    dropped-bucket accounting runs (one extra agg job over the CACHED
+    dropped-bucket accounting runs (one extra agg job over the MATERIALIZED
     signatures — computed once here and shared with candidate generation,
     never a second tokenize+hash pass over the corpus) and any loss is
     logged as a warning.
     """
-    # always cached: candidate generation references the band table on both
-    # sides of its bucket join (no fan-out CSE → a re-tokenize per side
-    # otherwise). Signatures are k hex strings per doc — tiny; the session
-    # releases the cache at the end of a batch job, long-lived services
-    # should clearCache() periodically (same contract as extract_salted).
-    sig = minhash_signature(docs, text_col, id_col, k).cache()
+    # always materialized: candidate generation references the band table on
+    # both sides of its bucket join (no fan-out CSE → a re-tokenize per side
+    # otherwise). Lazy localCheckpoint (not .cache()), as simhash_neardup_pairs:
+    # the ContextCleaner reclaims the blocks once the result frame is dropped,
+    # so repeated calls do not accumulate signature frames in storage
+    sig = minhash_signature(docs, text_col, id_col, k).localCheckpoint(eager=False)
     if log_dropped:
         import logging
 

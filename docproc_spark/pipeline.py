@@ -71,12 +71,41 @@ _OUT_SPANS_T = (
 # ---------------------------------------------------------------------------
 # Python kernels as pandas UDFs
 # ---------------------------------------------------------------------------
-@F.pandas_udf(T.StringType())
+class ContextPandasUDF:
+    """A module-level pandas UDF whose JVM function belongs to the active
+    SparkContext: ``F.pandas_udf(func, return_type)`` made once per context
+    (_program) and called like it.
+
+    PySpark caches a UDF's JVM function for the life of the process, and
+    that function carries the Python accumulator of the SparkContext it was
+    first called under. A plain module-level ``@F.pandas_udf`` therefore
+    keeps a stopped context's accumulator after ``stop()`` + ``get_spark()``
+    in one JVM, and every task's accumulator update targets the closed
+    server of the stopped context."""
+
+    def __init__(self, func: Callable, return_type: T.DataType):
+        self.func, self.return_type = func, return_type
+        self._key = ("pandas_udf", func.__module__, func.__qualname__)
+
+    def udf(self):
+        """The pandas UDF of the active SparkContext."""
+        return _program(self._key, lambda: F.pandas_udf(self.func, self.return_type))
+
+    def __call__(self, *cols) -> Column:
+        return self.udf()(*cols)
+
+
+def context_pandas_udf(return_type: T.DataType) -> Callable[[Callable], ContextPandasUDF]:
+    """Decorator form of ContextPandasUDF, used like ``@F.pandas_udf``."""
+    return lambda func: ContextPandasUDF(func, return_type)
+
+
+@context_pandas_udf(T.StringType())
 def sanitize_udf(s: pd.Series) -> pd.Series:
     return sanitize_series(s)
 
 
-@F.pandas_udf(T.ArrayType(SPAN_STRUCT))
+@context_pandas_udf(T.ArrayType(SPAN_STRUCT))
 def html_spans_udf(raw_html: pd.Series, url: pd.Series) -> pd.Series:
     from docproc_spark.kernels.html import html_main_blocks
 
@@ -231,11 +260,12 @@ def boilerplate_kind_col(sanitized: Column) -> Column:
 # ---------------------------------------------------------------------------
 _PROGRAM: dict = {}
 _PROGRAM_CONTEXT: SparkContext | None = None
-_PROGRAM_LOCK = threading.Lock()
+_PROGRAM_LOCK = threading.RLock()
 
 
 def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
-    """``build()``'s Columns, built once per ``key`` and active SparkContext.
+    """``build()``'s Columns or UDFs, built once per ``key`` and active
+    SparkContext.
 
     Building the extract plan's Columns costs ~8.8k py4j round trips
     (~16 per Column-function call: name lookups and PySpark's call-site
@@ -246,8 +276,8 @@ def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
     objects made for a stopped one. Under Spark Connect there is no
     active context (None) and Columns are plain Python trees, so the
     memo holds for the process. Concurrent callers build each entry
-    once: the lock is held during ``build``, which therefore must not
-    call _program."""
+    once: the lock is held during ``build``. It is re-entrant, because a
+    build calls _program itself when its Columns take a ContextPandasUDF."""
     global _PROGRAM_CONTEXT
     with _PROGRAM_LOCK:
         sc = SparkContext._active_spark_context

@@ -23,6 +23,24 @@ Not frozen: archives under the SparkFiles directory (``addPyFile``,
 task, so late-shipped code imports as before. Workers keep the stock
 ``pyspark.daemon``, so nothing about where the package is installed or
 how it is shipped changes.
+
+Generated code is kept across calls: ``spark.sql.codegen.cache.maxEntries``
+is 1000, not Spark's 100. The cache maps each generated Java source
+(whole-stage codegen stages, projections, orderings) to its compiled
+Janino class, in LRU order. A file-ingest session (perfbench
+``files_resume``: ``load_files`` → ``extract_table`` → dedupe → export,
+plus the lineage, quarantine and salted calls of its traced run)
+generates ~400 distinct sources, ~200 of them in every call. With 100
+entries each call evicted the classes the next call needed and compiled
+206-209 again (~3-4 s of Janino time, ~460 new classes, and JIT work on
+each); with 1000, calls 1-4 after the warm-up compiled 36/6/4/0 (AQE
+numbers codegen stages in the order it plans them, so a few sources
+differ from call to call). Measured at ``local[4]`` on a 4-CPU host. The
+larger cache costs no measurable metaspace (177.9 → 177.5 MB at the end
+of the session): the evicted classes had been loaded all the same. The
+value is static, and Spark reads it when the JVM first generates code,
+so a JVM whose first session was not built by ``get_spark`` keeps
+Spark's 100 for its lifetime; ``extra_conf`` can still override it.
 """
 
 from __future__ import annotations
@@ -106,6 +124,11 @@ def get_spark(
         # default analyzer/optimizer iteration caps are sized for flat plans
         .config("spark.sql.analyzer.maxIterations", "500")
         .config("spark.sql.optimizer.maxIterations", "500")
+        # a file-ingest session generates 402-407 distinct codegen sources
+        # (set-up + calls + lineage/quarantine/salted); the default 100-entry
+        # cache evicted them, so each call recompiled ~200 classes; 1000
+        # leaves ~2.5x headroom
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
         # below every explode; predicate pushdown then re-inlines the
         # generator's defining expression into that filter — for the

@@ -397,6 +397,41 @@ def test_minhash_neardup_composition_finds_planted_dups(spark):
     assert dropped and sum(r["n_docs_in_dropped"] for r in dropped) > 0
 
 
+def test_minhash_neardup_pairs_releases_its_signatures(spark):
+    """The signatures minhash_neardup_pairs materializes for its bucket join
+    are reclaimed once its result frame is dropped: no RDD it persisted
+    outlives the result after a JVM GC."""
+    import gc
+    import time
+
+    from docproc_spark.operators.dedupe import minhash_neardup_pairs
+
+    sc = spark.sparkContext
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", f"alpha{i % 3} beta gamma delta epsilon zeta{i}") for i in range(8)],
+        "doc_id string, text string",
+    )
+    before = persisted()
+    pairs = minhash_neardup_pairs(docs, min_jaccard=0.3)
+    assert pairs.collect()
+    made = persisted() - before
+    assert made, "the signatures are materialized while the result is in use"
+
+    del pairs
+    left = made
+    deadline = time.monotonic() + 60
+    while left and time.monotonic() < deadline:
+        gc.collect()  # py4j then releases the JVM objects of the dead frame
+        sc._jvm.System.gc()  # the ContextCleaner unpersists unreachable RDDs
+        time.sleep(0.5)
+        left = made & persisted()
+    assert not left, f"RDDs still persisted: {sorted(left)}"
+
+
 def test_asof_join_semantics(spark):
     """As-of: latest right ts <= left ts per key; ties count; no-match left
     rows survive with a null payload; one window, no range join."""

@@ -1,7 +1,8 @@
 """extract() builds its Column program once per SparkContext and option set
 (pipeline._program): a repeated call makes few py4j round trips, calls with
 different options each get their own program, a new SparkContext in the
-same JVM rebuilds it, and the routing probe names its job."""
+same JVM rebuilds it and the package's pandas UDFs, and the routing probe
+names its job."""
 
 from __future__ import annotations
 
@@ -142,22 +143,31 @@ def test_routing_probe_names_its_job(spark, tmp_path, monkeypatch, caller_desc):
 
 
 # A new SparkContext in the same JVM: the second extract() must not plan
-# with Columns built under the stopped context. Run in its own process so
-# the shared `spark` fixture is not stopped.
+# with Columns or pandas UDFs built under the stopped context. Run in its
+# own process so the shared `spark` fixture is not stopped.
 _JOB = r"""
 import json, sys
+from pyspark.sql import functions as F
 from docproc_spark import corpus, pipeline
+from docproc_spark.functions import text
 from docproc_spark.session import get_spark
 
+UDFS = {"sanitize_udf": pipeline.sanitize_udf, "html_spans_udf": pipeline.html_spans_udf,
+        "lang_id_ngram_udf": text.lang_id_ngram_udf,
+        "_mojibake_fix_udf": text._mojibake_fix_udf}
 n, seed = int(sys.argv[1]), int(sys.argv[2])
 runs = []
 for _ in range(2):
     spark = get_spark(master="local[2]", shuffle_partitions=2)
     docs = corpus.corpus_df(spark, n, seed=seed, mega_spans=200, partitions=2)
     rows = pipeline.extract(docs, mega_doc_threshold=None).collect()
+    text.lang_id_ngram_udf(F.col("t")), text._mojibake_fix_udf(F.col("t"))
+    own = spark.sparkContext._javaAccumulator
     runs.append({
         "jvm": spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid(),
         "memo_is_current": pipeline._PROGRAM_CONTEXT is spark.sparkContext,
+        "own_accumulator": {k: u.udf()._unwrapped._judf.func().accumulator().equals(own)
+                            for k, u in UDFS.items()},
         "rows": {r["doc_id"]: [r["markdown"], r["n_pages"],
                                [[s["kind"], s["text"], s["media_ref"], s["offset"]]
                                 for s in r["spans"]]] for r in rows},
@@ -194,5 +204,9 @@ def test_new_context_in_same_jvm_rebuilds_the_program(tmp_path):
     first, second = json.loads(lines[-1][len("RESULT "):])
     assert first["jvm"] == second["jvm"]
     assert first["memo_is_current"] and second["memo_is_current"]
+    # the package's pandas UDFs report to the live context's accumulator,
+    # not to the one PySpark cached them with under the stopped context
+    assert all(first["own_accumulator"].values()), first["own_accumulator"]
+    assert all(second["own_accumulator"].values()), second["own_accumulator"]
     assert first["rows"] == want
     assert second["rows"] == want
