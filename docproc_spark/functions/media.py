@@ -47,11 +47,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def media_ref_col(blob: F.Column) -> F.Column:
-    """sha256 hex identity of media bytes (the reference's dedupe key)."""
-    return F.sha2(blob, 256)
-
-
 def _fake_decode_from_hex(ref: str) -> dict:
     """_fake_decode keyed on an ALREADY-computed media_ref: the hex ref IS
     the sha256 digest, so kernels that computed the ref can derive the

@@ -127,39 +127,6 @@ def rolling_hashes_from_tokens(toks: Column, window: int = 16) -> Column:
     )
 
 
-def rolling_hash_col(text: Column, window: int = 16) -> Column:
-    """Winnowing-style document fingerprint: md5 of each ``window``-token
-    shingle, keep the lexicographic minimum — one representative hash that
-    is robust to small edits away from the minimum position.
-
-    Mega-doc note: this convenience form inlines the tokenization inside
-    the shingle lambda (acceptable for fingerprinting typical documents);
-    for large texts stage tokens as a column and use
-    ``rolling_hashes_from_tokens`` — O(n) instead of O(n²)."""
-    toks = tokens_col(text)
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0))),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))),
-    )
-    return F.array_min(shingles)
-
-
-def text_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-pass text-analysis projection over a corpus."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count_col(t).alias("n_tokens"),
-        F.length(t).alias("n_chars"),
-        avg_token_len_col(t).alias("avg_token_len"),
-        stopword_ratio_col(t).alias("stopword_ratio"),
-        punct_ratio_col(t).alias("punct_ratio"),
-        quality_score_col(t).alias("quality"),
-        lang_id_col(t).alias("lang_pred"),
-        doc_fingerprint_col(t).alias("fingerprint"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Gopher/MassiveText-style repetition + quality rules (Rae et al. 2021,
 # "Scaling Language Models", table A1 — public knowledge). Exactly

@@ -17,6 +17,11 @@ reference extractor's deterministic text path:
   - raw-text fallback            (vision_llm.py:540-541 → pdf_loader.py:56-61: if nothing
                                   assembled, join raw span texts with "\n\n")
 
+extract_document is the whole per-document extraction the engine runs (the
+Spark pipeline maps it over Arrow batches of whole documents) and the oracle
+calls: HTML-derived spans appended to the input spans, assemble_document,
+and the page count.
+
 Input spans are dicts/tuples with fields (kind, text, media_ref, page, offset).
 Kinds: textual = {text, table, equation, header, footer, handwriting,
 unclassified}; media = {image, figure}; raster = {raster} (an empty page that
@@ -25,9 +30,10 @@ exists only as a page bitmap).
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Optional, Sequence
+from typing import Mapping, Optional, Sequence
 
 from docproc_spark.kernels.captions import caption_stub
+from docproc_spark.kernels.html import html_main_blocks
 from docproc_spark.kernels.sanitize import (
     DROP_KINDS_DEFAULT,
     boilerplate_kind,
@@ -188,3 +194,39 @@ def assemble_document(
         markdown = PAGE_JOIN.join(raws)
         out_spans = []
     return markdown, out_spans
+
+
+def html_spans(raw_html, url=None) -> list[dict]:
+    """HTML doc → input spans on page 0, one per main-content block.
+
+    ``url`` anchors relative image srcs; anything but a non-empty str
+    (None, bytes, NaN) means no base, never a TypeError that the HTML
+    kernel's blanket except would turn into zero spans."""
+    if not raw_html:
+        return []
+    base = url if isinstance(url, str) and url else None
+    return [
+        {"kind": kind, "text": text, "media_ref": ref, "page": 0, "offset": i}
+        for i, (kind, text, ref) in enumerate(html_main_blocks(raw_html, base_url=base))
+    ]
+
+
+def extract_document(
+    spans: Optional[Sequence],
+    raw_html: Optional[str] = None,
+    url: Optional[str] = None,
+    *,
+    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
+    drop_exact_duplicates: bool = True,
+) -> tuple[str, int, list[dict]]:
+    """Extract one document → (markdown, n_pages, output spans).
+
+    The HTML-derived spans follow the input spans, so on a (page, offset)
+    tie the stable sort in assemble_document keeps input spans first.
+    n_pages is the last assembled page + 1 (0 when nothing assembled)."""
+    merged = [*(spans or ()), *html_spans(raw_html, url)]
+    markdown, out_spans = assemble_document(
+        merged, drop_kinds=drop_kinds, drop_exact_duplicates=drop_exact_duplicates
+    )
+    n_pages = max(s["page"] for s in out_spans) + 1 if out_spans else 0
+    return markdown, n_pages, out_spans

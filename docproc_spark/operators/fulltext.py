@@ -21,13 +21,12 @@ exactly; file:line cites from /root/reference):
 
 In the span model a table span's text holds its rows joined "\\n" (each row
 already " | "-joined), page == slide == sheet. All implementations are
-native higher-order array functions over one groupBy(doc_id) — the same
-single-shuffle shape as the flagship pipeline.
+native higher-order array functions over one groupBy(doc_id): a
+single-shuffle plan.
 
-Scale note: per-page work uses the same page→(start,len) boundary-scan
-slice maps as the flagship (pipeline._page_slices) — O(n) per document
-instead of re-filtering the full span array once per page (O(pages·n),
-which is quadratic on mega-documents). The slice maps are materialized as
+Scale note: per-page work uses page→(start,len) boundary-scan slice maps
+(_page_slices) — O(n) per document instead of re-filtering the full span
+array once per page (O(pages·n), which is quadratic on mega-documents). The slice maps are materialized as
 withColumn columns because a higher-order function re-evaluates embedded
 subtrees once PER ELEMENT.
 """
@@ -38,10 +37,56 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from docproc_spark.kernels.assembly import TEXTUAL_KINDS
-from docproc_spark.pipeline import _page_slices, _slice_for, pystrip_col
+from docproc_spark.pipeline import pystrip_col
 
 _SS_T = "array<struct<page:int,offset:int,pos:int,kind:string,text:string>>"
 _ITEMS_T = "array<struct<page:int,item:string>>"
+
+
+def _page_slices(arr: Column) -> Column:
+    """map<page, struct(start, len)> over an array SORTED by (page, …).
+
+    Boundary-scan (O(n)) instead of per-page filters (O(pages × n)) — the
+    difference between ~linear and quadratic work on mega-documents.
+    Slice positions are 1-based for F.slice.
+    """
+    n = F.size(arr)
+    starts = F.filter(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
+            lambda i: F.when(
+                (i <= n)
+                & (
+                    (i == 1)
+                    | (F.element_at(arr, i - 1)["page"] != F.element_at(arr, i)["page"])
+                ),
+                F.struct(F.element_at(arr, i)["page"].alias("page"), i.alias("start")),
+            ),
+        ),
+        lambda x: x.isNotNull(),
+    )
+    shifted = F.concat(F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
+                       F.array(F.lit(None)))
+    entries = F.zip_with(
+        starts,
+        shifted,
+        lambda s, nxt: F.struct(
+            s["page"],
+            F.struct(
+                s["start"].alias("start"),
+                (F.coalesce(nxt["start"], n + 1) - s["start"]).alias("len"),
+            ),
+        ),
+    )
+    # an empty input makes zip_with pad a null entry → drop null keys
+    return F.map_from_entries(F.filter(entries, lambda e: e["page"].isNotNull()))
+
+
+def _slice_for(arr: Column, slices: Column, p: Column, empty_type: str) -> Column:
+    e = F.element_at(slices, p)
+    return F.when(e.isNotNull(), F.slice(arr, e["start"], e["len"])).otherwise(
+        F.array().cast(empty_type)
+    )
 
 
 def _collected(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
@@ -52,8 +97,7 @@ def _collected(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     # (page, offset) in the sort struct: array_sort over structs compares
     # every field in order, so without it two spans colliding on
     # (page, offset) would be ordered by payload content instead of
-    # document order (the tie-break the flagship pipeline resolves the
-    # same way).
+    # document order (the oracle's stable-sort tie-break).
     rows = docs.select(
         "doc_id",
         *carry,

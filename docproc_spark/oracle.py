@@ -12,36 +12,20 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from docproc_spark.kernels.assembly import assemble_document
-from docproc_spark.kernels.html import html_main_blocks
+from docproc_spark.kernels.assembly import extract_document, html_spans
 
-
-def html_to_spans(raw_html: str, base_url: str | None = None) -> list[dict]:
-    """HTML doc → input text spans on page 0 (shared kernel, same as Spark)."""
-    return [
-        {"kind": kind, "text": text, "media_ref": ref, "page": 0, "offset": i}
-        for i, (kind, text, ref) in enumerate(
-            html_main_blocks(raw_html, base_url=base_url)
-        )
-    ]
+# HTML doc → input text spans on page 0 (the kernel the engine calls too)
+html_to_spans = html_spans
 
 
 def extract_doc(doc: dict, *, drop_exact_duplicates: bool = True) -> dict:
     """Oracle extraction for one document row (dict with doc_id/raw_html/spans)."""
-    spans = doc.get("spans") or []
-    if doc.get("raw_html"):
-        # same guard as the Spark UDF (pipeline.html_spans_udf): a
-        # non-str url (bytes, NaN) must mean "no base", not a TypeError
-        # that the kernel's blanket except would turn into zero spans
-        base = doc.get("url")
-        spans = list(spans) + html_to_spans(
-            doc["raw_html"],
-            base_url=base if isinstance(base, str) and base else None,
-        )
-    markdown, out_spans = assemble_document(
-        spans, drop_exact_duplicates=drop_exact_duplicates
+    markdown, n_pages, out_spans = extract_document(
+        doc.get("spans"),
+        doc.get("raw_html"),
+        doc.get("url"),
+        drop_exact_duplicates=drop_exact_duplicates,
     )
-    n_pages = (max((s["page"] for s in out_spans), default=-1) + 1) if out_spans else 0
     return {
         "doc_id": doc["doc_id"],
         "markdown": markdown,

@@ -1,59 +1,50 @@
 """The Spark extraction pipeline (flagship).
 
-DataFrame-first reimplementation of the reference's deterministic extraction
-path (see docproc_spark.oracle for the single-process truth). Everything
-stays JVM-side in whole-stage codegen except two kernels that genuinely need
-Python: unicode-NFC sanitize (a pandas UDF applying the oracle's own
-sanitize_text to each element of an Arrow batch) and the HTML main-content
-parser (pandas UDF, one call per HTML doc). No per-row Python UDFs anywhere.
+DataFrame-first engine for the reference's deterministic extraction path
+(docproc_spark.oracle is the single-process truth). The input already
+holds one row per document with its span array, so extract() is one
+narrow Arrow map over whole documents:
 
-Scale design — a true SINGLE-PASS plan (what a 1000-executor cluster runs):
+    scan → select(doc_id, spans[, raw_html[, url]])
+         → mapInArrow: kernels.assembly.extract_document on every row
+           (HTML-derived spans, sanitize, boilerplate drop, first-wins
+           dedupe, media captions, raster fallback, page assembly and
+           the raw-text fallback), one output row per input row
 
-    scan → explode → project(sanitize UDF, boilerplate, hash — all narrow)
-         → ONE shuffle: groupBy(doc_id).collect_list(span struct)
-         → one projection of higher-order array functions doing dedupe,
-           media captioning, raster fallback, page assembly, markdown,
-           and the raw-text fallback — all inside the row
-         ∪ the zero-span docs (a column-pruned scan filter, no join)
+No exchange, no join, no union, one scan. Python is entered once per
+Arrow batch of whole documents, not once per span or per expression, and
+it runs the very function the oracle calls.
 
-  Why not windows + joins: a DataFrame fan-out (N consumers of one
-  intermediate) gets NO common-subexpression reuse — Catalyst pushes
-  distinct projections into each branch's copy of the subtree, so the scan
-  and the pandas UDF execute once PER BRANCH (measured: 9 scans, 20 UDF
-  evals, 14 exchanges for the window/join formulation). The single-pass
-  form has exactly one exchange, one scan, one UDF eval — shuffle volume is
-  the raw+sanitized text bytes, once (the dedupe hash, boilerplate class
-  and flags are pure functions of those and are recomputed post-shuffle;
-  raw text must ride along because the in-row raw-text fallback needs it).
-
-  Skew: per-doc work below the shuffle is O(n log n) in spans-per-doc
-  (array_sort-based dedupe; the only quadratic piece is per-page media
-  indexing, bounded by media-per-page). Map-side partial collect keeps the
-  shuffle write balanced; a 10^5-span mega-doc is a single ~10 MB row,
-  fine; beyond that, route through operators.salting.
-
-  Construction: the plan's Columns (derived spans, explode, enrichment,
-  the staged array program) are built once per SparkContext and option
-  set (drop_kinds, drop_exact_duplicates) and reused by every later call
-  (_program). Building them takes ~8.8k py4j round trips, seconds of
-  driver time per call; reusing them leaves 88 (local[4], 4-CPU host).
-  A call still makes its own DataFrame calls, so every plan is analyzed
-  afresh and its shape does not depend on the memo.
+  Skew: a document is one row and one Python call. A document with more
+  than ``mega_doc_threshold`` spans would be a straggler task, so extract()
+  routes it to pipeline_salted, a relational two-phase plan that spreads
+  one document's spans across tasks. The rest of this module serves that
+  path and the operators: the derived-span, explode and enrichment Columns
+  (built once per SparkContext, _program), the JVM-side sanitize and
+  boilerplate classifier and the Python-whitespace helpers.
 """
 
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from docproc_spark.kernels.assembly import MEDIA_KINDS, RASTER_KIND, TEXTUAL_KINDS
+from docproc_spark.kernels.assembly import (
+    MEDIA_KINDS,
+    RASTER_KIND,
+    TEXTUAL_KINDS,
+    extract_document,
+    html_spans,
+)
 from docproc_spark.kernels.sanitize import (
     BOILERPLATE_PATTERNS,
     DROP_KINDS_DEFAULT,
@@ -61,11 +52,9 @@ from docproc_spark.kernels.sanitize import (
     sanitize_series,
 )
 from docproc_spark.partition import INTROSPECTION_ERRORS, fast_path_disabled
-from docproc_spark.schema import SPAN_STRUCT
+from docproc_spark.schema import OUT_SPAN_STRUCT, SPAN_STRUCT
 
-_OUT_SPANS_T = (
-    "array<struct<kind:string,text:string,media_ref:string,page:int,offset:int>>"
-)
+_OUT_SPANS_T = T.ArrayType(OUT_SPAN_STRUCT).simpleString()
 
 
 # ---------------------------------------------------------------------------
@@ -107,20 +96,7 @@ def sanitize_udf(s: pd.Series) -> pd.Series:
 
 @context_pandas_udf(T.ArrayType(SPAN_STRUCT))
 def html_spans_udf(raw_html: pd.Series, url: pd.Series) -> pd.Series:
-    from docproc_spark.kernels.html import html_main_blocks
-
-    def blocks(h, u):
-        if not h:
-            return []
-        base = u if isinstance(u, str) and u else None
-        return [
-            {"kind": k, "text": t, "media_ref": ref, "page": 0, "offset": i}
-            for i, (k, t, ref) in enumerate(html_main_blocks(h, base_url=base))
-        ]
-
-    return pd.Series(
-        [blocks(h, u) for h, u in zip(raw_html, url)], dtype=object
-    )
+    return pd.Series([html_spans(h, u) for h, u in zip(raw_html, url)], dtype=object)
 
 
 # ---------------------------------------------------------------------------
@@ -130,7 +106,7 @@ def html_spans_udf(raw_html: pd.Series, url: pd.Series) -> pd.Series:
 # the space-collapse, \n survives, \r is edge-trimmed only). Expressed as
 # a literal char set for F.translate: a linear no-regex pass, measured
 # ~2x cheaper than the regexp_replace char-class it replaces on the bench
-# corpus (the sanitize map stage is the flagship's dominant cost).
+# corpus (the sanitize map stage dominated the span-exploding plan).
 _CTRL_STRIP = "".join(
     chr(c)
     for c in [*range(0x00, 0x09), 0x0B, 0x0C, *range(0x0E, 0x20), 0x7F]
@@ -223,8 +199,9 @@ def boilerplate_kind_col(sanitized: Column) -> Column:
     Gated on ONE combined-alternation probe: rlike(p1|…|pn) ≡ rlike(p1) |
     … | rlike(pn), so `when(probe, <per-pattern chain>)` is semantically
     identical to the bare chain while the common case (a substantive span)
-    pays 2 regex scans instead of 2×n — the bare chain was ~half of
-    extract's post-shuffle wall (measured 4.4 s of a ~9 s sf0.1 run).
+    pays 2 regex scans instead of 2×n — the bare chain was ~half of the
+    post-shuffle wall of an earlier span-exploding extract plan (measured
+    4.4 s of a ~9 s sf0.1 run).
 
     first_line / n_lines use literal string ops (substring_index; a
     replace-based newline count) instead of regexp_extract + regex
@@ -267,10 +244,10 @@ def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
     """``build()``'s Columns or UDFs, built once per ``key`` and active
     SparkContext.
 
-    Building the extract plan's Columns costs ~8.8k py4j round trips
-    (~16 per Column-function call: name lookups and PySpark's call-site
-    bookkeeping), seconds of driver time on every call, while a Column
-    is an immutable, unresolved expression that any DataFrame can take.
+    Building a Column costs ~16 py4j round trips per Column-function call
+    (name lookups and PySpark's call-site bookkeeping), thousands for the
+    salted path's derive/explode/enrich program, while a Column is an
+    immutable, unresolved expression that any DataFrame can take.
     The entries belong to the SparkContext they were built under and are
     all dropped when it changes, so a new context never plans with JVM
     objects made for a stopped one. Under Spark Connect there is no
@@ -291,18 +268,18 @@ def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
 
 
 # ---------------------------------------------------------------------------
-# Stage A: derive + explode + narrow per-span enrichment
+# Per-span Columns of the salted path (pipeline_salted)
 # ---------------------------------------------------------------------------
 def with_derived_spans(docs: DataFrame) -> DataFrame:
     """Merge HTML-derived spans into the span array and append a sentinel.
 
     The sentinel (null-text unclassified span) guarantees every doc_id
-    yields at least one exploded row, so the whole corpus flows through the
-    single-pass plan — no separate "empty doc" branch, which would re-scan
-    the source and re-run the HTML UDF just to find zero-span docs. The
-    sentinel is inert downstream: it never survives sanitize, never counts
-    as raw text, media, or raster, and the raw-text fallback filters its
-    null text.
+    yields at least one exploded row, so the whole input flows through the
+    salted plan to its doc-level merge — no separate "empty doc" branch,
+    which would re-scan the source and re-run the HTML UDF just to find
+    zero-span docs. The sentinel is inert downstream: it never survives
+    sanitize, never counts as raw text, media, or raster, and the raw-text
+    fallback filters its null text.
     """
     # canonical span-only tables (the engine's input contract is just
     # (doc_id, spans)) have no raw_html column — skip the HTML merge; the
@@ -346,8 +323,7 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     defaults to 'text' — the oracle normalizes with `or "text"`
     (assembly.py:75), which catches '' too; a bare coalesce would leave
     an empty-string kind in neither the textual nor the media set and
-    silently diverge on dirty external span tables. Null page/offset → 0.
-    Both physical paths (flagship and salted) share this function."""
+    silently diverge on dirty external span tables. Null page/offset → 0."""
     exploded, flat = _program("explode", _explode_cols)
     return docs.select(*exploded).select(*flat)
 
@@ -370,22 +346,14 @@ def _explode_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
 
 
 def enrich_spans(rows: DataFrame) -> DataFrame:
-    """Narrow (no-shuffle) per-span enrichment — the one definition of the
-    per-span classification both physical plans use (the salted path
-    flattens this struct).
-
-    The map side produces the sanitized text (sanitize_hybrid_col) PLUS the
-    cheap derived fields — boilerplate class (~10 bytes) and the four
-    classification booleans — because here they run inside whole-stage
-    codegen on flat rows, while recomputing them post-shuffle costs an
-    INTERPRETED evaluation per span inside the array program's HOF
-    lambdas (measured: moving bp map-side cut the post-shuffle stage
-    materially at sf0.1; the extra shuffle bytes are ~15/span). The
-    dedupe hash (64 hex bytes/span!) and the drop_kinds-dependent
-    `survives` stay post-shuffle in _srt_col (survives_and_hash): the hash
-    would dominate shuffle bytes, and survives is a two-comparison
-    expression.
-    """
+    """Narrow (no-shuffle) per-span enrichment of exploded rows, inside
+    whole-stage codegen: the sanitized text (sanitize_hybrid_col), the
+    boilerplate class and the classification booleans, as one struct
+    ``s`` that pipeline_salted flattens. Classification follows the
+    oracle: any media-KIND span counts for per-page image enumeration
+    even with a null/empty ref (kernels/assembly.py enumerates every media
+    span), while ref-less RASTERS are inert (assembly skips ''/null refs
+    before captioning)."""
     san, s = _program("enrich", _enrich_cols)
     # _san staged as a real column: it feeds BOTH the struct field and the
     # boilerplate classifier, and a multi-use non-cheap alias (it embeds
@@ -425,562 +393,6 @@ def _enrich_cols() -> tuple[Column, Column]:
 
 
 # ---------------------------------------------------------------------------
-# Stage B: the per-document array program
-# ---------------------------------------------------------------------------
-def _caption(ref: Column, ctx: Column) -> Column:
-    return F.concat(F.lit("Figure "), F.substring(ref, 1, 12), F.lit(": "), ctx)
-
-
-def _first_per_key(sorted_arr: Column, key) -> Column:
-    """Elements of a sorted array that are the first with their key.
-
-    ``sorted_arr`` must already be sorted with equal keys adjacent. Uses the
-    shift-and-zip trick (prepend a null, compare neighbours): O(n)."""
-    shifted = F.concat(F.array(F.lit(None)), sorted_arr)
-    return F.zip_with(
-        sorted_arr,
-        shifted,
-        lambda x, prev: F.when(prev.isNull() | (key(prev) != key(x)), x),
-    )
-
-
-def survives_and_hash(
-    is_textual: Column, bp: Column, sanitized: Column, drop_kinds: frozenset
-) -> tuple[Column, Column]:
-    """(survives, hash) of one enriched span: a textual span survives when
-    its boilerplate class is not dropped and its sanitized text is
-    non-empty; only survivors get the sha256 dedupe hash. Column args, so
-    it serves a struct field inside a HOF lambda (_srt_col) and a flat
-    column (pipeline_salted) alike."""
-    survives = F.coalesce(
-        is_textual & ~bp.isin(*drop_kinds) & (sanitized != ""), F.lit(False)
-    )
-    return survives, F.when(survives, F.sha2(sanitized, 256))
-
-
-def _srt_col(spans: Column, drop_kinds: frozenset) -> Column:
-    """Spans in document order (page, offset), deriving only what the map
-    side could not: ``survives`` depends on the caller's drop_kinds and
-    the dedupe hash is 64 hex bytes/span that should not ride the
-    exchange. Everything else (classification booleans, the boilerplate
-    class) arrives precomputed from enrich_spans, where it ran inside
-    whole-stage codegen on flat rows — recomputing it here would pay an
-    INTERPRETED evaluation per span (HOF lambda bodies get no codegen and
-    no subexpression elimination). Classification semantics notes (the
-    definitions live in enrich_spans): any media-KIND span counts for
-    per-page enumeration even with a null/empty ref — the oracle
-    (kernels/assembly.py:108-114,128) and reference
-    (vision_llm.py:395-399,494-496) enumerate raw_images themselves —
-    while ref-less RASTERS are inert (assembly.py:133-134 skips ''/null
-    refs before captioning). survives/hash come from survives_and_hash,
-    which the salted path shares."""
-
-    def finalize(y):
-        survives, hash_ = survives_and_hash(
-            y["is_textual"], y["bp"], y["sanitized"], drop_kinds
-        )
-        return F.struct(
-            y["page"].alias("page"),
-            y["offset"].alias("offset"),
-            # pos third: array_sort compares fields in order, so ties on
-            # (page, offset) resolve by input position — the oracle's
-            # stable sort — never by kind/text content
-            y["pos"].alias("pos"),
-            y["kind"].alias("kind"),
-            y["text"].alias("text"),
-            y["sanitized"].alias("sanitized"),
-            hash_.alias("hash"),
-            y["media_ref"].alias("media_ref"),
-            y["is_textual"].alias("is_textual"),
-            y["is_media"].alias("is_media"),
-            y["is_raster"].alias("is_raster"),
-            survives.alias("survives"),
-            y["raw_nonblank"].alias("raw_nonblank"),
-        )
-
-    return F.array_sort(F.transform(spans, finalize))
-
-
-def _texts_col(srt: Column, drop_exact_duplicates: bool = True) -> Column:
-    """First-wins exact dedupe over surviving textual spans: sort survivors
-    by (hash, page, offset), keep first per hash, resort to document order.
-    With drop_exact_duplicates=False (config toggle, mirrors the oracle
-    kernel's parameter) every surviving span is kept.
-
-    Fast path: when every survivor hash is distinct (the common document),
-    first-wins dedupe is the identity, so the by-hash sort + adjacent
-    dedupe + resort are skipped behind one O(n) array_distinct probe —
-    CASE branches evaluate lazily, so only the taken branch runs. The two
-    branches produce identical arrays whenever the probe passes (nothing
-    to remove → both are the survivors in document order)."""
-    survivors = F.filter(srt, lambda x: x["survives"])
-    plain = F.array_sort(
-        F.transform(
-            survivors,
-            lambda x: F.struct(
-                x["page"].alias("page"),
-                x["offset"].alias("offset"),
-                x["pos"].alias("pos"),
-                x["kind"].alias("kind"),
-                x["sanitized"].alias("text"),
-            ),
-        )
-    )
-    if not drop_exact_duplicates:
-        return plain
-    hashes = F.transform(survivors, lambda x: x["hash"])
-    no_dups = F.size(F.array_distinct(hashes)) == F.size(hashes)
-    by_hash = F.array_sort(
-        F.transform(
-            survivors,
-            lambda x: F.struct(
-                x["hash"].alias("hash"),
-                x["page"].alias("page"),
-                x["offset"].alias("offset"),
-                x["pos"].alias("pos"),
-                x["kind"].alias("kind"),
-                x["sanitized"].alias("sanitized"),
-            ),
-        )
-    )
-    kept = F.filter(
-        _first_per_key(by_hash, lambda e: e["hash"]), lambda x: x.isNotNull()
-    )
-    deduped = F.array_sort(
-        F.transform(
-            kept,
-            lambda x: F.struct(
-                x["page"].alias("page"),
-                x["offset"].alias("offset"),
-                x["pos"].alias("pos"),
-                x["kind"].alias("kind"),
-                x["sanitized"].alias("text"),
-            ),
-        )
-    )
-    return F.when(no_dups, plain).otherwise(deduped)
-
-
-def _media_idx_col(media_all: Column, mmap: Column) -> Column:
-    """Media occurrences with 1-based per-page image index, document order.
-
-    ``media_all`` = every media-KIND span (page, offset)-sorted, including
-    ref-less ones — they consume an index exactly like the oracle's
-    enumerate() over raw_images (assembly.py:109-114) — and ``mmap`` its
-    page→(start,len) slice map (a materialized column; see
-    _nonempty_pages_col for why). img_idx = global_pos − page_start + 1 is
-    an O(1) lookup per element, O(n) total — replaces the O(m²)
-    slice-and-filter prefix scan. Ref-less/empty-ref entries are dropped
-    AFTER indexing (oracle: `if not ref: continue`)."""
-    media_idx = F.transform(
-        media_all,
-        lambda m, i: F.struct(
-            m["page"].alias("page"),
-            m["offset"].alias("offset"),
-            m["pos"].alias("pos"),
-            m["media_ref"].alias("ref"),
-            (i + F.lit(2) - F.element_at(mmap, m["page"])["start"]).cast("int").alias(
-                "img_idx"
-            ),
-        ),
-    )
-    return F.filter(media_idx, lambda x: x["ref"].isNotNull() & (x["ref"] != ""))
-
-
-def _page_flags(srt: Column, smap: Column) -> Column:
-    """map<page, struct(raw, med)>: the raster-gate flags, one slice scan
-    per page. The slices partition ``srt``, so building every page's flags
-    is O(n) total — per-element F.exists over the WHOLE array (the naive
-    form) is O(n²) on a big document and was a straggler hazard below the
-    salted-routing threshold. Both args must be materialized columns."""
-    entries = F.transform(
-        F.map_entries(smap),
-        lambda e: F.struct(
-            e["key"],
-            F.struct(
-                F.exists(
-                    F.slice(srt, e["value"]["start"], e["value"]["len"]),
-                    lambda y: y["raw_nonblank"],
-                ).alias("raw"),
-                F.exists(
-                    F.slice(srt, e["value"]["start"], e["value"]["len"]),
-                    lambda y: y["is_media"],
-                ).alias("med"),
-            ),
-        ),
-    )
-    return F.map_from_entries(entries)
-
-
-def _rasters_col(srt: Column, pflags: Column) -> Column:
-    """Raster spans on pages with no non-blank raw text and no media
-    (reference vision_llm.py:490-523) — O(1) flag lookups per span."""
-    return F.filter(
-        srt,
-        lambda x: x["is_raster"]
-        & ~F.element_at(pflags, x["page"])["raw"]
-        & ~F.element_at(pflags, x["page"])["med"],
-    )
-
-
-def _captions_col(media_idx: Column, rasters: Column, total_pages: Column) -> Column:
-    """map<ref, caption>: one caption per unique ref, first-sighting context
-    (vision_llm.py:390-409); raster refs only if not already captioned.
-    ``total_pages`` must be a materialized column — inline it would be an
-    O(n) array_max re-evaluated once per raster ref inside the lambda."""
-    by_ref = F.array_sort(
-        F.transform(
-            media_idx,
-            lambda x: F.struct(
-                x["ref"].alias("ref"),
-                x["page"].alias("page"),
-                x["offset"].alias("offset"),
-                x["pos"].alias("pos"),
-                x["img_idx"].alias("img_idx"),
-            ),
-        )
-    )
-    firsts = F.filter(
-        _first_per_key(by_ref, lambda e: e["ref"]), lambda x: x.isNotNull()
-    )
-    media_captions = F.map_from_entries(
-        F.transform(
-            firsts,
-            lambda f: F.struct(
-                f["ref"],
-                _caption(
-                    f["ref"],
-                    F.format_string("Page %d, image %d.", f["page"] + 1, f["img_idx"]),
-                ),
-            ),
-        )
-    )
-    raster_firsts = F.filter(
-        _first_per_key(
-            F.array_sort(
-                F.transform(
-                    rasters,
-                    lambda x: F.struct(
-                        x["media_ref"].alias("ref"),
-                        x["page"].alias("page"),
-                        x["offset"].alias("offset"),
-                        x["pos"].alias("pos"),
-                    ),
-                )
-            ),
-            lambda e: e["ref"],
-        ),
-        lambda x: x.isNotNull(),
-    )
-    raster_captions = F.map_from_entries(
-        F.transform(
-            F.filter(
-                raster_firsts,
-                lambda f: ~F.map_contains_key(media_captions, f["ref"]),
-            ),
-            lambda f: F.struct(
-                f["ref"],
-                _caption(
-                    f["ref"],
-                    F.format_string("Page %d of %d.", f["page"] + 1, total_pages),
-                ),
-            ),
-        )
-    )
-    return F.map_concat(media_captions, raster_captions)
-
-
-def _figs_col(media_idx: Column, rasters: Column, captions: Column) -> Column:
-    """Captioned figure occurrences (page, offset, pos, ref) in document
-    order; media and raster pages are mutually exclusive by the raster
-    predicate."""
-    figs = F.concat(
-        F.transform(
-            media_idx,
-            lambda m: F.struct(
-                m["page"].alias("page"),
-                m["offset"].alias("offset"),
-                m["pos"].alias("pos"),
-                m["ref"].alias("ref"),
-            ),
-        ),
-        F.transform(
-            rasters,
-            lambda r: F.struct(
-                r["page"].alias("page"),
-                r["offset"].alias("offset"),
-                r["pos"].alias("pos"),
-                r["media_ref"].alias("ref"),
-            ),
-        ),
-    )
-    return F.array_sort(
-        F.filter(figs, lambda f: F.map_contains_key(captions, f["ref"]))
-    )
-
-
-def _page_slices(arr: Column) -> Column:
-    """map<page, struct(start, len)> over an array SORTED by (page, …).
-
-    Boundary-scan (O(n)) instead of per-page filters (O(pages × n)) — the
-    difference between ~linear and quadratic work on mega-documents.
-    Slice positions are 1-based for F.slice.
-    """
-    n = F.size(arr)
-    starts = F.filter(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-            lambda i: F.when(
-                (i <= n)
-                & (
-                    (i == 1)
-                    | (F.element_at(arr, i - 1)["page"] != F.element_at(arr, i)["page"])
-                ),
-                F.struct(F.element_at(arr, i)["page"].alias("page"), i.alias("start")),
-            ),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    shifted = F.concat(F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-                       F.array(F.lit(None)))
-    entries = F.zip_with(
-        starts,
-        shifted,
-        lambda s, nxt: F.struct(
-            s["page"],
-            F.struct(
-                s["start"].alias("start"),
-                (F.coalesce(nxt["start"], n + 1) - s["start"]).alias("len"),
-            ),
-        ),
-    )
-    # an empty input makes zip_with pad a null entry → drop null keys
-    return F.map_from_entries(F.filter(entries, lambda e: e["page"].isNotNull()))
-
-
-def _slice_for(arr: Column, slices: Column, p: Column, empty_type: str) -> Column:
-    e = F.element_at(slices, p)
-    return F.when(e.isNotNull(), F.slice(arr, e["start"], e["len"])).otherwise(
-        F.array().cast(empty_type)
-    )
-
-
-_TEXTS_T = "array<struct<page:int,offset:int,pos:int,kind:string,text:string>>"
-_FIGS_T = "array<struct<page:int,offset:int,pos:int,ref:string>>"
-
-
-def _page_part(
-    texts: Column, figs: Column, captions: Column, tmap: Column, fmap: Column, p: Column
-) -> Column:
-    page_text = F.array_join(
-        F.transform(_slice_for(texts, tmap, p, _TEXTS_T), lambda t: t["text"]),
-        "\n\n",
-    )
-    part = F.regexp_replace(F.regexp_replace(page_text, r"^\s+", ""), r"\s+$", "")
-    fig_list = F.transform(
-        _slice_for(figs, fmap, p, _FIGS_T),
-        lambda f: F.element_at(captions, f["ref"]),
-    )
-    return F.when(
-        F.size(fig_list) > 0,
-        F.concat(
-            part, F.lit("\n[Figures: "), F.array_join(fig_list, " ; "), F.lit("]")
-        ),
-    ).otherwise(part)
-
-
-def _nonempty_pages_col(
-    texts: Column, figs: Column, captions: Column, tmap: Column, fmap: Column
-) -> Column:
-    """struct(page, part) for every non-empty page, in page order.
-
-    ``tmap``/``fmap`` MUST be materialized columns (withColumn), not inline
-    expressions: a higher-order function re-evaluates embedded subtrees per
-    element, which would rebuild the O(n) slice map once per page —
-    O(pages·n) again, exactly what the maps exist to avoid. As column
-    references they are computed once per row and read O(1) in the lambda.
-    """
-    pages = F.array_sort(
-        F.array_distinct(
-            F.concat(
-                F.transform(texts, lambda t: t["page"]),
-                F.transform(figs, lambda f: f["page"]),
-            )
-        )
-    )
-    page_parts = F.transform(
-        pages,
-        lambda p: F.struct(
-            p.alias("page"),
-            _page_part(texts, figs, captions, tmap, fmap, p).alias("part"),
-        ),
-    )
-    return F.filter(page_parts, lambda s: s["part"] != "")
-
-
-def _markdown_col(nonempty: Column) -> Column:
-    return F.array_join(
-        F.transform(
-            nonempty,
-            lambda s: F.concat(
-                F.lit("[Page "),
-                (s["page"] + 1).cast("string"),
-                F.lit("]\n"),
-                s["part"],
-            ),
-        ),
-        "\n\n",
-    )
-
-
-def _out_spans_col(
-    nonempty: Column,
-    texts: Column,
-    figs: Column,
-    captions: Column,
-    tmap: Column,
-    fmap: Column,
-) -> Column:
-    raw_spans = F.flatten(
-        F.transform(
-            nonempty,
-            lambda s: F.concat(
-                F.transform(
-                    _slice_for(texts, tmap, s["page"], _TEXTS_T),
-                    lambda t: F.struct(
-                        t["kind"].alias("kind"),
-                        t["text"].alias("text"),
-                        F.lit(None).cast("string").alias("media_ref"),
-                        t["page"].alias("page"),
-                    ),
-                ),
-                F.transform(
-                    _slice_for(figs, fmap, s["page"], _FIGS_T),
-                    lambda f: F.struct(
-                        F.lit("figure").alias("kind"),
-                        F.element_at(captions, f["ref"]).alias("text"),
-                        f["ref"].alias("media_ref"),
-                        f["page"].alias("page"),
-                    ),
-                ),
-            ),
-        )
-    )
-    return F.transform(
-        raw_spans,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["page"].alias("page"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-
-
-def _array_program(
-    drop_kinds: frozenset, drop_exact_duplicates: bool
-) -> tuple[tuple[tuple[str, Column], ...], tuple[Column, ...]]:
-    """The per-document array program over the collected ``spans``: the
-    staged ``(name, column)`` pairs extract() adds with withColumn, in
-    order, and its final select list."""
-    empty_smap = F.map_from_entries(
-        F.array().cast("array<struct<page:int,v:struct<start:int,len:int>>>")
-    )
-    empty_pflags = F.map_from_entries(
-        F.array().cast("array<struct<page:int,v:struct<raw:boolean,med:boolean>>>")
-    )
-    empty_rasters = F.array().cast(
-        "array<struct<page:int,offset:int,pos:int,kind:string,"
-        "text:string,sanitized:string,hash:string,media_ref:string,"
-        "is_textual:boolean,is_media:boolean,is_raster:boolean,"
-        "survives:boolean,raw_nonblank:boolean>>"
-    )
-    has_raster = F.col("has_raster")
-    staged = (
-        ("srt", _srt_col(F.col("spans"), drop_kinds)),
-        ("texts", _texts_col(F.col("srt"), drop_exact_duplicates)),
-        ("media_all", F.filter(F.col("srt"), lambda x: x["is_media"])),
-        ("mmap", _page_slices(F.col("media_all"))),
-        ("media_idx", _media_idx_col(F.col("media_all"), F.col("mmap"))),
-        # raster machinery only for docs that HAVE raster spans (rare):
-        # one O(n) exists probe gates two O(n)-but-interpreter-heavy array
-        # passes (page slice map + per-page flags) — measured ~15% of
-        # extract wall when computed unconditionally
-        ("has_raster", F.exists(F.col("srt"), lambda x: x["is_raster"])),
-        (
-            "smap",
-            F.when(has_raster, _page_slices(F.col("srt"))).otherwise(empty_smap),
-        ),
-        (
-            "pflags",
-            F.when(has_raster, _page_flags(F.col("srt"), F.col("smap"))).otherwise(
-                empty_pflags
-            ),
-        ),
-        (
-            "total_pages",
-            F.when(
-                has_raster,
-                F.coalesce(
-                    F.array_max(F.transform(F.col("srt"), lambda x: x["page"])) + 1,
-                    F.lit(0),
-                ),
-            ).otherwise(F.lit(0)),
-        ),
-        (
-            "rasters",
-            F.when(has_raster, _rasters_col(F.col("srt"), F.col("pflags"))).otherwise(
-                empty_rasters
-            ),
-        ),
-        (
-            "captions",
-            _captions_col(F.col("media_idx"), F.col("rasters"), F.col("total_pages")),
-        ),
-        ("figs", _figs_col(F.col("media_idx"), F.col("rasters"), F.col("captions"))),
-        # page→(start,len) slice maps, materialized ONCE per row (see
-        # _nonempty_pages_col docstring for why these must be columns)
-        ("tmap", _page_slices(F.col("texts"))),
-        ("fmap", _page_slices(F.col("figs"))),
-        (
-            "nonempty",
-            _nonempty_pages_col(
-                F.col("texts"), F.col("figs"), F.col("captions"),
-                F.col("tmap"), F.col("fmap"),
-            ),
-        ),
-        ("md", _markdown_col(F.col("nonempty"))),
-        (
-            "outs",
-            _out_spans_col(
-                F.col("nonempty"), F.col("texts"), F.col("figs"), F.col("captions"),
-                F.col("tmap"), F.col("fmap"),
-            ),
-        ),
-    )
-    raw_all = F.array_join(
-        F.transform(
-            F.filter(F.col("srt"), lambda x: x["text"].isNotNull()),
-            lambda x: x["text"],
-        ),
-        "\n\n",
-    )
-    out = (
-        F.col("doc_id"),
-        F.when(F.col("md") == "", raw_all).otherwise(F.col("md")).alias("markdown"),
-        F.when(F.size("nonempty") > 0, F.element_at("nonempty", -1)["page"] + 1)
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("n_pages"),
-        F.when(F.col("md") == "", F.array().cast(_OUT_SPANS_T))
-        .otherwise(F.col("outs"))
-        .alias("spans"),
-    )
-    return staged, out
-
-
-# ---------------------------------------------------------------------------
 # the pipeline
 # ---------------------------------------------------------------------------
 _SCAN_LIKE_NODES = ("Relation", "Project", "Filter", "LocalRelation")
@@ -1014,21 +426,24 @@ def extract(
 ) -> DataFrame:
     """Full pipeline: documents(doc_id, doc_type, raw_html, spans) → result.
 
-    Output: doc_id, markdown, n_pages, spans (renumbered 0-based offsets).
+    Output: doc_id, markdown, n_pages, spans (renumbered 0-based offsets),
+    one row per input row. A document is extracted by one
+    kernels.assembly.extract_document call inside a mapInArrow over
+    whole-document rows: no shuffle, and nothing to build per call beyond
+    the DataFrame calls themselves.
 
     Documents with more than ``mega_doc_threshold`` input spans are routed
     through the salted two-phase path (pipeline_salted.extract_salted) —
-    beyond ~10^5 spans the single collected row becomes a straggler task
-    (measured: 100k spans ≈ 17 s in one task). The routing predicate
-    prefers an ingest-time ``n_spans`` column when present (corpus writers
-    materialize it). On the canonical span-only input shape
-    (doc_id, spans) the predicate is then a BARE int comparison that
-    reaches the parquet scan as a pushed filter — the salted branch skips
-    every row group whose n_spans max is under the threshold (verified:
-    ``PushedFilters: [GreaterThan(n_spans,…)]``) — where F.size(spans)
-    can never push down. Tables carrying raw_html add an OR'd
-    len(raw_html)/8 conservative estimate of HTML-derived spans (a
-    main-content block costs ≥ ~8 chars of source; the HTML UDF runs
+    beyond ~10^5 spans one document's call becomes a straggler task. The
+    routing predicate prefers an ingest-time ``n_spans`` column when
+    present (corpus writers materialize it). On the canonical span-only
+    input shape (doc_id, spans) the predicate is then a BARE int
+    comparison that reaches the parquet scan as a pushed filter — the
+    salted branch skips every row group whose n_spans max is under the
+    threshold (verified: ``PushedFilters: [GreaterThan(n_spans,…)]``) —
+    where F.size(spans) can never push down. Tables carrying raw_html add
+    an OR'd len(raw_html)/8 conservative estimate of HTML-derived spans (a
+    main-content block costs ≥ ~8 chars of source; HTML parsing runs
     after routing), which disables parquet pushdown for that branch —
     over-routing a medium doc to the salted path is correct, just a
     different physical plan. Fallback without the column is F.size on the
@@ -1051,12 +466,6 @@ def extract(
     ``probe_routing=False`` disables it outright. The probe runs with
     the job description ``docproc extract: routing probe``; the caller's
     description is restored afterwards.
-
-    The Column program is built on the first call per SparkContext and
-    (drop_kinds, drop_exact_duplicates), then reused (_program): a
-    repeated call pays its DataFrame calls and analysis, not the ~8.8k
-    py4j round trips of building the expression tree again. A new
-    SparkContext (stop() then get_spark()) rebuilds it.
     """
     if mega_doc_threshold is not None:
         from docproc_spark.pipeline_salted import extract_salted
@@ -1131,18 +540,62 @@ def extract(
         )
         return normal.unionByName(salted)
 
-    derived = with_derived_spans(docs)
-    rows = enrich_spans(explode_spans(derived))
-
-    collected = rows.groupBy("doc_id").agg(F.collect_list("s").alias("spans"))
-
-    # staged withColumns keep each analyzer pass small; the optimizer
-    # collapses them back into one projection over the single shuffle.
-    staged_cols, out_cols = _program(
-        ("extract", frozenset(drop_kinds), bool(drop_exact_duplicates)),
-        lambda: _array_program(drop_kinds, drop_exact_duplicates),
+    cols = ["doc_id", "spans"]
+    if "raw_html" in docs.columns:
+        # the page URL (WARC tables carry one) anchors relative image srcs
+        cols += ["raw_html"] + (["url"] if "url" in docs.columns else [])
+    out_schema = T.StructType(
+        [
+            docs.schema["doc_id"],
+            T.StructField("markdown", T.StringType()),
+            T.StructField("n_pages", T.IntegerType()),
+            T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT)),
+        ]
     )
-    staged = collected
-    for name, col in staged_cols:
-        staged = staged.withColumn(name, col)
-    return staged.select(*out_cols)
+    arrow_schema = to_arrow_schema(out_schema)
+    drop_kinds, drop_exact_duplicates = frozenset(drop_kinds), bool(drop_exact_duplicates)
+
+    def extract_documents(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _extract_batches(batches, arrow_schema, drop_kinds, drop_exact_duplicates)
+
+    return docs.select(*cols).mapInArrow(extract_documents, out_schema)
+
+
+def _extract_batches(
+    batches: Iterator[pa.RecordBatch],
+    schema: pa.Schema,
+    drop_kinds: frozenset,
+    drop_exact_duplicates: bool,
+) -> Iterator[pa.RecordBatch]:
+    """extract_document on every row of every batch, in row order; doc_id
+    passes through as the input's Arrow column."""
+    for batch in batches:
+        names = batch.schema.names
+
+        def values(name: str) -> list:
+            if name in names:
+                return batch.column(name).to_pylist()
+            return [None] * batch.num_rows
+
+        done = [
+            extract_document(
+                spans,
+                raw_html,
+                url,
+                drop_kinds=drop_kinds,
+                drop_exact_duplicates=drop_exact_duplicates,
+            )
+            for spans, raw_html, url in zip(
+                values("spans"), values("raw_html"), values("url")
+            )
+        ]
+        markdown, n_pages, out_spans = zip(*done) if done else ((), (), ())
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id"),
+                pa.array(markdown, schema.field("markdown").type),
+                pa.array(n_pages, schema.field("n_pages").type),
+                pa.array(out_spans, schema.field("spans").type),
+            ],
+            schema=schema,
+        )

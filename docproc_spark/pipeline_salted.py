@@ -1,8 +1,8 @@
 """Salted (two-phase) extraction path for mega-documents.
 
-The flagship array-program plan (pipeline.extract) collects ALL of a
-document's spans into one row — perfect until a single document carries
-~10^5+ spans, where that row becomes a straggler task and a memory hazard.
+The flagship plan (pipeline.extract) extracts each document in one Python
+call on one row — perfect until a single document carries ~10^5+ spans,
+where that call becomes a straggler task and a memory hazard.
 This module is the skew escape hatch the north rule demands: the SAME
 semantics (oracle: kernels/assembly.assemble_document) computed relationally,
 so no stage ever materializes a whole mega-document in one task:
@@ -31,26 +31,39 @@ mega-doc fixture).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
 from docproc_spark.pipeline import (
     _OUT_SPANS_T,
-    _caption,
     enrich_spans,
     explode_spans,
-    survives_and_hash,
     with_derived_spans,
 )
 
 _PAGE_SPANS_T = "array<struct<kind:string,text:string,media_ref:string>>"
 
 
-def _flat_rows(docs: DataFrame, drop_kinds: frozenset, persist: bool = True) -> DataFrame:
+def _caption(ref: Column, ctx: Column) -> Column:
+    return F.concat(F.lit("Figure "), F.substring(ref, 1, 12), F.lit(": "), ctx)
+
+
+def survives_and_hash(
+    is_textual: Column, bp: Column, sanitized: Column, drop_kinds: frozenset
+) -> tuple[Column, Column]:
+    """(survives, hash) of one enriched span: a textual span survives when
+    its boilerplate class is not dropped and its sanitized text is
+    non-empty; only survivors get the sha256 dedupe hash."""
+    survives = F.coalesce(
+        is_textual & ~bp.isin(*drop_kinds) & (sanitized != ""), F.lit(False)
+    )
+    return survives, F.when(survives, F.sha2(sanitized, 256))
+
+
+def _flat_rows(docs: DataFrame, drop_kinds: frozenset) -> DataFrame:
     """Exploded spans as flat columns: pipeline.enrich_spans's struct,
-    flattened, plus survives/hash from pipeline.survives_and_hash — the
-    same definitions pipeline._srt_col uses, so the two plans share them.
+    flattened, plus survives/hash from survives_and_hash.
 
     Two deliberate physical choices for the mega-doc regime:
       1. repartition(doc_id, page) BETWEEN explode and enrichment — a
@@ -58,20 +71,15 @@ def _flat_rows(docs: DataFrame, drop_kinds: frozenset, persist: bool = True) -> 
          single scan task; only an exchange can spread its spans. The
          exchange carries raw span bytes; the expensive work (sanitize
          kernel, boilerplate regexes, sha2) runs after it, page-parallel.
-      2. persist() — three downstream subtrees (dedupe, captions, page
-         partials) consume these rows, and a DataFrame fan-out gets NO
-         common-subexpression reuse in Catalyst (each branch would re-run
-         the scan + regex enrichment; serial per branch for a one-row
-         source). The salted path only ever sees the >threshold slice of a
-         corpus, so the cache is small relative to the job. NB the cache
-         is NOT unpersisted here (the returned plan is lazy); batch jobs —
-         the engine's primary mode — release it at session end, while a
-         long-lived service calling extract() per micro-batch should run
-         spark.catalog.clearCache() periodically or pass persist=False
-         (trading a 3× recompute of the enrichment).
+      2. a lazy localCheckpoint per call — three downstream subtrees
+         (dedupe, captions, page partials) consume these rows, and a
+         DataFrame fan-out gets NO common-subexpression reuse in Catalyst
+         (each branch would re-run the scan, the parse upstream of it and
+         the regex enrichment). The checkpoint is made afresh by every
+         call, so a later call reads its input again (a persist() keyed
+         on the plan served a rewritten file's old rows), and its blocks
+         are released by the ContextCleaner once the result is dropped.
     """
-    from pyspark import StorageLevel
-
     raw = explode_spans(with_derived_spans(docs)).repartition(
         F.col("doc_id"), F.col("page")
     )
@@ -80,7 +88,7 @@ def _flat_rows(docs: DataFrame, drop_kinds: frozenset, persist: bool = True) -> 
         F.col("is_textual"), F.col("bp"), F.col("sanitized"), drop_kinds
     )
     out = flat.select("*", survives.alias("survives"), hash_.alias("hash"))
-    return out.persist(StorageLevel.MEMORY_AND_DISK) if persist else out
+    return out.localCheckpoint(eager=False)
 
 
 def _kept_texts(rows: DataFrame, drop_exact_duplicates: bool) -> DataFrame:
@@ -275,12 +283,10 @@ def extract_salted(
     *,
     drop_kinds: frozenset = DROP_KINDS_DEFAULT,
     drop_exact_duplicates: bool = True,
-    persist: bool = True,
 ) -> DataFrame:
     """Mega-doc-safe extraction; output schema and semantics identical to
-    pipeline.extract (span-sequence + markdown oracle parity). See
-    _flat_rows on the ``persist`` cache's lifetime."""
-    rows = _flat_rows(docs, drop_kinds, persist=persist)
+    pipeline.extract (span-sequence + markdown oracle parity)."""
+    rows = _flat_rows(docs, drop_kinds)
     kept = _kept_texts(rows, drop_exact_duplicates)
     figs = _caption_table(rows)
     partials = _page_partials(rows, kept, figs)

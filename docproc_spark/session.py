@@ -120,10 +120,6 @@ def get_spark(
         # core counts) and an executor-memory hazard at scale. 32m keeps
         # decoded partitions in the ~200-300 MB band.
         .config("spark.sql.files.maxPartitionBytes", "33554432")
-        # the single-pass assembly is a deep higher-order-function tree;
-        # default analyzer/optimizer iteration caps are sized for flat plans
-        .config("spark.sql.analyzer.maxIterations", "500")
-        .config("spark.sql.optimizer.maxIterations", "500")
         # a file-ingest session generates 402-407 distinct codegen sources
         # (set-up + calls + lineage/quarantine/salted); the default 100-entry
         # cache evicted them, so each call recompiled ~200 classes; 1000
@@ -132,8 +128,8 @@ def get_spark(
         # InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
         # below every explode; predicate pushdown then re-inlines the
         # generator's defining expression into that filter — for the
-        # extract pipeline that re-embeds the HTML pandas UDF, running it
-        # TWICE per document (observed as a second ArrowEvalPython node).
+        # salted extract path that re-embeds the HTML pandas UDF, running
+        # it TWICE per document (observed as a second ArrowEvalPython node).
         # The filter is a pure optimization (Generate with outer=false
         # drops empty/null arrays itself) and the derived span array is
         # never empty anyway (sentinel span), so excluding the rule is

@@ -69,21 +69,22 @@ def completed_parts(
     bucket count raises: part numbers are pmod(hash, n_parts) buckets, so
     resuming a 6-bucket run as an 8-bucket run would skip "done" part ids
     that now contain different documents (silent loss + duplication).
-    Legacy rows with a null n_parts (pre-column tables) are accepted."""
-    from pyspark.errors import AnalysisException
+    Legacy rows with a null n_parts (pre-column tables) are accepted.
 
-    try:
-        rows = (
-            spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(lineage_path)
-            .select("part", "n_parts")
-            .distinct()
-            .collect()
-        )
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return set()
-        raise
+    The path is looked up through Hadoop's FileSystem before the read:
+    reading a missing path makes Spark log a WARN with a long stack trace
+    before it raises."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(lineage_path)
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
+        return set()
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(lineage_path)
+        .select("part", "n_parts")
+        .distinct()
+        .collect()
+    )
     if n_parts is not None:
         stale = sorted({r["n_parts"] for r in rows
                         if r["n_parts"] is not None and r["n_parts"] != n_parts})

@@ -34,11 +34,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     return spark.read.parquet(f"{d}/{name}.parquet")
 
 
-def register_views(spark: SparkSession, sf_dir: str | None = None, tables=TABLES) -> None:
-    for t in tables:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff the Iceberg runtime classes are actually loadable.
 

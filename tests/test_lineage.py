@@ -72,3 +72,23 @@ def test_rerun_of_completed_bucket_is_idempotent(spark, tmp_path):
     run_with_lineage(docs, out, lin, extract, n_parts=2)
     after = spark.read.parquet(out).count()
     assert before == after
+
+
+def test_completed_parts_first_run_skips_the_read(spark, tmp_path, monkeypatch):
+    """A missing lineage path is a first run, answered from the file system
+    without spark.read (whose failed read logs a WARN stack trace); an
+    existing but unreadable table still raises."""
+    from pyspark.sql import SparkSession
+
+    def no_read(self):
+        raise AssertionError("spark.read called for a missing lineage path")
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "read", property(no_read))
+        assert completed_parts(spark, str(tmp_path / "missing")) == set()
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        completed_parts(spark, str(corrupt))

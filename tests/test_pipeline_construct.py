@@ -1,8 +1,8 @@
-"""extract() builds its Column program once per SparkContext and option set
-(pipeline._program): a repeated call makes few py4j round trips, calls with
-different options each get their own program, a new SparkContext in the
-same JVM rebuilds it and the package's pandas UDFs, and the routing probe
-names its job."""
+"""extract() is cheap to construct: every call makes few py4j round trips,
+calls with different options each match the oracle, the memo of Columns
+and pandas UDFs (pipeline._program) builds each entry once and is rebuilt
+by a new SparkContext in the same JVM, and the routing probe names its
+job."""
 
 from __future__ import annotations
 
@@ -68,12 +68,14 @@ def _round_trips(monkeypatch, fn) -> int:
 
 def test_repeated_extract_makes_few_round_trips(spark, monkeypatch):
     docs = corpus.corpus_df(spark, 24, seed=23, mega_spans=200, partitions=2)
-    # an option set no other test uses, so the first call builds its program
+    # an option set no other test uses
     opts = dict(drop_kinds=frozenset({"questions"}), mega_doc_threshold=None)
     first = _round_trips(monkeypatch, lambda: extract(docs, **opts))
     again = _round_trips(monkeypatch, lambda: extract(docs, **opts))
-    assert first > 2000, first
-    assert again <= 200, again
+    # extract's own DataFrame calls are py4j commands, so a counter that
+    # counts nothing reads 0 here
+    assert 0 < first <= 200, first
+    assert 0 < again <= 200, again
 
 
 def test_concurrent_callers_build_each_entry_once():

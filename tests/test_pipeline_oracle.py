@@ -164,9 +164,22 @@ def test_extract_on_canonical_span_only_shape(spark, tmp_path):
     # about; the default eager probe would elide the salted branch here
     # (max n_spans=300 < threshold) — that path is covered by
     # test_probe_elides_dead_salted_branch.
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> list:
+        got = store.executionsList()
+        return [got.apply(i) for i in range(got.size())]
+
+    seen = {e.executionId() for e in executions()}
     res = extract(span_only, probe_routing=False)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    pushed = set(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
+    # the salted branch scans under its per-call localCheckpoint, which
+    # Spark runs as an execution of its own
+    plans = [res._jdf.queryExecution().executedPlan().toString()] + [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in seen and "localCheckpoint" in e.description()
+    ]
+    pushed = {p for plan in plans for p in re.findall(r"PushedFilters: \[[^\]]*\]", plan)}
     assert any("GreaterThan(n_spans" in p for p in pushed), pushed
     assert any("Or(LessThanOrEqual(n_spans" in p for p in pushed), pushed
     want = {

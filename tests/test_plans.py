@@ -1,8 +1,8 @@
 """Physical-plan shape guards — the scale properties the judge grades on.
 
 These assert the plan INVARIANTS that make the pipeline viable at 100 TB:
-exactly one shuffle, one source scan, no joins/unions in the extract path,
-and pushdown/broadcast behavior on the relational queries.
+no shuffle, one source scan and one Arrow map in the extract path, and
+pushdown/broadcast behavior on the relational queries.
 """
 
 from __future__ import annotations
@@ -24,17 +24,23 @@ def test_extract_is_single_pass(spark, tmp_path):
     src = str(tmp_path / "docs")
     corpus.corpus_df(spark, 50, seed=3, mega_spans=100, partitions=2).write.parquet(src)
     docs = spark.read.parquet(src)  # real parquet scan as the source
-    # the hot path (no mega-doc routing): exactly one shuffle, one scan
-    s = plan_summary(extract(docs, mega_doc_threshold=None))
-    assert s["scans"] == 1, "source scanned once"
-    assert s["exchanges"] == 1, "extract must shuffle exactly once (by doc_id)"
-    assert s["sort_merge_joins"] == 0 and s["broadcast_joins"] == 0
-    assert s["unions"] == 0
-    assert s["windows"] == 0
+
+    def assert_one_arrow_map(out):
+        # the hot path: one scan feeding one Arrow map over whole documents
+        plan = _plan(out)
+        s = plan_summary(out)
+        assert s["scans"] == 1, "source scanned once"
+        assert not re.search(r"\bExchange\b", plan), "extract must not shuffle"
+        assert s["python_evals"] == 0, "no per-column Python UDF"
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+        assert "Join" not in plan
+        assert s["unions"] == 0
+        assert s["windows"] == 0
+
+    assert_one_arrow_map(extract(docs, mega_doc_threshold=None))
     # with the r4 stats probe, the DEFAULT plan for a no-mega-doc corpus
     # is the same single-pass shape (dead salted branch elided)
-    s2 = plan_summary(extract(docs))
-    assert s2["unions"] == 0 and s2["scans"] == 1
+    assert_one_arrow_map(extract(docs))
     # probe disabled → the static routed plan carries the salted branch
     # (top-level split + the salted path's internal unions)
     s3 = plan_summary(extract(docs, probe_routing=False))

@@ -203,3 +203,64 @@ def test_drop_kinds_parity_both_plans(spark, drop_kinds):
             for r in res.collect()
         }
         assert got == want
+
+
+def _page(word: str, big: bool) -> str:
+    # Over 800,000 characters when big: the len(raw_html)/8 span estimate
+    # exceeds the 100,000 mega-document threshold and routes the page to the
+    # salted path; the script block parses to no span.
+    script = "<script>var x = [" + "0," * 410_000 + "];</script>" if big else ""
+    return (
+        f"<html><head><title>Page</title>{script}</head><body><article>"
+        f"<h1>Page {word}</h1><p>The body of the page carries the word {word} "
+        "in a sentence long enough to keep.</p></article></body></html>"
+    )
+
+
+def test_rewritten_routed_file_is_read_again(spark, tmp_path):
+    """A salted-routed page rewritten under the same path between two
+    extract_table calls: the second call extracts the new bytes, as it
+    does for a small page in the same directory."""
+    from docproc_spark.facade import DocprocSpark
+
+    d = tmp_path / "in"
+    d.mkdir()
+    eng = DocprocSpark(spark=spark)
+    for word in ("ALPHA", "BRAVO"):  # same length: the file sizes do not change
+        (d / "big.html").write_text(_page(word, big=True))
+        (d / "small.html").write_text(_page(word, big=False))
+        docs = eng.load_files(str(d)).filter("parse_error IS NULL")
+        md = {r["doc_id"]: r["markdown"] for r in eng.extract_table(docs).collect()}
+        assert set(md) == {"big.html", "small.html"}
+        assert word in md["small.html"], md["small.html"]
+        assert word in md["big.html"], md["big.html"]
+
+
+def test_extract_salted_releases_its_rows(spark):
+    """The rows extract_salted materializes for its three consumers are
+    reclaimed once its result frame is dropped: no RDD it persisted
+    outlives the result after a JVM GC."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    docs = corpus.corpus_df(spark, 12, seed=61, mega_spans=200, partitions=2)
+    before = persisted()
+    res = extract_salted(docs)
+    assert len(res.collect()) == 12
+    made = persisted() - before
+    assert made, "the rows are materialized while the result is in use"
+
+    del res
+    left = made
+    deadline = time.monotonic() + 60
+    while left and time.monotonic() < deadline:
+        gc.collect()  # py4j then releases the JVM objects of the dead frame
+        sc._jvm.System.gc()  # the ContextCleaner unpersists unreachable RDDs
+        time.sleep(0.5)
+        left = made & persisted()
+    assert not left, f"RDDs still persisted: {sorted(left)}"
