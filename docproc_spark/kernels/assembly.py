@@ -22,7 +22,9 @@ Spark pipeline maps it over Arrow batches of whole documents) and the oracle
 calls: HTML-derived spans appended to the input spans, assemble_document,
 and the page count.
 
-Input spans are dicts/tuples with fields (kind, text, media_ref, page, offset).
+Input spans are mappings or attribute objects (Spark Rows) with fields
+(kind, text, media_ref, page, offset); a None span reads as all-null fields,
+the way the salted path reads a null array element.
 Kinds: textual = {text, table, equation, header, footer, handwriting,
 unclassified}; media = {image, figure}; raster = {raster} (an empty page that
 exists only as a page bitmap).
@@ -30,15 +32,16 @@ exists only as a page bitmap).
 
 from __future__ import annotations
 
-from typing import Mapping, Optional, Sequence
+from collections.abc import Mapping
+from typing import Optional, Sequence
 
 from docproc_spark.kernels.captions import caption_stub
 from docproc_spark.kernels.html import html_main_blocks
 from docproc_spark.kernels.sanitize import (
     DROP_KINDS_DEFAULT,
-    boilerplate_kind,
     content_hash,
     sanitize_text,
+    sanitized_boilerplate_kind,
 )
 
 TEXTUAL_KINDS = frozenset(
@@ -58,8 +61,12 @@ PAGE_JOIN = "\n\n"
 
 
 def _span_get(s, field: str):
-    if isinstance(s, Mapping):
+    # exact dict first: Arrow-decoded spans are dicts, and the Mapping ABC
+    # check costs several times more than the read itself
+    if type(s) is dict or isinstance(s, Mapping):
         return s.get(field)
+    if s is None:
+        return None
     return getattr(s, field)
 
 
@@ -102,7 +109,7 @@ def assemble_document(
         if d["kind"] not in TEXTUAL_KINDS:
             continue
         sanitized = sanitize_text(d["text"])
-        bp = boilerplate_kind(sanitized)
+        bp = sanitized_boilerplate_kind(sanitized)
         if bp in drop_kinds:
             continue
         if drop_exact_duplicates and sanitized:

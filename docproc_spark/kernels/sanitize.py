@@ -17,6 +17,18 @@ The Cc category is exactly C0 (U+0000-U+001F) + DEL (U+007F) + C1
 (U+0080-U+009F), so step 2 is a fixed character class; its ASCII part is
 what the JVM-side ASCII twin (pipeline.sanitize_ascii_col) deletes with
 one F.translate.
+
+Fixed points. The reference classifies boilerplate on its sanitized text
+and sanitizes it again inside the classifier, so ``boilerplate_kind`` runs
+on ``sanitize_text``'s output. Steps 2-7 are idempotent on their own
+output: what steps 2-3 delete cannot reappear, and steps 4-7 leave no run,
+padding or edge for a second pass to change. Only step 1 can move a
+sanitized string, when deleting a control or zero-width character joined
+a base letter to a combining mark that NFC composes ("e\u200b\u0301"
+sanitizes to the decomposed "e\u0301", which a second pass composes to
+one character and then drops as shorter than 2). So a sanitized string
+that is already NFC (every ASCII string is) is its own sanitize, and
+``sanitized_boilerplate_kind`` classifies it without the second pass.
 """
 
 from __future__ import annotations
@@ -54,14 +66,11 @@ def sanitize_text(text: object) -> str:
 
 
 def sanitize_series(s: pd.Series) -> pd.Series:
-    """``sanitize_text`` over one Arrow batch (the pandas-UDF path).
-
-    Nulls map to "" without a call: ``sanitize_hybrid_col`` masks every
-    ASCII row to null, so a pipeline batch is ~98% null. On object dtype
-    a pandas ``.str`` chain is a per-element Python loop too, so one map
-    of the scalar is no slower than a vectorized restatement of it.
-    pyarrow's ``utf8_normalize(form="NFC")`` is not an option: it does
-    not compose (0x61+0x300 stays decomposed in pyarrow 16)."""
+    """``sanitize_text`` over one pandas batch; nulls map to "" without a
+    call. On object dtype a pandas ``.str`` chain is a per-element Python
+    loop too, so one map of the scalar is no slower than a vectorized
+    restatement of it. pyarrow's ``utf8_normalize(form="NFC")`` is not an
+    option: it does not compose (0x61+0x300 stays decomposed in pyarrow 16)."""
     return s.map(sanitize_text, na_action="ignore").fillna("")
 
 
@@ -82,6 +91,13 @@ BOILERPLATE_PATTERNS: list[tuple[str, re.Pattern]] = [
     ("objectives", re.compile(r"^(?:objectives?|learning\s+outcomes)\s*$", re.I)),
 ]
 
+# p1|…|pn matches exactly where one of the patterns does, so one search
+# with it tells a substantive span (the common case) without the loop,
+# like the JVM twin's probe (pipeline.boilerplate_kind_col)
+_ANY_BOILERPLATE = re.compile(
+    "|".join(f"(?:{pat.pattern})" for _, pat in BOILERPLATE_PATTERNS), re.I
+)
+
 DROP_KINDS_DEFAULT = frozenset({"thank_you", "questions", "blank"})
 
 TITLE_MAX_LEN = 20  # shorter than this and single-line → title
@@ -89,16 +105,32 @@ TITLE_MAX_LEN = 20  # shorter than this and single-line → title
 
 def boilerplate_kind(text: object) -> str:
     """Scalar boilerplate classifier → kind string ('none' if substantive)."""
-    cleaned = sanitize_text(text)
+    return _classify(sanitize_text(text))
+
+
+def sanitized_boilerplate_kind(sanitized: str) -> str:
+    """``boilerplate_kind(sanitized)`` for a ``sanitize_text`` output,
+    without the second sanitize where it is a no-op: on NFC input (see
+    the module docstring's fixed-point argument)."""
+    if sanitized.isascii() or unicodedata.is_normalized("NFC", sanitized):
+        return _classify(sanitized)
+    return boilerplate_kind(sanitized)
+
+
+def _classify(cleaned: str) -> str:
+    """The classifier proper, on already-sanitized text."""
     if not cleaned:
         return "blank"
     lines = cleaned.split("\n")
     first_line = lines[0].strip()
     if not first_line:
         return "blank"
-    for kind, pat in BOILERPLATE_PATTERNS:
-        if pat.search(first_line) or (len(lines) <= 2 and pat.search(cleaned)):
-            return kind
+    if _ANY_BOILERPLATE.search(first_line) or (
+        len(lines) <= 2 and _ANY_BOILERPLATE.search(cleaned)
+    ):
+        for kind, pat in BOILERPLATE_PATTERNS:
+            if pat.search(first_line) or (len(lines) <= 2 and pat.search(cleaned)):
+                return kind
     if len(cleaned) < TITLE_MAX_LEN and len(lines) <= 1:
         return "title"
     return "none"

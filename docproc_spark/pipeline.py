@@ -13,7 +13,10 @@ narrow Arrow map over whole documents:
 
 No exchange, no join, no union, one scan. Python is entered once per
 Arrow batch of whole documents, not once per span or per expression, and
-it runs the very function the oracle calls.
+it runs the very function the oracle calls. Per batch that is decode,
+kernel, encode (_extract_batches): the span lists are decoded one struct
+field at a time (_pylist), equal to pyarrow's per-struct to_pylist() and
+under half its cost, and the kernel sanitizes each textual span once.
 
   Skew: a document is one row and one Python call. A document with more
   than ``mega_doc_threshold`` spans would be a straggler task, so extract()
@@ -21,7 +24,8 @@ it runs the very function the oracle calls.
   one document's spans across tasks. The rest of this module serves that
   path and the operators: the derived-span, explode and enrichment Columns
   (built once per SparkContext, _program), the JVM-side sanitize and
-  boilerplate classifier and the Python-whitespace helpers.
+  boilerplate classifier, the kernel's sanitize for non-ASCII spans
+  (sanitize_twice_udf) and the Python-whitespace helpers.
 """
 
 from __future__ import annotations
@@ -49,7 +53,7 @@ from docproc_spark.kernels.sanitize import (
     BOILERPLATE_PATTERNS,
     DROP_KINDS_DEFAULT,
     TITLE_MAX_LEN,
-    sanitize_series,
+    sanitize_text,
 )
 from docproc_spark.partition import INTROSPECTION_ERRORS, fast_path_disabled
 from docproc_spark.schema import OUT_SPAN_STRUCT, SPAN_STRUCT
@@ -89,9 +93,21 @@ def context_pandas_udf(return_type: T.DataType) -> Callable[[Callable], ContextP
     return lambda func: ContextPandasUDF(func, return_type)
 
 
-@context_pandas_udf(T.StringType())
-def sanitize_udf(s: pd.Series) -> pd.Series:
-    return sanitize_series(s)
+@context_pandas_udf(
+    T.StructType(
+        [T.StructField("sanitized", T.StringType()),
+         T.StructField("resanitized", T.StringType())]
+    )
+)
+def sanitize_twice_udf(s: pd.Series) -> pd.DataFrame:
+    """sanitize_text of each element of one Arrow batch, and sanitize_text
+    of that: the text ``boilerplate_kind(sanitized)`` classifies. A null
+    element stays null, so a batch masked down to its non-ASCII rows
+    (enrich_spans) costs Python calls for those rows only."""
+    once = s.map(sanitize_text, na_action="ignore")
+    return pd.DataFrame(
+        {"sanitized": once, "resanitized": once.map(sanitize_text, na_action="ignore")}
+    )
 
 
 @context_pandas_udf(T.ArrayType(SPAN_STRUCT))
@@ -100,7 +116,7 @@ def html_spans_udf(raw_html: pd.Series, url: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# Native sanitize for ASCII rows (JVM-side; python only for non-ASCII)
+# Native sanitize for ASCII rows (JVM-side; Python only for non-ASCII)
 # ---------------------------------------------------------------------------
 # Control characters the sanitize chain deletes (NOT \t \n \r — \t feeds
 # the space-collapse, \n survives, \r is edge-trimmed only). Expressed as
@@ -138,28 +154,6 @@ def sanitize_ascii_col(text: Column) -> Column:
     s = F.regexp_replace(s, r"\n{3,}", "\n\n")
     s = F.btrim(s, F.lit(" \n\r"))
     return F.when(F.length(s) < 2, F.lit("")).otherwise(s)
-
-
-def sanitize_hybrid_col(text: Column) -> Column:
-    """Route: ASCII rows through whole-stage-codegen regexes; the non-ASCII
-    minority through sanitize_udf, which applies the scalar sanitize_text
-    per element of each Arrow batch (NFC needs unicodedata). This
-    keeps Python worker traffic ~proportional to the non-ASCII fraction —
-    the lever that makes the map stage scale past ~cores/2 threads in
-    local mode (JVM task threads and Python workers both want a core).
-
-    NB: Catalyst extracts python UDFs out of CASE branches and evaluates
-    them for EVERY row — so the UDF input is pre-masked to null for ASCII
-    rows, making the Arrow crossing carry ~no bytes for the common case.
-
-    ASCII detection is octet_length != char_length (a char > U+007F is
-    exactly a multi-byte UTF-8 sequence) — two counter reads instead of
-    the `[^\\x00-\\x7f]` regex scan the map stage used to pay per span."""
-    non_ascii = F.octet_length(text) != F.length(text)
-    masked = F.when(non_ascii, text)
-    return F.when(text.isNull(), F.lit("")).otherwise(
-        F.when(non_ascii, sanitize_udf(masked)).otherwise(sanitize_ascii_col(text))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -346,24 +340,45 @@ def _explode_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
 
 
 def enrich_spans(rows: DataFrame) -> DataFrame:
-    """Narrow (no-shuffle) per-span enrichment of exploded rows, inside
-    whole-stage codegen: the sanitized text (sanitize_hybrid_col), the
-    boilerplate class and the classification booleans, as one struct
-    ``s`` that pipeline_salted flattens. Classification follows the
-    oracle: any media-KIND span counts for per-page image enumeration
-    even with a null/empty ref (kernels/assembly.py enumerates every media
-    span), while ref-less RASTERS are inert (assembly skips ''/null refs
-    before captioning)."""
-    san, s = _program("enrich", _enrich_cols)
-    # _san staged as a real column: it feeds BOTH the struct field and the
-    # boilerplate classifier, and a multi-use non-cheap alias (it embeds
-    # the pandas UDF) blocks CollapseProject from inlining — the UDF runs
-    # once, bp consumes the attribute (the hash_embed lesson)
-    return rows.withColumn("_san", san).select("doc_id", s)
+    """Narrow (no-shuffle) per-span enrichment of exploded rows: the
+    sanitized text, the boilerplate class and the classification booleans,
+    as one struct ``s`` that pipeline_salted flattens.
+
+    Sanitize and boilerplate class are the kernels' (``sanitize_text`` and
+    ``boilerplate_kind`` of its result, which sanitizes again). An ASCII
+    span is sanitized by the JVM twin inside whole-stage codegen
+    (sanitize_ascii_col), and the result is its own sanitize. A non-ASCII
+    span is sanitized by the kernel in sanitize_twice_udf: NFC needs
+    unicodedata, and its sanitized text may not be its own sanitize
+    (kernels/sanitize.py, fixed points), so the UDF returns the second
+    pass too. The JVM twin boilerplate_kind_col then classifies the
+    second pass where there is one and the sanitized text elsewhere. This
+    keeps Python worker traffic ~proportional to the non-ASCII fraction,
+    which lets the stage scale past ~cores/2 threads in local mode (JVM
+    task threads and Python workers both want a core).
+
+    Catalyst extracts a Python UDF out of a CASE branch and evaluates it
+    for EVERY row, so the UDF's input is masked to null outside the
+    non-ASCII textual rows, and the Arrow crossing carries ~no bytes for
+    the common case. ASCII detection is octet_length != char_length (a
+    char > U+007F is exactly a multi-byte UTF-8 sequence): two counter
+    reads, no regex scan.
+
+    Classification follows the oracle: any media-KIND span counts for
+    per-page image enumeration even with a null/empty ref
+    (kernels/assembly.py enumerates every media span), while ref-less
+    RASTERS are inert (assembly skips ''/null refs before captioning)."""
+    nx, san, s = _program("enrich", _enrich_cols)
+    # _nx (the UDF's struct) and _san staged as real columns: each feeds
+    # more than one expression above it, and a multi-use non-cheap alias
+    # blocks CollapseProject from inlining — the UDF and the JVM sanitize
+    # chain run once per row, and the consumers read attributes (the
+    # hash_embed lesson)
+    return rows.withColumn("_nx", nx).withColumn("_san", san).select("doc_id", s)
 
 
-def _enrich_cols() -> tuple[Column, Column]:
-    """enrich_spans's ``_san`` column and ``s`` struct."""
+def _enrich_cols() -> tuple[Column, Column, Column]:
+    """enrich_spans's ``_nx`` and ``_san`` columns and ``s`` struct."""
     is_textual = F.col("kind").isin(*TEXTUAL_KINDS)
     is_media = F.col("kind").isin(*MEDIA_KINDS)
     is_raster = (
@@ -371,10 +386,14 @@ def _enrich_cols() -> tuple[Column, Column]:
         & F.col("media_ref").isNotNull()
         & (F.col("media_ref") != "")
     )
-    san = F.when(is_textual, sanitize_hybrid_col(F.col("text"))).otherwise(
-        F.lit(None)
+    text = F.col("text")
+    in_python = is_textual & (F.octet_length(text) != F.length(text))
+    nx = sanitize_twice_udf(F.when(in_python, text))
+    # the UDF's fields are non-null exactly on the in_python rows
+    san = F.when(
+        is_textual, F.coalesce(F.col("_nx.sanitized"), sanitize_ascii_col(text))
     )
-    return san, F.struct(
+    return nx, san, F.struct(
         F.col("page"),
         F.col("offset"),
         F.col("pos"),
@@ -385,7 +404,12 @@ def _enrich_cols() -> tuple[Column, Column]:
         is_textual.alias("is_textual"),
         is_media.alias("is_media"),
         is_raster.alias("is_raster"),
-        boilerplate_kind_col(F.col("_san")).alias("bp"),
+        # the coalesce is the classifier's input, not a fallback around
+        # it: in a coalesce branch its repeated subexpressions are not
+        # shared by codegen (measured: 20-30% more JVM CPU per salted call)
+        boilerplate_kind_col(F.coalesce(F.col("_nx.resanitized"), F.col("_san"))).alias(
+            "bp"
+        ),
         # bool(text.strip()) — F.trim strips ASCII space ONLY and would
         # let whitespace-only raw text block the raster fallback
         (is_textual & has_nonblank_col(F.col("text"))).alias("raw_nonblank"),
@@ -568,13 +592,20 @@ def _extract_batches(
     drop_exact_duplicates: bool,
 ) -> Iterator[pa.RecordBatch]:
     """extract_document on every row of every batch, in row order; doc_id
-    passes through as the input's Arrow column."""
+    passes through as the input's Arrow column.
+
+    Three steps per batch: decode the input columns to Python values
+    (_pylist: the span lists field by field), run the kernel per row, and
+    encode its results as Arrow arrays. The kernel is most of the cost.
+    Decoding the spans with ``to_pylist()`` cost over a third of the
+    kernel's time again; _pylist returns the same lists for about a
+    third of that."""
     for batch in batches:
         names = batch.schema.names
 
         def values(name: str) -> list:
             if name in names:
-                return batch.column(name).to_pylist()
+                return _pylist(batch.column(name))
             return [None] * batch.num_rows
 
         done = [
@@ -599,3 +630,36 @@ def _extract_batches(
             ],
             schema=schema,
         )
+
+
+def _pylist(column: pa.Array) -> list:
+    """``column.to_pylist()``, built field by field for a list of structs.
+
+    pyarrow converts each struct element through its per-scalar path, one
+    dict at a time. Here each struct field converts in one call, the
+    fields are zipped into row dicts, and the rows are cut per list by the
+    offsets. The result equals ``to_pylist()``, including on a sliced
+    array, null and empty lists, null struct elements and null fields.
+    Any other column is converted by ``to_pylist()`` itself."""
+    t = column.type
+    if not (
+        pa.types.is_list(t)
+        and pa.types.is_struct(t.value_type)
+        and t.value_type.num_fields
+    ):
+        return column.to_pylist()
+    offsets = column.offsets.to_pylist()
+    lo = offsets[0]
+    # .values ignores the list's slice; the offsets index into it directly
+    structs = column.values.slice(lo, offsets[-1] - lo)
+    fields = [f.name for f in t.value_type]
+    rows: list = [
+        dict(zip(fields, row))
+        for row in zip(*(structs.field(i).to_pylist() for i in range(len(fields))))
+    ]
+    if structs.null_count:
+        rows = [r if ok else None for r, ok in zip(rows, structs.is_valid().to_pylist())]
+    lists: list = [rows[a - lo : b - lo] for a, b in zip(offsets, offsets[1:])]
+    if column.null_count:
+        lists = [v if ok else None for v, ok in zip(lists, column.is_valid().to_pylist())]
+    return lists

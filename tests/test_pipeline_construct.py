@@ -154,7 +154,8 @@ from docproc_spark import corpus, pipeline
 from docproc_spark.functions import text
 from docproc_spark.session import get_spark
 
-UDFS = {"sanitize_udf": pipeline.sanitize_udf, "html_spans_udf": pipeline.html_spans_udf,
+UDFS = {"sanitize_twice_udf": pipeline.sanitize_twice_udf,
+        "html_spans_udf": pipeline.html_spans_udf,
         "lang_id_ngram_udf": text.lang_id_ngram_udf,
         "_mojibake_fix_udf": text._mojibake_fix_udf}
 n, seed = int(sys.argv[1]), int(sys.argv[2])

@@ -264,3 +264,38 @@ def test_extract_salted_releases_its_rows(spark):
         time.sleep(0.5)
         left = made & persisted()
     assert not left, f"RDDs still persisted: {sorted(left)}"
+
+
+def _span(text, offset):
+    return {"kind": "text", "text": text, "media_ref": None, "page": 0, "offset": offset}
+
+
+BODY = "Body paragraph here that is long."
+
+
+@pytest.mark.parametrize(
+    "spans",
+    [
+        # sanitizes to the decomposed "é": the second sanitize inside
+        # boilerplate_kind composes it to one character and drops it as blank
+        [_span("e\u200b\u0301", 0), _span(BODY, 1)],
+        # the same, then kept: composed text over 20 chars is substantive,
+        # and the span keeps its once-sanitized (decomposed) text
+        [_span("Caf\u200be\u0301 au lait and some more words", 0), _span(BODY, 1)],
+        # a null array element reads as an all-null span
+        [None, _span(BODY, 1), None],
+    ],
+    ids=["not_nfc_blank", "not_nfc_kept", "null_element"],
+)
+def test_salted_map_and_oracle_agree_on_edge_spans(spark, spans):
+    """The salted path, the Arrow map and the oracle give one result on
+    spans whose sanitized text is not NFC and on null span elements."""
+    doc = {"doc_id": "edge", "doc_type": "pdf", "raw_html": None, "spans": spans}
+    df = spark.createDataFrame([doc], schema=DOCUMENTS_SCHEMA)
+    want = oracle.extract_doc(doc)
+    assert BODY in want["markdown"]
+    for res in (extract(df, mega_doc_threshold=None), extract_salted(df)):
+        (got,) = res.collect()
+        assert got["markdown"] == want["markdown"]
+        assert got["n_pages"] == want["n_pages"]
+        assert _tuples(got["spans"]) == _tuples(want["spans"])

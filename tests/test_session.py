@@ -67,13 +67,13 @@ def test_udfs_defined_outside_the_package_run(spark):
 # so the zip it ships late stays out of the shared `spark` fixture.
 _JOB = r'''
 import json, sys, uuid, zipfile
-from docproc_spark.pipeline import sanitize_udf
+from docproc_spark.pipeline import sanitize_twice_udf
 from docproc_spark.session import get_spark
 
 spark = get_spark(master="local[1]", shuffle_partitions=1)
 sc = spark.sparkContext
 df = spark.createDataFrame([("Café",), (None,)], "t string")
-sanitized = [r[0] for r in df.select(sanitize_udf("t")).collect()]
+sanitized = [r[0]["sanitized"] for r in df.select(sanitize_twice_udf("t")).collect()]
 
 probe = _zip_rereads
 (shipped,) = sc.parallelize([0], 1).mapPartitions(probe).collect()
@@ -119,7 +119,7 @@ def test_package_shipped_only_with_py_files(tmp_path):
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
     got = json.loads(lines[-1][len("RESULT "):])
 
-    assert got["sanitized"] == ["Café", ""]
+    assert got["sanitized"] == ["Café", None]
     # docproc_spark came from the --py-files copy and is still re-read per
     # task; pyspark.zip, on the path since the worker started, is not
     sh = got["shipped"]
