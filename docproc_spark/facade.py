@@ -354,10 +354,12 @@ class DocprocSpark:
         it — the recommended large-scale flow (ingest once, extract many).
 
         Why checkpoint instead of feeding ``load_files`` straight to
-        ``extract_table``: (a) extract()'s mega-doc routing probe elides
-        the dead salted branch only on scan-like plans — a mapInPandas-
-        derived frame keeps the static union (probing it would run the
-        parse twice); (b) the ingest-time ``n_spans`` column only prunes
+        ``extract_table``: (a) extract() stages a mapInPandas-derived
+        frame in the block manager once per CALL (a lazy localCheckpoint
+        its routing probe computes), so each extract of the same
+        directory parses every file again and holds a copy of its spans
+        until the result is dropped; a scan-like input is probed from
+        its routing columns alone; (b) the ingest-time ``n_spans`` column only prunes
         parquet row groups from a real scan; (c) DataFrame fan-out gets
         no common-subexpression reuse, so every additional consumer of
         the un-checkpointed frame re-parses every byte. One write makes

@@ -21,8 +21,10 @@ under half its cost, and the kernel sanitizes each textual span once.
   Skew: a document is one row and one Python call. A document with more
   than ``mega_doc_threshold`` spans would be a straggler task, so extract()
   routes it to pipeline_salted, a relational two-phase plan that spreads
-  one document's spans across tasks. The rest of this module serves that
-  path and the operators: the derived-span, explode and enrichment Columns
+  one document's spans across tasks. A derived input (a load_files parse)
+  is staged once first (_staged), so it is parsed once and routed on its
+  real span count. The rest of this module serves that path, the staging
+  and the operators: the derived-span, explode and enrichment Columns
   (built once per SparkContext, _program), the JVM-side sanitize and
   boilerplate classifier, the kernel's sanitize for non-ASCII spans
   (sanitize_twice_udf) and the Python-whitespace helpers.
@@ -262,10 +264,26 @@ def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
 
 
 # ---------------------------------------------------------------------------
-# Per-span Columns of the salted path (pipeline_salted)
+# Per-span Columns of the salted path (pipeline_salted) and of _staged
 # ---------------------------------------------------------------------------
+def derived_spans(docs: DataFrame, *, sentinel: bool = False) -> Column:
+    """The input spans followed by the HTML-derived spans of ``raw_html``
+    (kernels.assembly.html_spans), in extract_document's merge order, then
+    the sentinel when asked for; an empty array where a document has
+    neither. Canonical span-only tables (the engine's input contract is
+    just (doc_id, spans)) have no raw_html column and keep their spans; the
+    page URL (WARC tables carry one) anchors relative image srcs, tables
+    without it keep verbatim-ref identity."""
+    has_html_col = "raw_html" in docs.columns
+    has_url_col = has_html_col and "url" in docs.columns
+    return _program(
+        ("derived_spans", has_html_col, has_url_col, sentinel),
+        lambda: _derived_spans_col(has_html_col, has_url_col, sentinel),
+    )
+
+
 def with_derived_spans(docs: DataFrame) -> DataFrame:
-    """Merge HTML-derived spans into the span array and append a sentinel.
+    """derived_spans with a sentinel appended, as the ``spans`` column.
 
     The sentinel (null-text unclassified span) guarantees every doc_id
     yields at least one exploded row, so the whole input flows through the
@@ -275,38 +293,31 @@ def with_derived_spans(docs: DataFrame) -> DataFrame:
     sanitize, never counts as raw text, media, or raster, and the raw-text
     fallback filters its null text.
     """
-    # canonical span-only tables (the engine's input contract is just
-    # (doc_id, spans)) have no raw_html column — skip the HTML merge; the
-    # page URL (WARC tables carry one) anchors relative image srcs, tables
-    # without it keep verbatim-ref identity
-    has_html_col = "raw_html" in docs.columns
-    has_url_col = has_html_col and "url" in docs.columns
-    spans = _program(
-        ("derived_spans", has_html_col, has_url_col),
-        lambda: _derived_spans_col(has_html_col, has_url_col),
-    )
-    return docs.withColumn("spans", spans)
+    return docs.withColumn("spans", derived_spans(docs, sentinel=True))
 
 
-def _derived_spans_col(has_html_col: bool, has_url_col: bool) -> Column:
+def _derived_spans_col(has_html_col: bool, has_url_col: bool, sentinel: bool) -> Column:
     empty = F.array().cast(_OUT_SPANS_T)
-    sentinel = F.array(
-        F.struct(
-            F.lit("unclassified").alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("page"),
-            F.lit(-1).cast("int").alias("offset"),
-        )
-    )
-    html_part = empty
+    parts = [F.coalesce(F.col("spans"), empty)]
     if has_html_col:
         has_html = F.col("raw_html").isNotNull() & (F.length("raw_html") > 0)
         url_col = F.col("url") if has_url_col else F.lit(None).cast("string")
-        html_part = F.when(
-            has_html, html_spans_udf(F.col("raw_html"), url_col)
-        ).otherwise(empty)
-    return F.concat(F.coalesce(F.col("spans"), empty), html_part, sentinel)
+        parts.append(
+            F.when(has_html, html_spans_udf(F.col("raw_html"), url_col)).otherwise(empty)
+        )
+    if sentinel:
+        parts.append(
+            F.array(
+                F.struct(
+                    F.lit("unclassified").alias("kind"),
+                    F.lit(None).cast("string").alias("text"),
+                    F.lit(None).cast("string").alias("media_ref"),
+                    F.lit(0).cast("int").alias("page"),
+                    F.lit(-1).cast("int").alias("offset"),
+                )
+            )
+        )
+    return F.concat(*parts) if len(parts) > 1 else parts[0]
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -426,8 +437,9 @@ def _is_scan_like(docs: DataFrame) -> bool:
     """True when the plan is only scan/project/filter nodes — i.e. the
     eager routing probe re-reads cheap columns from storage, nothing
     else. A derived plan (mapInPandas parse, join, union, aggregate)
-    would EXECUTE twice if probed — e.g. facade.load_files' bytes→spans
-    parse — so those keep the static two-branch routing instead."""
+    would EXECUTE once for the probe and again for the result — e.g.
+    facade.load_files' bytes→spans parse — so extract stages it first
+    (_staged) and probes the staged rows."""
     try:
         plan = docs._jdf.queryExecution().optimizedPlan().toString()
     except INTROSPECTION_ERRORS as exc:
@@ -438,6 +450,27 @@ def _is_scan_like(docs: DataFrame) -> bool:
         if node and node not in _SCAN_LIKE_NODES:
             return False
     return True
+
+
+def _staged(docs: DataFrame) -> DataFrame:
+    """(doc_id, spans, n_spans) of a derived input, as a lazy
+    localCheckpoint: ``spans`` is derived_spans (the HTML-derived spans
+    merged in, so no raw_html is left to parse) and ``n_spans`` its exact
+    size.
+
+    The routing probe's job computes these rows, and both branches of the
+    routed plan then read them, so the upstream derivation (a mapInPandas
+    parse, a join) runs once per call, and a page is routed on the blocks
+    it really holds. The HTML spans are made by the masked html_spans_udf:
+    only raw_html and url cross into Python, never the input spans. A
+    fresh checkpoint per call reads a rewritten input again, and the
+    ContextCleaner releases its blocks once the result is dropped."""
+    spans = derived_spans(docs)
+    return (
+        docs.select("doc_id", spans.alias("spans"))
+        .withColumn("n_spans", F.size("spans"))
+        .localCheckpoint(eager=False)
+    )
 
 
 def extract(
@@ -465,13 +498,14 @@ def extract(
     comparison that reaches the parquet scan as a pushed filter — the
     salted branch skips every row group whose n_spans max is under the
     threshold (verified: ``PushedFilters: [GreaterThan(n_spans,…)]``) —
-    where F.size(spans) can never push down. Tables carrying raw_html add
-    an OR'd len(raw_html)/8 conservative estimate of HTML-derived spans (a
-    main-content block costs ≥ ~8 chars of source; HTML parsing runs
-    after routing), which disables parquet pushdown for that branch —
-    over-routing a medium doc to the salted path is correct, just a
-    different physical plan. Fallback without the column is F.size on the
-    source array. Pass None to disable routing.
+    where F.size(spans) can never push down. Scan-like tables carrying
+    raw_html add an OR'd len(raw_html)/8 conservative estimate of
+    HTML-derived spans (a main-content block costs ≥ ~8 chars of source;
+    their HTML is parsed after routing), which disables parquet pushdown
+    for that branch — over-routing a medium doc to the salted path is
+    correct, just a different physical plan. A staged derived input
+    (below) routes on its exact span count instead. Fallback without the
+    column is F.size on the source array. Pass None to disable routing.
 
     ``probe_routing`` (default True): when the input carries the
     ingest-time ``n_spans`` column, run ONE eager driver-side
@@ -479,14 +513,18 @@ def extract(
     cross the threshold, the salted union branch is not built at all —
     the common no-mega-doc table gets the single-branch plan (the empty
     salted branch still costs an extra scan + empty shuffle stages per
-    run, measured ~0.7 s at sf0.1). This is a planning-time statistics
-    probe, the same decision an Iceberg catalog would answer from
-    manifest min/max without any scan; on bare parquet it reads only the
-    routing columns. The probe is skipped (static two-branch plan kept)
-    for streaming inputs, for tables without ``n_spans`` (the estimate
-    would need the full spans array — not a cheap probe), and for
-    non-scan-like plans (mapInPandas parses, joins, unions — probing
-    would execute the upstream computation twice; `_is_scan_like`).
+    run, measured ~0.7 s at sf0.1). On a scan-like plan (`_is_scan_like`)
+    this is a planning-time statistics probe, the same decision an
+    Iceberg catalog would answer from manifest min/max without any scan;
+    on bare parquet it reads only the routing columns. A derived plan
+    (facade.load_files' mapInPandas parses, joins, unions) is first
+    staged (_staged): its rows, with the HTML-derived spans merged in and
+    their exact count as ``n_spans``, become one lazy localCheckpoint that
+    the probe's job computes and both branches read. The derivation then
+    runs once per call, and an HTML page is routed on the blocks it holds,
+    not on len(raw_html)/8. The probe is skipped (static two-branch plan
+    kept) for streaming inputs and for tables without ``n_spans`` (the
+    estimate would need the full spans array — not a cheap probe).
     ``probe_routing=False`` disables it outright. The probe runs with
     the job description ``docproc extract: routing probe``; the caller's
     description is restored afterwards.
@@ -494,6 +532,9 @@ def extract(
     if mega_doc_threshold is not None:
         from docproc_spark.pipeline_salted import extract_salted
 
+        probe = probe_routing and "n_spans" in docs.columns and not docs.isStreaming
+        if probe and not _is_scan_like(docs):
+            docs = _staged(docs)
         # Both branch predicates are written out explicitly (not one
         # expression and its ~negation): `n_spans > T` is null for
         # null-n_spans rows, and a naive negation would silently drop them
@@ -522,24 +563,19 @@ def extract(
             combined_mega = (base + html_est) > mega_doc_threshold
             mega = mega | combined_mega
             not_mega = not_mega & ~combined_mega
-        if (
-            probe_routing
-            and "n_spans" in docs.columns
-            and not docs.isStreaming
-            and _is_scan_like(docs)
-        ):
+        if probe:
             # Upper bound of the routing estimate over the whole input:
             # `base` is coalesce(n_spans,0) >= every n_spans arm, and the
-            # combined arm is exactly base+html_est, so max(probe) <= T
+            # combined arm is exactly base+html_est, so max(estimate) <= T
             # proves filter(mega) is empty and the union branch is dead.
-            probe = base
+            estimate = base
             if "raw_html" in docs.columns:
-                probe = base + html_est
+                estimate = base + html_est
             sc = docs.sparkSession.sparkContext
             caller_desc = sc.getLocalProperty("spark.job.description")
             sc.setJobDescription("docproc extract: routing probe")
             try:
-                mx = docs.agg(F.max(probe).alias("mx")).first()["mx"]
+                mx = docs.agg(F.max(estimate).alias("mx")).first()["mx"]
             finally:
                 sc.setJobDescription(caller_desc)
             if mx is None or mx <= mega_doc_threshold:

@@ -24,7 +24,7 @@ so no stage ever materializes a whole mega-document in one task:
     renumbering via flatten.
 
 pipeline.extract routes documents through this path automatically when
-F.size(spans) exceeds mega_doc_threshold; both paths are oracle-equal
+their span count exceeds mega_doc_threshold; both paths are oracle-equal
 (tests/test_salted_pipeline.py runs class-by-class parity plus the
 mega-doc fixture).
 """

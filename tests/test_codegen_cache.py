@@ -15,9 +15,9 @@ from docproc_spark.operators.dedupe import first_wins_dedupe, minhash_neardup_pa
 from tests.test_ooxml import make_docx
 from tests.test_pdf_source import make_pdf
 
-# Over 800,000 characters: extract's len(raw_html)/8 span estimate exceeds
-# its 100,000 mega-document threshold and routes the page to the salted
-# path, while the script block parses to no span and keeps the run short.
+# Over 800,000 characters, most of them a script block that parses to no
+# span: a large page that keeps the run short. extract routes the loaded
+# table on its real span count, so the page takes the one-map plan.
 _BIG_PAGE = (
     "<html><head><title>Big page</title><script>var x = ["
     + "0," * 410_000

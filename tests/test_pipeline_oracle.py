@@ -221,18 +221,71 @@ def test_probe_elides_dead_salted_branch(spark, tmp_path):
     assert got == want
 
 
-def test_probe_skips_derived_plans(spark):
-    """A non-scan-like input (mapInPandas parse) must NOT be probed — the
-    probe would execute the whole derivation twice. The static two-branch
-    plan (Union) is kept instead."""
+def _span_doc(doc_id: str, n: int) -> dict:
+    spans = [
+        {"kind": "text", "text": f"Sentence {i} of {doc_id} long enough to keep.",
+         "media_ref": None, "page": i // 8, "offset": i % 8}
+        for i in range(n)
+    ]
+    return {"doc_id": doc_id, "doc_type": "pdf", "raw_html": None, "spans": spans}
+
+
+def test_derived_input_is_parsed_once_and_routed_on_real_spans(spark):
+    """A mapInPandas-derived input is staged once per extract call: the
+    parse runs once per row (the static union of probe_routing=False runs
+    it once per branch), the plan is the single Arrow map when no document
+    crosses the threshold, and the salted union when one document's real
+    span count does, though the table's n_spans column says 0."""
     import pandas as pd
 
-    from docproc_spark.sources.ooxml import load_ooxml
-    from tests.test_ooxml import make_docx
+    from docproc_spark.plans.explain import executed_plan
 
-    src = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["d1"], "fmt": ["docx"], "content": [make_docx()]})
+    sizes = {"small": 3, "large": 30}
+    docs = [_span_doc(d, n) for d, n in sizes.items()]
+    parsed = spark.sparkContext.accumulator(0)
+    by_id = {d["doc_id"]: d for d in docs}
+
+    def parse(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                parsed.add(1)
+                rows.append({**by_id[doc_id], "n_spans": 0})
+            yield pd.DataFrame(rows, columns=["doc_id", "raw_html", "spans", "n_spans"])
+
+    src = spark.createDataFrame(pd.DataFrame({"doc_id": list(sizes)}))
+    derived = src.mapInPandas(
+        parse, "doc_id string, raw_html string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,page:int,offset:int>>, "
+        "n_spans int",
     )
-    derived = load_ooxml(src).drop("sheet_names", "parse_error")
-    plan = extract(derived)._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" in plan  # probe skipped, routed plan retained
+
+    want = {}
+    for d in docs:
+        w = oracle.extract_doc(d)
+        want[d["doc_id"]] = (w["markdown"], w["n_pages"], _tuples(w["spans"]))
+
+    def run(**opts) -> tuple[int, str]:
+        """(parse calls, executed plan) of one extract call, construction
+        included: the salted branch materializes its rows while it is
+        built."""
+        before = parsed.value
+        res = extract(derived, **opts)
+        plan = executed_plan(res)
+        got = {r["doc_id"]: (r["markdown"], r["n_pages"], _tuples(r["spans"]))
+               for r in res.collect()}
+        assert got == want
+        return parsed.value - before, plan
+
+    calls, plan = run(probe_routing=False)
+    assert "Union" in plan
+    assert calls == 4, "the static union parses once per branch"
+
+    calls, plan = run()
+    assert "Union" not in plan and plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, "the parse sits behind the staged rows"
+    assert calls == 2
+
+    calls, plan = run(mega_doc_threshold=10)
+    assert "Union" in plan and "Join" in plan, "the salted branch is planned"
+    assert calls == 2

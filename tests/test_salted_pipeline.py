@@ -206,22 +206,25 @@ def test_drop_kinds_parity_both_plans(spark, drop_kinds):
 
 
 def _page(word: str, big: bool) -> str:
-    # Over 800,000 characters when big: the len(raw_html)/8 span estimate
-    # exceeds the 100,000 mega-document threshold and routes the page to the
-    # salted path; the script block parses to no span.
-    script = "<script>var x = [" + "0," * 410_000 + "];</script>" if big else ""
+    # 31 main-content blocks when big, 2 otherwise: a threshold between the
+    # two routes the big page, and only it, to the salted path
+    paras = "".join(
+        f"<p>Paragraph {i:02d} of the long page says {word} in a sentence long "
+        "enough to keep.</p>"
+        for i in range(30 if big else 1)
+    )
     return (
-        f"<html><head><title>Page</title>{script}</head><body><article>"
-        f"<h1>Page {word}</h1><p>The body of the page carries the word {word} "
-        "in a sentence long enough to keep.</p></article></body></html>"
+        f"<html><head><title>Page</title></head><body><article>"
+        f"<h1>Page {word}</h1>{paras}</article></body></html>"
     )
 
 
 def test_rewritten_routed_file_is_read_again(spark, tmp_path):
     """A salted-routed page rewritten under the same path between two
-    extract_table calls: the second call extracts the new bytes, as it
-    does for a small page in the same directory."""
+    extract calls: the second call extracts the new bytes, as it does for
+    a small page in the same directory."""
     from docproc_spark.facade import DocprocSpark
+    from docproc_spark.plans.explain import executed_plan
 
     d = tmp_path / "in"
     d.mkdir()
@@ -230,10 +233,12 @@ def test_rewritten_routed_file_is_read_again(spark, tmp_path):
         (d / "big.html").write_text(_page(word, big=True))
         (d / "small.html").write_text(_page(word, big=False))
         docs = eng.load_files(str(d)).filter("parse_error IS NULL")
-        md = {r["doc_id"]: r["markdown"] for r in eng.extract_table(docs).collect()}
+        res = extract(docs, mega_doc_threshold=10)
+        assert "Union" in executed_plan(res), "the big page takes the salted branch"
+        md = {r["doc_id"]: r["markdown"] for r in res.collect()}
         assert set(md) == {"big.html", "small.html"}
         assert word in md["small.html"], md["small.html"]
-        assert word in md["big.html"], md["big.html"]
+        assert md["big.html"].count(word) == 31, md["big.html"]
 
 
 def test_extract_salted_releases_its_rows(spark):
