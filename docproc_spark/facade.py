@@ -358,8 +358,10 @@ class DocprocSpark:
         frame in the block manager once per CALL (a lazy localCheckpoint
         its routing probe computes), so each extract of the same
         directory parses every file again and holds a copy of its spans
-        until the result is dropped; a scan-like input is probed from
-        its routing columns alone; (b) the ingest-time ``n_spans`` column only prunes
+        until the result is dropped; a parquet scan is routed from its
+        footers' statistics with no job where they prove that no
+        document crosses the threshold, and by a probe of its routing
+        columns alone otherwise; (b) the ingest-time ``n_spans`` column only prunes
         parquet row groups from a real scan; (c) DataFrame fan-out gets
         no common-subexpression reuse, so every additional consumer of
         the un-checkpointed frame re-parses every byte. One write makes

@@ -18,6 +18,17 @@ The Cc category is exactly C0 (U+0000-U+001F) + DEL (U+007F) + C1
 what the JVM-side ASCII twin (pipeline.sanitize_ascii_col) deletes with
 one F.translate.
 
+The gate. On almost every span the five passes of steps 2-6 change
+nothing, so ``sanitize_text`` first searches its NFC text once with
+_CHANGEABLE_RE, which matches exactly where one of the passes could act:
+a Cc character other than \\t \\n \\r (step 2), a zero-width character
+or the soft hyphen (step 3), a tab or two spaces (step 4: a run of spaces
+and tabs that is a lone space is already collapsed), a space next to a
+newline (step 5), or three newlines (step 6). With no match each pass
+returns its input unchanged, and so hands the next pass the same string,
+so skipping all five is exact; only step 7 remains. A string that
+matches runs the five passes in order as before (_five_passes).
+
 Fixed points. The reference classifies boilerplate on its sanitized text
 and sanitizes it again inside the classifier, so ``boilerplate_kind`` runs
 on ``sanitize_text``'s output. Steps 2-7 are idempotent on their own
@@ -45,8 +56,25 @@ _ZERO_WIDTH_RE = re.compile("[\\u200b\\u200c\\u200d\\ufeff\\u00ad]")
 _WS_RE = re.compile(r"[ \t]+")
 _NL_PAD_RE = re.compile(r" *\n *")
 _NL_RUN_RE = re.compile(r"\n{3,}")
+# anything one of the five passes above can change (the module docstring's
+# gate): _CTRL_RE's class plus \t, _ZERO_WIDTH_RE's class, then the
+# two-character triggers of _WS_RE and _NL_PAD_RE and _NL_RUN_RE's three
+_CHANGEABLE_RE = re.compile(
+    "[\\x00-\\x09\\x0b\\x0c\\x0e-\\x1f\\x7f-\\x9f\\u200b\\u200c\\u200d\\ufeff\\u00ad]"
+    "| [ \\n]|\\n(?: |\\n\\n)"
+)
 
 MIN_CONTENT_LENGTH = 2
+
+
+def _five_passes(s: str) -> str:
+    """Steps 2-6 on NFC text: control and zero-width deletion, then the
+    three whitespace collapses."""
+    s = _CTRL_RE.sub("", s)
+    s = _ZERO_WIDTH_RE.sub("", s)
+    s = _WS_RE.sub(" ", s)
+    s = _NL_PAD_RE.sub("\n", s)
+    return _NL_RUN_RE.sub("\n\n", s)
 
 
 def sanitize_text(text: object) -> str:
@@ -54,11 +82,8 @@ def sanitize_text(text: object) -> str:
     if text is None or not isinstance(text, str):
         return ""
     s = unicodedata.normalize("NFC", text)
-    s = _CTRL_RE.sub("", s)
-    s = _ZERO_WIDTH_RE.sub("", s)
-    s = _WS_RE.sub(" ", s)
-    s = _NL_PAD_RE.sub("\n", s)
-    s = _NL_RUN_RE.sub("\n\n", s)
+    if _CHANGEABLE_RE.search(s) is not None:
+        s = _five_passes(s)
     s = s.strip()
     if len(s) < MIN_CONTENT_LENGTH:
         return ""

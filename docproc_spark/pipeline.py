@@ -21,9 +21,11 @@ under half its cost, and the kernel sanitizes each textual span once.
   Skew: a document is one row and one Python call. A document with more
   than ``mega_doc_threshold`` spans would be a straggler task, so extract()
   routes it to pipeline_salted, a relational two-phase plan that spreads
-  one document's spans across tasks. A derived input (a load_files parse)
-  is staged once first (_staged), so it is parsed once and routed on its
-  real span count. The rest of this module serves that path, the staging
+  one document's spans across tasks. A parquet scan whose footers prove
+  that no document crosses the threshold gets the single map with no job
+  (_footer_bound). A derived input (a load_files parse) is staged once
+  first (_staged), so it is parsed once and routed on its real span
+  count. The rest of this module serves that path, the staging
   and the operators: the derived-span, explode and enrichment Columns
   (built once per SparkContext, _program), the JVM-side sanitize and
   boilerplate classifier, the kernel's sanitize for non-ASCII spans
@@ -35,6 +37,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable, Iterator
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 import pyarrow as pa
@@ -432,24 +435,111 @@ def _enrich_cols() -> tuple[Column, Column, Column]:
 # ---------------------------------------------------------------------------
 _SCAN_LIKE_NODES = ("Relation", "Project", "Filter", "LocalRelation")
 
+# Most parquet files whose footers extract() reads on the driver to bound
+# the routing estimate; above it the probe job runs instead. A footer read
+# is ~15 us of CPU on a local disk, but each file name is one py4j round
+# trip and a network-backed mount can make a read cost milliseconds, so
+# the cap keeps the footer walk well under the probe job it replaces.
+_FOOTER_FILES_MAX = 256
 
-def _is_scan_like(docs: DataFrame) -> bool:
-    """True when the plan is only scan/project/filter nodes — i.e. the
-    eager routing probe re-reads cheap columns from storage, nothing
-    else. A derived plan (mapInPandas parse, join, union, aggregate)
-    would EXECUTE once for the probe and again for the result — e.g.
-    facade.load_files' bytes→spans parse — so extract stages it first
-    (_staged) and probes the staged rows."""
+# Encodings that store every BYTE_ARRAY value's full bytes in the column
+# chunk (values, dictionary pages, and the level/index encodings). A
+# DELTA_BYTE_ARRAY chunk stores shared prefixes once, so its size does not
+# bound its longest value.
+_WHOLE_VALUE_ENCODINGS = frozenset(
+    {"PLAIN", "PLAIN_DICTIONARY", "RLE_DICTIONARY", "DELTA_LENGTH_BYTE_ARRAY",
+     "RLE", "BIT_PACKED"}
+)
+
+
+def _scan_plan(docs: DataFrame) -> Any:
+    """The optimized plan (a JVM LogicalPlan) when it is only
+    scan/project/filter nodes, else None.
+
+    On a scan-like plan the routing probe only reads the routing columns
+    from storage, and a single parquet leaf may let _footer_bound answer
+    it with no job at all. A derived plan (mapInPandas parse, join, union,
+    aggregate) would EXECUTE once for the probe and again for the result,
+    e.g. facade.load_files' bytes→spans parse, so extract stages it first
+    (_staged) and probes the staged rows; a plan that cannot be inspected
+    is treated as derived. The plan is walked once, as text, and
+    _footer_bound reads the same JVM plan."""
     try:
-        plan = docs._jdf.queryExecution().optimizedPlan().toString()
+        plan = docs._jdf.queryExecution().optimizedPlan()
+        text = plan.toString()
     except INTROSPECTION_ERRORS as exc:
         fast_path_disabled("extract routing probe", exc)
-        return False
-    for line in plan.splitlines():
+        return None
+    for line in text.splitlines():
         node = line.lstrip(" +-:").split(" ", 1)[0].split("[", 1)[0]
         if node and node not in _SCAN_LIKE_NODES:
-            return False
-    return True
+            return None
+    return plan
+
+
+def _footer_bound(docs: DataFrame, plan: Any) -> int | None:
+    """An upper bound of the routing estimate ``coalesce(n_spans, 0) +
+    len(raw_html) / 8`` over every row of ``docs``, read from parquet
+    footers without a Spark job, or None when the footers cannot give one.
+
+    ``plan`` is _scan_plan's plan. The bound needs a parquet relation
+    whose own data columns ``n_spans`` (and ``raw_html``, when present)
+    reach the output unchanged: not an alias, a computed column or a
+    partition column. Per row group it is the ``n_spans`` max statistic
+    (at least 0) plus ``raw_html``'s uncompressed chunk size over 8: that
+    size bounds the bytes, and so the characters, of any single value
+    when every encoding of the chunk stores each value's full bytes
+    (_WHOLE_VALUE_ENCODINGS). A Filter above the scan only removes rows
+    and ``inputFiles()`` is a superset of the files read, so the bound
+    holds for the filtered rows too. A missing footer, statistic or
+    column, a non-``file:`` path or more than _FOOTER_FILES_MAX files
+    gives None."""
+    import pyarrow.parquet as pq
+
+    try:
+        leaf = plan.collectLeaves().head()
+        if not leaf.toString().rstrip().endswith(" parquet"):
+            return None
+        names = ["n_spans"] + (["raw_html"] if "raw_html" in docs.columns else [])
+        out, own = plan.output(), leaf.outputSet()
+        if not all(own.contains(out.apply(docs.columns.index(n))) for n in names):
+            return None
+        partition_cols = {c.lower() for c in leaf.relation().partitionSchema().fieldNames()}
+        if partition_cols & set(names):
+            return None
+        files = docs._jdf.inputFiles()
+        if len(files) > _FOOTER_FILES_MAX:
+            return None
+        uris = [urlparse(f) for f in files]
+    except INTROSPECTION_ERRORS as exc:
+        fast_path_disabled("extract footer routing bound", exc)
+        return None
+    bound = 0
+    for uri in uris:
+        if uri.scheme != "file":
+            return None
+        try:
+            meta = pq.read_metadata(unquote(uri.path))
+        except (OSError, pa.ArrowInvalid):
+            return None
+        where = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
+        if any(n not in where for n in names):
+            return None
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            if group.num_rows == 0:
+                continue
+            stats = group.column(where["n_spans"]).statistics
+            if stats is None or not stats.has_min_max or not isinstance(stats.max, int):
+                return None
+            rows_bound = max(0, stats.max)
+            if "raw_html" in names:
+                html = group.column(where["raw_html"])
+                if not set(html.encodings) <= _WHOLE_VALUE_ENCODINGS:
+                    return None
+                rows_bound += html.total_uncompressed_size // 8
+            bound = max(bound, rows_bound)
+    return bound
 
 
 def _staged(docs: DataFrame) -> DataFrame:
@@ -508,15 +598,20 @@ def extract(
     column is F.size on the source array. Pass None to disable routing.
 
     ``probe_routing`` (default True): when the input carries the
-    ingest-time ``n_spans`` column, run ONE eager driver-side
-    ``max(routing estimate)`` job at plan-construction time; if no row can
-    cross the threshold, the salted union branch is not built at all —
-    the common no-mega-doc table gets the single-branch plan (the empty
-    salted branch still costs an extra scan + empty shuffle stages per
-    run, measured ~0.7 s at sf0.1). On a scan-like plan (`_is_scan_like`)
-    this is a planning-time statistics probe, the same decision an
-    Iceberg catalog would answer from manifest min/max without any scan;
-    on bare parquet it reads only the routing columns. A derived plan
+    ingest-time ``n_spans`` column, prove at plan-construction time that
+    no row can cross the threshold, and then do not build the salted
+    union branch at all: the common no-mega-doc table gets the
+    single-branch plan (the empty salted branch still costs an extra scan
+    + empty shuffle stages per run, measured ~0.7 s at sf0.1). On a
+    scan-like plan (_scan_plan) over one parquet relation whose own
+    ``n_spans``/``raw_html`` columns reach the output, the proof comes
+    from the files' footers (_footer_bound: per row group, the ``n_spans``
+    max statistic plus ``raw_html``'s chunk size over 8), the decision a
+    catalog answers from manifest min/max, and no Spark job runs. When
+    the footers cannot prove it (any other scan-like input, a computed or
+    partition ``n_spans``, a missing statistic, a bound over the
+    threshold), ONE eager driver-side ``max(routing estimate)`` job
+    decides, reading only the routing columns. A derived plan
     (facade.load_files' mapInPandas parses, joins, unions) is first
     staged (_staged): its rows, with the HTML-derived spans merged in and
     their exact count as ``n_spans``, become one lazy localCheckpoint that
@@ -525,16 +620,30 @@ def extract(
     not on len(raw_html)/8. The probe is skipped (static two-branch plan
     kept) for streaming inputs and for tables without ``n_spans`` (the
     estimate would need the full spans array — not a cheap probe).
-    ``probe_routing=False`` disables it outright. The probe runs with
+    ``probe_routing=False`` disables it outright. The probe job runs with
     the job description ``docproc extract: routing probe``; the caller's
     description is restored afterwards.
     """
     if mega_doc_threshold is not None:
         from docproc_spark.pipeline_salted import extract_salted
 
+        def one_map(frame: DataFrame) -> DataFrame:
+            return extract(
+                frame,
+                drop_kinds=drop_kinds,
+                drop_exact_duplicates=drop_exact_duplicates,
+                mega_doc_threshold=None,
+            )
+
         probe = probe_routing and "n_spans" in docs.columns and not docs.isStreaming
-        if probe and not _is_scan_like(docs):
-            docs = _staged(docs)
+        if probe:
+            plan = _scan_plan(docs)
+            if plan is None:
+                docs = _staged(docs)
+            else:
+                bound = _footer_bound(docs, plan)
+                if bound is not None and bound <= mega_doc_threshold:
+                    return one_map(docs)
         # Both branch predicates are written out explicitly (not one
         # expression and its ~negation): `n_spans > T` is null for
         # null-n_spans rows, and a naive negation would silently drop them
@@ -581,18 +690,8 @@ def extract(
             if mx is None or mx <= mega_doc_threshold:
                 mega_doc_threshold = None
         if mega_doc_threshold is None:
-            return extract(
-                docs,
-                drop_kinds=drop_kinds,
-                drop_exact_duplicates=drop_exact_duplicates,
-                mega_doc_threshold=None,
-            )
-        normal = extract(
-            docs.filter(not_mega),
-            drop_kinds=drop_kinds,
-            drop_exact_duplicates=drop_exact_duplicates,
-            mega_doc_threshold=None,
-        )
+            return one_map(docs)
+        normal = one_map(docs.filter(not_mega))
         salted = extract_salted(
             docs.filter(mega),
             drop_kinds=drop_kinds,

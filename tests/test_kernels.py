@@ -751,6 +751,47 @@ class TestSanitizeFixedPoint:
         assert sanitized_boilerplate_kind(s) == boilerplate_kind(s) == "blank"
 
 
+# Every class the sanitize gate searches for, one token each: C0 controls
+# (both sides of \t \n \r), DEL and C1, the tab, the zero-width
+# characters and the soft hyphen, and the whitespace runs the collapses
+# act on; plus what no pass changes (\r, NBSP, ideographic space, single
+# spaces and newlines) and NFC-composable pairs, which a deleted character
+# can join. Plain letters keep most strings down to a single trigger.
+_GATE_TRIGGERS = [
+    "\x00", "\x08", "\x0b", "\x0c", "\x0e", "\x1f", "\x7f", "\x80", "\x85", "\x9f",
+    "\t", "\u200b", "\u200c", "\u200d", "\ufeff", "\u00ad", "  ", " \n", "\n ", "\n\n\n",
+]
+_GATE_ALPHABET = st.sampled_from(
+    _GATE_TRIGGERS
+    + [" ", "\n", "\r", "\u00a0", "\u3000", "e", "\u0301", "A", "\u030a",
+       "\u1100", "\u1161", "\u00e9"]
+    + ["a", "b", "word", "Thanks"] * 8
+)
+
+
+def _five_pass_sanitize(text: str) -> str:
+    """sanitize_text with the five passes always run: the reference form
+    the gate must equal."""
+    import unicodedata
+
+    from docproc_spark.kernels.sanitize import MIN_CONTENT_LENGTH, _five_passes
+
+    s = _five_passes(unicodedata.normalize("NFC", text)).strip()
+    return s if len(s) >= MIN_CONTENT_LENGTH else ""
+
+
+class TestSanitizeGate:
+    @pytest.mark.parametrize("trigger", _GATE_TRIGGERS)
+    def test_every_trigger_reaches_the_passes(self, trigger):
+        raw = f"ab{trigger}cd"
+        assert sanitize_text(raw) == _five_pass_sanitize(raw) != raw
+
+    @given(st.lists(_GATE_ALPHABET, max_size=16).map("".join))
+    @settings(max_examples=3000, deadline=None)
+    def test_gated_sanitize_equals_five_passes(self, raw):
+        assert sanitize_text(raw) == _five_pass_sanitize(raw)
+
+
 # md5 over oracle.flagship_summary of the seed-42 test corpus (every
 # fixture class; the documents corpus_df(spark, 180, seed=42,
 # mega_spans=600) generates). The engine and the oracle both call

@@ -138,13 +138,13 @@ def _failing_jdf(exc: Exception):
 
 def test_fallbacks_take_only_introspection_errors(monkeypatch, caplog):
     from docproc_spark import partition
-    from docproc_spark.pipeline import _is_scan_like
+    from docproc_spark.pipeline import _scan_plan
 
     monkeypatch.setattr(partition, "_disabled_logged", set())
     stub = _NoJdf()
     with caplog.at_level("WARNING", logger="docproc_spark.partition"):
-        assert _is_scan_like(stub) is False
-        assert _is_scan_like(stub) is False
+        assert _scan_plan(stub) is None
+        assert _scan_plan(stub) is None
         # size gate unavailable → the fanout runs ungated
         assert scan_fanout(stub, min_bytes=10**9) == ("repartitioned", 4)
         no_rdd = SimpleNamespace(isStreaming=False, sparkSession=_NoJdf.sparkSession)
@@ -155,7 +155,7 @@ def test_fallbacks_take_only_introspection_errors(monkeypatch, caplog):
 
     broken = SimpleNamespace(_jdf=_failing_jdf(ValueError("bug")))
     with pytest.raises(ValueError):
-        _is_scan_like(broken)
+        _scan_plan(broken)
     stub._jdf = _failing_jdf(KeyError("bug"))
     with pytest.raises(KeyError):
         scan_fanout(stub, min_bytes=10**9)

@@ -21,6 +21,7 @@ from docproc_spark import corpus, oracle
 from docproc_spark.kernels.assembly import assemble_document
 from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
 from docproc_spark.pipeline import _program, extract
+from tests.test_footer_routing import _write
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -122,9 +123,11 @@ def test_alternating_options_each_match_the_oracle(spark):
 
 @pytest.mark.parametrize("caller_desc", ["caller job", None], ids=["set", "unset"])
 def test_routing_probe_names_its_job(spark, tmp_path, monkeypatch, caller_desc):
-    path = str(tmp_path / "docs")
-    corpus.corpus_df(spark, 12, seed=31, mega_spans=200, partitions=2).write.parquet(path)
-    docs = spark.read.parquet(path)
+    # a parquet file without statistics: the footers cannot bound the
+    # routing estimate, so the probe runs as a job
+    gen = (corpus.gen_doc(i, seed=31, mega_spans=200) for i in range(12))
+    rows = [{**d, "n_spans": len(d["spans"] or [])} for d in gen]
+    docs = spark.read.parquet(_write(rows, str(tmp_path / "docs"), write_statistics=False))
     assert "n_spans" in docs.columns
     sc = spark.sparkContext
     seen = []
