@@ -17,6 +17,16 @@ reference extractor's deterministic text path:
   - raw-text fallback            (vision_llm.py:540-541 → pdf_loader.py:56-61: if nothing
                                   assembled, join raw span texts with "\n\n")
 
+assemble_document is two phases. page_partial does each page's own work
+(sanitize, boilerplate drop, content hash, media ordinals, the raster-page
+test, the page's raw text); merge_pages does the document-wide work over
+the page partials, in any order (first-wins dedupe across pages,
+first-sighting captions, raster captions, page assembly, the raw-text
+fallback). The Arrow map of whole documents and the oracle call
+assemble_document, which runs both phases in one call; the salted plan for
+mega-documents (pipeline_salted) runs page_partial per (doc, page) group
+and merge_pages per document, in different tasks.
+
 extract_document is the whole per-document extraction the engine runs (the
 Spark pipeline maps it over Arrow batches of whole documents) and the oracle
 calls: HTML-derived spans appended to the input spans, assemble_document,
@@ -70,18 +80,13 @@ def _span_get(s, field: str):
     return getattr(s, field)
 
 
-def assemble_document(
-    spans: Sequence,
-    *,
-    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
-    drop_exact_duplicates: bool = True,
-) -> tuple[str, list[dict]]:
-    """Assemble one document. Returns (markdown, output span sequence).
+def page_spans(spans: Sequence) -> list[tuple[int, list[dict]]]:
+    """Normalized spans grouped by page: (page, spans) in page order, each
+    page's spans in (offset, input) order.
 
-    Output spans carry renumbered 0-based offsets in document order:
-    surviving text spans first within each page (offset order), then one
-    figure span per media occurrence (caption text, original media_ref).
-    """
+    A null or empty kind reads as "text", a null page or offset as 0. The
+    sort is stable, so spans that tie on (page, offset) keep their input
+    order."""
     norm = []
     for s in spans:
         norm.append(
@@ -99,108 +104,148 @@ def assemble_document(
     by_page: dict[int, list[dict]] = {}
     for d in norm:
         by_page.setdefault(d["page"], []).append(d)
-    pages = sorted(by_page)
-    total_pages = (max(pages) + 1) if pages else 0
+    return list(by_page.items())
 
-    # --- text path: sanitize → boilerplate drop → first-wins dedupe -------
-    seen_hashes: set[str] = set()
-    kept_text: dict[int, list[dict]] = {p: [] for p in pages}
-    for d in norm:
-        if d["kind"] not in TEXTUAL_KINDS:
-            continue
-        sanitized = sanitize_text(d["text"])
-        bp = sanitized_boilerplate_kind(sanitized)
-        if bp in drop_kinds:
-            continue
-        if drop_exact_duplicates and sanitized:
-            h = content_hash(sanitized)
-            if h in seen_hashes:
+
+def page_partial(
+    page: int,
+    spans: Sequence[dict],
+    *,
+    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
+    drop_exact_duplicates: bool = True,
+) -> dict:
+    """The work of one page that needs no other page.
+
+    ``spans`` are the page's normalized spans (page_spans) in (offset,
+    input) order. The partial holds:
+
+      page     the page number
+      texts    the textual spans that survive sanitize and the boilerplate
+               drop with non-empty text, in order: {kind, text (sanitized),
+               hash (content_hash, None when exact duplicates are kept)}
+      media    {idx, ref} per media span with a ref; idx is its 0-based
+               ordinal among ALL media spans of the page, ref-less ones
+               included (the first-sighting context counts them)
+      rasters  the refs of the page's raster spans when the page qualifies
+               for the full-page caption: no textual span with non-blank
+               raw text and no media span
+      raw      the page's non-null raw texts joined by "\n\n", None when
+               it has none or when the page has texts, media or rasters:
+               then the document assembles some output, and the raw-text
+               fallback is never read
+    """
+    texts = []
+    media = []
+    n_media = 0
+    has_raw_text = False
+    for d in spans:
+        kind = d["kind"]
+        if kind in TEXTUAL_KINDS:
+            raw = d["text"]
+            has_raw_text = has_raw_text or bool(raw and str(raw).strip())
+            sanitized = sanitize_text(raw)
+            if not sanitized or sanitized_boilerplate_kind(sanitized) in drop_kinds:
                 continue
-            seen_hashes.add(h)
-        kept_text[d["page"]].append({**d, "text": sanitized})
+            h = content_hash(sanitized) if drop_exact_duplicates else None
+            texts.append({"kind": kind, "text": sanitized, "hash": h})
+        elif kind in MEDIA_KINDS:
+            if d["media_ref"]:
+                media.append({"idx": n_media, "ref": d["media_ref"]})
+            n_media += 1
+    rasters = []
+    if not has_raw_text and not n_media:
+        rasters = [d["media_ref"] for d in spans if d["kind"] == RASTER_KIND and d["media_ref"]]
+    raw = None
+    if not (texts or media or rasters):
+        raws = [str(d["text"]) for d in spans if d["text"] is not None]
+        raw = PAGE_JOIN.join(raws) if raws else None
+    return {"page": page, "texts": texts, "media": media, "rasters": rasters, "raw": raw}
 
-    # --- media path: content-hash dedupe, first-sighting context ----------
-    # img_idx = 0-based position among media spans within the page.
-    ref_ctx: dict[str, str] = {}
-    page_figs: dict[int, list[tuple[int, str]]] = {p: [] for p in pages}
+
+def merge_pages(partials: Sequence[dict]) -> tuple[str, list[dict]]:
+    """The document-wide work over page_partial's partials, given in any
+    order. Returns (markdown, output span sequence) like assemble_document.
+
+    In page order: first-wins exact dedupe across pages, one caption per
+    media ref with the context of its first sighting, full-page captions
+    for the refs of raster pages that no media span captioned ("Page N of
+    total", total = the last page with any span + 1), then page assembly
+    and the raw-text fallback."""
+    pages = sorted(partials, key=lambda p: p["page"])
+    total_pages = pages[-1]["page"] + 1 if pages else 0
+
+    captions: dict[str, str] = {}
     for p in pages:
-        media_on_page = [d for d in by_page[p] if d["kind"] in MEDIA_KINDS]
-        for i, d in enumerate(media_on_page):
-            ref = d["media_ref"]
-            if not ref:
-                continue
-            if ref not in ref_ctx:
-                ref_ctx[ref] = FIRST_SIGHT_CTX.format(page=p + 1, idx=i + 1)
-            page_figs[p].append((i, ref))
-
-    captions = {ref: caption_stub(ref, ctx) for ref, ctx in ref_ctx.items()}
-
-    # --- rasterized-page fallback ------------------------------------------
-    # A page qualifies if it has no textual span with non-blank RAW text and
-    # no media spans; its raster spans each get a full-page caption.
+        for m in p["media"]:
+            if m["ref"] not in captions:
+                ctx = FIRST_SIGHT_CTX.format(page=p["page"] + 1, idx=m["idx"] + 1)
+                captions[m["ref"]] = caption_stub(m["ref"], ctx)
     for p in pages:
-        has_raw_text = any(
-            d["kind"] in TEXTUAL_KINDS and d["text"] and str(d["text"]).strip()
-            for d in by_page[p]
-        )
-        has_media = any(d["kind"] in MEDIA_KINDS for d in by_page[p])
-        if has_raw_text or has_media:
-            continue
-        rasters = [d for d in by_page[p] if d["kind"] == RASTER_KIND]
-        for i, d in enumerate(rasters):
-            ref = d["media_ref"] or ""
-            if not ref:
-                continue
-            ctx = RASTER_CTX.format(page=p + 1, total=total_pages)
+        for ref in p["rasters"]:
             if ref not in captions:
+                ctx = RASTER_CTX.format(page=p["page"] + 1, total=total_pages)
                 captions[ref] = caption_stub(ref, ctx)
-            page_figs[p].append((i, ref))
 
-    # --- page assembly -------------------------------------------------------
+    seen_hashes: set[str] = set()
     out_spans: list[dict] = []
     page_parts: list[str] = []
-    offset = 0
     for p in pages:
-        texts = [d["text"] for d in kept_text[p] if d["text"]]
-        page_text = PAGE_JOIN.join(texts)
-        figs = [captions[ref] for _, ref in sorted(page_figs[p], key=lambda x: x[0])]
-        part = page_text.strip()
-        if figs:
-            part += FIGURES_OPEN + FIGURES_JOIN.join(figs) + FIGURES_CLOSE
-        if part:
-            page_parts.append(PAGE_MARKER.format(n=p + 1) + part)
-            for d in kept_text[p]:
-                if not d["text"]:
+        kept = []
+        for t in p["texts"]:
+            h = t["hash"]
+            if h is not None:
+                if h in seen_hashes:
                     continue
-                out_spans.append(
-                    {
-                        "kind": d["kind"],
-                        "text": d["text"],
-                        "media_ref": None,
-                        "page": p,
-                        "offset": offset,
-                    }
-                )
-                offset += 1
-            for _, ref in sorted(page_figs[p], key=lambda x: x[0]):
-                out_spans.append(
-                    {
-                        "kind": "figure",
-                        "text": captions[ref],
-                        "media_ref": ref,
-                        "page": p,
-                        "offset": offset,
-                    }
-                )
-                offset += 1
+                seen_hashes.add(h)
+            kept.append(t)
+        # a raster page has no media span, so at most one list is non-empty
+        refs = [m["ref"] for m in p["media"]] + p["rasters"]
+        part = PAGE_JOIN.join(t["text"] for t in kept).strip()
+        if refs:
+            part += FIGURES_OPEN + FIGURES_JOIN.join(captions[r] for r in refs) + FIGURES_CLOSE
+        if not part:
+            continue
+        page_parts.append(PAGE_MARKER.format(n=p["page"] + 1) + part)
+        for t in kept:
+            out_spans.append(
+                {"kind": t["kind"], "text": t["text"], "media_ref": None,
+                 "page": p["page"], "offset": len(out_spans)}
+            )
+        for ref in refs:
+            out_spans.append(
+                {"kind": "figure", "text": captions[ref], "media_ref": ref,
+                 "page": p["page"], "offset": len(out_spans)}
+            )
 
     markdown = PAGE_JOIN.join(page_parts)
     if not markdown:
         # raw fallback (get_full_text semantics): join raw texts, unsanitized
-        raws = [str(d["text"]) for d in norm if d["text"] is not None]
-        markdown = PAGE_JOIN.join(raws)
+        markdown = PAGE_JOIN.join(p["raw"] for p in pages if p["raw"] is not None)
         out_spans = []
     return markdown, out_spans
+
+
+def assemble_document(
+    spans: Sequence,
+    *,
+    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
+    drop_exact_duplicates: bool = True,
+) -> tuple[str, list[dict]]:
+    """Assemble one document. Returns (markdown, output span sequence).
+
+    Output spans carry renumbered 0-based offsets in document order:
+    surviving text spans first within each page (offset order), then one
+    figure span per media occurrence (caption text, original media_ref).
+    """
+    return merge_pages(
+        [
+            page_partial(
+                page, on_page,
+                drop_kinds=drop_kinds, drop_exact_duplicates=drop_exact_duplicates,
+            )
+            for page, on_page in page_spans(spans)
+        ]
+    )
 
 
 def html_spans(raw_html, url=None) -> list[dict]:
@@ -230,10 +275,15 @@ def extract_document(
 
     The HTML-derived spans follow the input spans, so on a (page, offset)
     tie the stable sort in assemble_document keeps input spans first.
-    n_pages is the last assembled page + 1 (0 when nothing assembled)."""
+    n_pages is page_count of the output spans."""
     merged = [*(spans or ()), *html_spans(raw_html, url)]
     markdown, out_spans = assemble_document(
         merged, drop_kinds=drop_kinds, drop_exact_duplicates=drop_exact_duplicates
     )
-    n_pages = max(s["page"] for s in out_spans) + 1 if out_spans else 0
-    return markdown, n_pages, out_spans
+    return markdown, page_count(out_spans), out_spans
+
+
+def page_count(out_spans: Sequence[dict]) -> int:
+    """A document's n_pages: its last assembled page + 1, 0 when nothing
+    assembled."""
+    return max(s["page"] for s in out_spans) + 1 if out_spans else 0

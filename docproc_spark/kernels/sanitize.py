@@ -14,9 +14,7 @@ Order of sanitize steps (each step's output feeds the next):
   7. strip(); drop to "" if fewer than 2 chars remain
 
 The Cc category is exactly C0 (U+0000-U+001F) + DEL (U+007F) + C1
-(U+0080-U+009F), so step 2 is a fixed character class; its ASCII part is
-what the JVM-side ASCII twin (pipeline.sanitize_ascii_col) deletes with
-one F.translate.
+(U+0080-U+009F), so step 2 is a fixed character class.
 
 The gate. On almost every span the five passes of steps 2-6 change
 nothing, so ``sanitize_text`` first searches its NFC text once with
@@ -117,8 +115,7 @@ BOILERPLATE_PATTERNS: list[tuple[str, re.Pattern]] = [
 ]
 
 # p1|…|pn matches exactly where one of the patterns does, so one search
-# with it tells a substantive span (the common case) without the loop,
-# like the JVM twin's probe (pipeline.boilerplate_kind_col)
+# with it tells a substantive span (the common case) without the loop
 _ANY_BOILERPLATE = re.compile(
     "|".join(f"(?:{pat.pattern})" for _, pat in BOILERPLATE_PATTERNS), re.I
 )

@@ -20,16 +20,16 @@ under half its cost, and the kernel sanitizes each textual span once.
 
   Skew: a document is one row and one Python call. A document with more
   than ``mega_doc_threshold`` spans would be a straggler task, so extract()
-  routes it to pipeline_salted, a relational two-phase plan that spreads
-  one document's spans across tasks. A parquet scan whose footers prove
-  that no document crosses the threshold gets the single map with no job
-  (_footer_bound). A derived input (a load_files parse) is staged once
-  first (_staged), so it is parsed once and routed on its real span
-  count. The rest of this module serves that path, the staging
-  and the operators: the derived-span, explode and enrichment Columns
-  (built once per SparkContext, _program), the JVM-side sanitize and
-  boilerplate classifier, the kernel's sanitize for non-ASCII spans
-  (sanitize_twice_udf) and the Python-whitespace helpers.
+  routes it to pipeline_salted, which runs the same kernel in two phases
+  (page partials per (doc, page), then a merge per document) so that one
+  document's spans spread across tasks. A parquet scan whose footers
+  prove that no document crosses the threshold gets the single map with
+  no job (_footer_bound). A derived input (a load_files parse) is staged
+  once first (_staged), so it is parsed once and routed on its real span
+  count. The rest of this module serves that routing, the staging and
+  the operators: the derived span array (derived_spans, with the masked
+  html_spans_udf), the per-SparkContext memo of Columns and pandas UDFs
+  (_program) and the Python-whitespace Column helpers.
 """
 
 from __future__ import annotations
@@ -47,19 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from docproc_spark.kernels.assembly import (
-    MEDIA_KINDS,
-    RASTER_KIND,
-    TEXTUAL_KINDS,
-    extract_document,
-    html_spans,
-)
-from docproc_spark.kernels.sanitize import (
-    BOILERPLATE_PATTERNS,
-    DROP_KINDS_DEFAULT,
-    TITLE_MAX_LEN,
-    sanitize_text,
-)
+from docproc_spark.kernels.assembly import extract_document, html_spans
+from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
 from docproc_spark.partition import INTROSPECTION_ERRORS, fast_path_disabled
 from docproc_spark.schema import OUT_SPAN_STRUCT, SPAN_STRUCT
 
@@ -98,67 +87,9 @@ def context_pandas_udf(return_type: T.DataType) -> Callable[[Callable], ContextP
     return lambda func: ContextPandasUDF(func, return_type)
 
 
-@context_pandas_udf(
-    T.StructType(
-        [T.StructField("sanitized", T.StringType()),
-         T.StructField("resanitized", T.StringType())]
-    )
-)
-def sanitize_twice_udf(s: pd.Series) -> pd.DataFrame:
-    """sanitize_text of each element of one Arrow batch, and sanitize_text
-    of that: the text ``boilerplate_kind(sanitized)`` classifies. A null
-    element stays null, so a batch masked down to its non-ASCII rows
-    (enrich_spans) costs Python calls for those rows only."""
-    once = s.map(sanitize_text, na_action="ignore")
-    return pd.DataFrame(
-        {"sanitized": once, "resanitized": once.map(sanitize_text, na_action="ignore")}
-    )
-
-
 @context_pandas_udf(T.ArrayType(SPAN_STRUCT))
 def html_spans_udf(raw_html: pd.Series, url: pd.Series) -> pd.Series:
     return pd.Series([html_spans(h, u) for h, u in zip(raw_html, url)], dtype=object)
-
-
-# ---------------------------------------------------------------------------
-# Native sanitize for ASCII rows (JVM-side; Python only for non-ASCII)
-# ---------------------------------------------------------------------------
-# Control characters the sanitize chain deletes (NOT \t \n \r — \t feeds
-# the space-collapse, \n survives, \r is edge-trimmed only). Expressed as
-# a literal char set for F.translate: a linear no-regex pass, measured
-# ~2x cheaper than the regexp_replace char-class it replaces on the bench
-# corpus (the sanitize map stage dominated the span-exploding plan).
-_CTRL_STRIP = "".join(
-    chr(c)
-    for c in [*range(0x00, 0x09), 0x0B, 0x0C, *range(0x0E, 0x20), 0x7F]
-)
-
-
-def sanitize_ascii_col(text: Column) -> Column:
-    """The sanitize chain for ASCII input, where NFC and zero-width
-    stripping are no-ops — the one JVM-side twin of the Python kernel
-    (kernels/sanitize.py), kept for speed and hypothesis-tested against it.
-
-    Cheap primitives carry the endpoints: F.translate (linear scan, no
-    regex) deletes control chars, and F.btrim with the explicit set
-    " \\n\\r" replaces the two anchored ^\\s+/\\s+$ regexes — after the
-    collapse passes the only whitespace that can touch an edge IS
-    {space, \\n, \\r} (\\t collapsed to space, \\x0b/\\x0c deleted), so
-    the set-trim strips exactly what Java \\s+ did, without the
-    whole-string backtracking scan \\s+$ costs.
-
-    (r6 note: probe-gating each collapse regex on literal contains() of
-    its trigger substring was tried and MEASURED SLOWER — the nested
-    conditional chain defeats codegen subexpression elimination and the
-    shared subtree re-evaluates per branch, 2.3 s → 6.8 s on the sf0.1
-    map stage. The straight chain stays.)"""
-    s = F.coalesce(text, F.lit(""))
-    s = F.translate(s, _CTRL_STRIP, "")
-    s = F.regexp_replace(s, r"[ \t]+", " ")
-    s = F.regexp_replace(s, r" *\n *", "\n")
-    s = F.regexp_replace(s, r"\n{3,}", "\n\n")
-    s = F.btrim(s, F.lit(" \n\r"))
-    return F.when(F.length(s) < 2, F.lit("")).otherwise(s)
 
 
 # ---------------------------------------------------------------------------
@@ -185,54 +116,7 @@ def has_nonblank_col(c: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Native boilerplate classifier (JVM-side; mirrors kernels.sanitize patterns)
-# ---------------------------------------------------------------------------
-def boilerplate_kind_col(sanitized: Column) -> Column:
-    """CASE chain over the invariant pattern list — whole-stage codegen.
-
-    (?iU): the oracle matches with Python \\s (Unicode-aware); sanitized
-    text cannot contain Cc chars, so UNICODE_CHARACTER_CLASS makes Java \\s
-    exactly equal on this input. first_line is python-stripped (leading
-    NBSP etc. must not defeat the ^-anchored patterns).
-
-    Gated on ONE combined-alternation probe: rlike(p1|…|pn) ≡ rlike(p1) |
-    … | rlike(pn), so `when(probe, <per-pattern chain>)` is semantically
-    identical to the bare chain while the common case (a substantive span)
-    pays 2 regex scans instead of 2×n — the bare chain was ~half of the
-    post-shuffle wall of an earlier span-exploding extract plan (measured
-    4.4 s of a ~9 s sf0.1 run).
-
-    first_line / n_lines use literal string ops (substring_index; a
-    replace-based newline count) instead of regexp_extract + regex
-    split — same values including NULL propagation, no regex engine.
-    (r6 note: adding a `sanitized != first_line` guard before the
-    whole-text rlike is a pure logic identity but measured SLOWER — for
-    1-line spans the "saved" full-text scan is the same bytes as the
-    first-line scan, while the extra first_line references re-evaluate
-    the pystrip regexes outside CSE. Left as the plain disjunction.)"""
-    first_line = pystrip_col(F.substring_index(sanitized, "\n", 1))
-    n_lines = (
-        F.length(sanitized) - F.length(F.replace(sanitized, F.lit("\n"))) + 1
-    )
-    combined = "(?iU)(?:" + "|".join(p.pattern for _, p in BOILERPLATE_PATTERNS) + ")"
-    probe = first_line.rlike(combined) | ((n_lines <= 2) & sanitized.rlike(combined))
-    chain = None
-    for kind, pat in BOILERPLATE_PATTERNS:
-        jre = "(?iU)" + pat.pattern
-        cond = first_line.rlike(jre) | ((n_lines <= 2) & sanitized.rlike(jre))
-        chain = F.when(cond, F.lit(kind)) if chain is None else chain.when(cond, F.lit(kind))
-    tail = F.when(
-        (F.length(sanitized) < TITLE_MAX_LEN) & (n_lines <= 1), F.lit("title")
-    ).otherwise(F.lit("none"))
-    return (
-        F.when((sanitized == "") | (first_line == ""), F.lit("blank"))
-        .when(probe, F.coalesce(chain, tail))
-        .otherwise(tail)
-    )
-
-
-# ---------------------------------------------------------------------------
-# The Column program, built once per SparkContext
+# Columns and pandas UDFs, built once per SparkContext
 # ---------------------------------------------------------------------------
 _PROGRAM: dict = {}
 _PROGRAM_CONTEXT: SparkContext | None = None
@@ -244,9 +128,8 @@ def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
     SparkContext.
 
     Building a Column costs ~16 py4j round trips per Column-function call
-    (name lookups and PySpark's call-site bookkeeping), thousands for the
-    salted path's derive/explode/enrich program, while a Column is an
-    immutable, unresolved expression that any DataFrame can take.
+    (name lookups and PySpark's call-site bookkeeping), while a Column is
+    an immutable, unresolved expression that any DataFrame can take.
     The entries belong to the SparkContext they were built under and are
     all dropped when it changes, so a new context never plans with JVM
     objects made for a stopped one. Under Spark Connect there is no
@@ -267,39 +150,25 @@ def _program(key: tuple | str, build: Callable[[], Any]) -> Any:
 
 
 # ---------------------------------------------------------------------------
-# Per-span Columns of the salted path (pipeline_salted) and of _staged
+# The span array of the salted path (pipeline_salted) and of _staged
 # ---------------------------------------------------------------------------
-def derived_spans(docs: DataFrame, *, sentinel: bool = False) -> Column:
+def derived_spans(docs: DataFrame) -> Column:
     """The input spans followed by the HTML-derived spans of ``raw_html``
-    (kernels.assembly.html_spans), in extract_document's merge order, then
-    the sentinel when asked for; an empty array where a document has
-    neither. Canonical span-only tables (the engine's input contract is
-    just (doc_id, spans)) have no raw_html column and keep their spans; the
-    page URL (WARC tables carry one) anchors relative image srcs, tables
-    without it keep verbatim-ref identity."""
+    (kernels.assembly.html_spans), in extract_document's merge order; an
+    empty array where a document has neither. Canonical span-only tables
+    (the engine's input contract is just (doc_id, spans)) have no raw_html
+    column and keep their spans; the page URL (WARC tables carry one)
+    anchors relative image srcs, tables without it keep verbatim-ref
+    identity."""
     has_html_col = "raw_html" in docs.columns
     has_url_col = has_html_col and "url" in docs.columns
     return _program(
-        ("derived_spans", has_html_col, has_url_col, sentinel),
-        lambda: _derived_spans_col(has_html_col, has_url_col, sentinel),
+        ("derived_spans", has_html_col, has_url_col),
+        lambda: _derived_spans_col(has_html_col, has_url_col),
     )
 
 
-def with_derived_spans(docs: DataFrame) -> DataFrame:
-    """derived_spans with a sentinel appended, as the ``spans`` column.
-
-    The sentinel (null-text unclassified span) guarantees every doc_id
-    yields at least one exploded row, so the whole input flows through the
-    salted plan to its doc-level merge — no separate "empty doc" branch,
-    which would re-scan the source and re-run the HTML UDF just to find
-    zero-span docs. The sentinel is inert downstream: it never survives
-    sanitize, never counts as raw text, media, or raster, and the raw-text
-    fallback filters its null text.
-    """
-    return docs.withColumn("spans", derived_spans(docs, sentinel=True))
-
-
-def _derived_spans_col(has_html_col: bool, has_url_col: bool, sentinel: bool) -> Column:
+def _derived_spans_col(has_html_col: bool, has_url_col: bool) -> Column:
     empty = F.array().cast(_OUT_SPANS_T)
     parts = [F.coalesce(F.col("spans"), empty)]
     if has_html_col:
@@ -308,126 +177,7 @@ def _derived_spans_col(has_html_col: bool, has_url_col: bool, sentinel: bool) ->
         parts.append(
             F.when(has_html, html_spans_udf(F.col("raw_html"), url_col)).otherwise(empty)
         )
-    if sentinel:
-        parts.append(
-            F.array(
-                F.struct(
-                    F.lit("unclassified").alias("kind"),
-                    F.lit(None).cast("string").alias("text"),
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(0).cast("int").alias("page"),
-                    F.lit(-1).cast("int").alias("offset"),
-                )
-            )
-        )
     return F.concat(*parts) if len(parts) > 1 else parts[0]
-
-
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """One row per span. ``pos`` = position in the span array — the oracle
-    sorts with a STABLE sort, so input order is the tie-break for spans
-    with colliding (page, offset) (user spans vs HTML-derived spans at the
-    same offsets); pos reproduces that exactly. Null OR EMPTY kind
-    defaults to 'text' — the oracle normalizes with `or "text"`
-    (assembly.py:75), which catches '' too; a bare coalesce would leave
-    an empty-string kind in neither the textual nor the media set and
-    silently diverge on dirty external span tables. Null page/offset → 0."""
-    exploded, flat = _program("explode", _explode_cols)
-    return docs.select(*exploded).select(*flat)
-
-
-def _explode_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
-    return (
-        (F.col("doc_id"), F.posexplode("spans").alias("pos", "s")),
-        (
-            F.col("doc_id"),
-            F.coalesce(F.nullif(F.col("s.kind"), F.lit("")), F.lit("text")).alias(
-                "kind"
-            ),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.coalesce(F.col("s.page"), F.lit(0)).alias("page"),
-            F.coalesce(F.col("s.offset"), F.lit(0)).alias("offset"),
-            F.col("pos").cast("int").alias("pos"),
-        ),
-    )
-
-
-def enrich_spans(rows: DataFrame) -> DataFrame:
-    """Narrow (no-shuffle) per-span enrichment of exploded rows: the
-    sanitized text, the boilerplate class and the classification booleans,
-    as one struct ``s`` that pipeline_salted flattens.
-
-    Sanitize and boilerplate class are the kernels' (``sanitize_text`` and
-    ``boilerplate_kind`` of its result, which sanitizes again). An ASCII
-    span is sanitized by the JVM twin inside whole-stage codegen
-    (sanitize_ascii_col), and the result is its own sanitize. A non-ASCII
-    span is sanitized by the kernel in sanitize_twice_udf: NFC needs
-    unicodedata, and its sanitized text may not be its own sanitize
-    (kernels/sanitize.py, fixed points), so the UDF returns the second
-    pass too. The JVM twin boilerplate_kind_col then classifies the
-    second pass where there is one and the sanitized text elsewhere. This
-    keeps Python worker traffic ~proportional to the non-ASCII fraction,
-    which lets the stage scale past ~cores/2 threads in local mode (JVM
-    task threads and Python workers both want a core).
-
-    Catalyst extracts a Python UDF out of a CASE branch and evaluates it
-    for EVERY row, so the UDF's input is masked to null outside the
-    non-ASCII textual rows, and the Arrow crossing carries ~no bytes for
-    the common case. ASCII detection is octet_length != char_length (a
-    char > U+007F is exactly a multi-byte UTF-8 sequence): two counter
-    reads, no regex scan.
-
-    Classification follows the oracle: any media-KIND span counts for
-    per-page image enumeration even with a null/empty ref
-    (kernels/assembly.py enumerates every media span), while ref-less
-    RASTERS are inert (assembly skips ''/null refs before captioning)."""
-    nx, san, s = _program("enrich", _enrich_cols)
-    # _nx (the UDF's struct) and _san staged as real columns: each feeds
-    # more than one expression above it, and a multi-use non-cheap alias
-    # blocks CollapseProject from inlining — the UDF and the JVM sanitize
-    # chain run once per row, and the consumers read attributes (the
-    # hash_embed lesson)
-    return rows.withColumn("_nx", nx).withColumn("_san", san).select("doc_id", s)
-
-
-def _enrich_cols() -> tuple[Column, Column, Column]:
-    """enrich_spans's ``_nx`` and ``_san`` columns and ``s`` struct."""
-    is_textual = F.col("kind").isin(*TEXTUAL_KINDS)
-    is_media = F.col("kind").isin(*MEDIA_KINDS)
-    is_raster = (
-        (F.col("kind") == RASTER_KIND)
-        & F.col("media_ref").isNotNull()
-        & (F.col("media_ref") != "")
-    )
-    text = F.col("text")
-    in_python = is_textual & (F.octet_length(text) != F.length(text))
-    nx = sanitize_twice_udf(F.when(in_python, text))
-    # the UDF's fields are non-null exactly on the in_python rows
-    san = F.when(
-        is_textual, F.coalesce(F.col("_nx.sanitized"), sanitize_ascii_col(text))
-    )
-    return nx, san, F.struct(
-        F.col("page"),
-        F.col("offset"),
-        F.col("pos"),
-        F.col("kind"),
-        F.col("text"),
-        F.col("_san").alias("sanitized"),
-        F.col("media_ref"),
-        is_textual.alias("is_textual"),
-        is_media.alias("is_media"),
-        is_raster.alias("is_raster"),
-        # the coalesce is the classifier's input, not a fallback around
-        # it: in a coalesce branch its repeated subexpressions are not
-        # shared by codegen (measured: 20-30% more JVM CPU per salted call)
-        boilerplate_kind_col(F.coalesce(F.col("_nx.resanitized"), F.col("_san"))).alias(
-            "bp"
-        ),
-        # bool(text.strip()) — F.trim strips ASCII space ONLY and would
-        # let whitespace-only raw text block the raster fallback
-        (is_textual & has_nonblank_col(F.col("text"))).alias("raw_nonblank"),
-    ).alias("s")
 
 
 # ---------------------------------------------------------------------------
@@ -703,14 +453,7 @@ def extract(
     if "raw_html" in docs.columns:
         # the page URL (WARC tables carry one) anchors relative image srcs
         cols += ["raw_html"] + (["url"] if "url" in docs.columns else [])
-    out_schema = T.StructType(
-        [
-            docs.schema["doc_id"],
-            T.StructField("markdown", T.StringType()),
-            T.StructField("n_pages", T.IntegerType()),
-            T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT)),
-        ]
-    )
+    out_schema = extract_schema(docs.schema["doc_id"])
     arrow_schema = to_arrow_schema(out_schema)
     drop_kinds, drop_exact_duplicates = frozenset(drop_kinds), bool(drop_exact_duplicates)
 
@@ -718,6 +461,18 @@ def extract(
         return _extract_batches(batches, arrow_schema, drop_kinds, drop_exact_duplicates)
 
     return docs.select(*cols).mapInArrow(extract_documents, out_schema)
+
+
+def extract_schema(doc_id: T.StructField) -> T.StructType:
+    """The schema of extract's result, with the input's ``doc_id`` field."""
+    return T.StructType(
+        [
+            doc_id,
+            T.StructField("markdown", T.StringType()),
+            T.StructField("n_pages", T.IntegerType()),
+            T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT)),
+        ]
+    )
 
 
 def _extract_batches(

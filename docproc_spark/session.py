@@ -127,12 +127,11 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
         # below every explode; predicate pushdown then re-inlines the
-        # generator's defining expression into that filter — for the
-        # salted extract path that re-embeds the HTML pandas UDF, running
-        # it TWICE per document (observed as a second ArrowEvalPython node).
-        # The filter is a pure optimization (Generate with outer=false
-        # drops empty/null arrays itself) and the derived span array is
-        # never empty anyway (sentinel span), so excluding the rule is
+        # generator's defining expression into that filter — over a span
+        # array built by the HTML pandas UDF that runs the UDF TWICE per
+        # document (observed as a second ArrowEvalPython node). The filter
+        # is a pure optimization (Generate with outer=false drops
+        # empty/null arrays itself), so excluding the rule is
         # semantics-free and halves the HTML kernel cost.
         .config(
             "spark.sql.optimizer.excludedRules",

@@ -207,50 +207,6 @@ def test_html_unclosed_ignore_tag_recovers_on_ancestor_close():
     assert not any(t and "menu one" in t for _, t, _ in blocks)
 
 
-class TestJvmSanitizeParity:
-    def test_jvm_ascii_chain_matches_python_kernel(self, spark):
-        """sanitize_ascii_col, the JVM ASCII path (translate + collapse
-        regexes + set-btrim) must equal the Python kernel byte-for-byte
-        on adversarial ASCII: every control char, CR/LF mixes, edge
-        whitespace runs, and the length<2 blanking."""
-        from pyspark.sql import functions as F
-
-        from docproc_spark.pipeline import sanitize_ascii_col
-
-        cases = [
-            "",
-            "x",
-            "ab",
-            "a  \t b",
-            "a\n\n\n\n\nb",
-            " leading and trailing \n",
-            "\r\nline one\r\nline two\r\n",
-            "\rcarriage only\r",
-            "a \r",
-            "mix \x0b\x0c\x00\x07 ctl",
-            "\t\t\ttabs\t\t\t",
-            "sp    sp",
-            "a \n b \n\n c",
-            "\n\n\n",
-            " \r\n \t ",
-            "a" + "\x7f" + "b",
-            "end with space ",
-            " start with space",
-            "interior\rreturn",
-            "interior\r\nreturn",
-            "a\n \n \nb",
-        ] + [f"c{chr(c)}d" for c in range(0x00, 0x20)] + [
-            f"{chr(c)}edge{chr(c)}" for c in range(0x00, 0x20)
-        ]
-        df = spark.createDataFrame([(i, s) for i, s in enumerate(cases)], "i long, text string")
-        got = {
-            r["i"]: r["z"]
-            for r in df.select("i", sanitize_ascii_col(F.col("text")).alias("z")).collect()
-        }
-        for i, s in enumerate(cases):
-            assert got[i] == sanitize_text(s), (i, repr(s), repr(got[i]), repr(sanitize_text(s)))
-
-
 def test_html_unclosed_anchor_releases_link_state():
     """An <a> implicitly closed by its block's endtag must release
     _link_depth — previously all later text counted as link chars and

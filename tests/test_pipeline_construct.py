@@ -157,8 +157,7 @@ from docproc_spark import corpus, pipeline
 from docproc_spark.functions import text
 from docproc_spark.session import get_spark
 
-UDFS = {"sanitize_twice_udf": pipeline.sanitize_twice_udf,
-        "html_spans_udf": pipeline.html_spans_udf,
+UDFS = {"html_spans_udf": pipeline.html_spans_udf,
         "lang_id_ngram_udf": text.lang_id_ngram_udf,
         "_mojibake_fix_udf": text._mojibake_fix_udf}
 n, seed = int(sys.argv[1]), int(sys.argv[2])
@@ -186,7 +185,7 @@ print("RESULT " + json.dumps(runs))
 def test_new_context_in_same_jvm_rebuilds_the_program(tmp_path):
     n, seed = 90, 37
     rows = [corpus.gen_doc(i, seed=seed, mega_spans=200) for i in range(n)]
-    # the sample takes both Python UDFs: HTML parsing and non-ASCII sanitize
+    # the sample holds HTML pages and non-ASCII spans
     assert any(d["raw_html"] for d in rows)
     assert any(
         s["text"] and not s["text"].isascii() for d in rows for s in d["spans"] or []

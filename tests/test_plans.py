@@ -41,10 +41,17 @@ def test_extract_is_single_pass(spark, tmp_path):
     # with the r4 stats probe, the DEFAULT plan for a no-mega-doc corpus
     # is the same single-pass shape (dead salted branch elided)
     assert_one_arrow_map(extract(docs))
-    # probe disabled → the static routed plan carries the salted branch
-    # (top-level split + the salted path's internal unions)
-    s3 = plan_summary(extract(docs, probe_routing=False))
+    # probe disabled → the static routed plan carries the salted branch:
+    # two grouped Arrow maps (page partials, document merge), no join or
+    # window, and no Python UDF but the masked pandas html_spans_udf
+    routed = extract(docs, probe_routing=False)
+    s3 = plan_summary(routed)
     assert s3["unions"] >= 1
+    plan = _plan(routed)
+    assert plan.count("FlatMapGroupsInArrow") == 2, plan
+    assert "Join" not in plan
+    assert s3["windows"] == 0
+    assert "BatchEvalPython" not in plan
 
 
 def test_parquet_scan_pushdown(spark):

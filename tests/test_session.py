@@ -67,13 +67,14 @@ def test_udfs_defined_outside_the_package_run(spark):
 # so the zip it ships late stays out of the shared `spark` fixture.
 _JOB = r'''
 import json, sys, uuid, zipfile
-from docproc_spark.pipeline import sanitize_twice_udf
+from docproc_spark.pipeline import html_spans_udf
 from docproc_spark.session import get_spark
 
 spark = get_spark(master="local[1]", shuffle_partitions=1)
 sc = spark.sparkContext
-df = spark.createDataFrame([("Café",), (None,)], "t string")
-sanitized = [r[0]["sanitized"] for r in df.select(sanitize_twice_udf("t")).collect()]
+page = "<html><body><p>A paragraph of a page, long enough to keep.</p></body></html>"
+df = spark.createDataFrame([(page, None), (None, None)], "h string, u string")
+texts = [[s["text"] for s in r[0]] for r in df.select(html_spans_udf("h", "u")).collect()]
 
 probe = _zip_rereads
 (shipped,) = sc.parallelize([0], 1).mapPartitions(probe).collect()
@@ -91,7 +92,7 @@ def load(it):
            "archive": mod.__spec__.loader.archive}
 
 late, loaded = sc.parallelize([0], 1).mapPartitions(load).collect()
-print("RESULT " + json.dumps({"sanitized": sanitized, "shipped": shipped,
+print("RESULT " + json.dumps({"texts": texts, "shipped": shipped,
                               "late": late, "loaded": loaded}))
 spark.stop()
 '''
@@ -119,7 +120,7 @@ def test_package_shipped_only_with_py_files(tmp_path):
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
     got = json.loads(lines[-1][len("RESULT "):])
 
-    assert got["sanitized"] == ["Café", None]
+    assert got["texts"] == [["A paragraph of a page, long enough to keep."], []]
     # docproc_spark came from the --py-files copy and is still re-read per
     # task; pyspark.zip, on the path since the worker started, is not
     sh = got["shipped"]
