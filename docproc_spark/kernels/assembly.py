@@ -17,24 +17,37 @@ reference extractor's deterministic text path:
   - raw-text fallback            (vision_llm.py:540-541 → pdf_loader.py:56-61: if nothing
                                   assembled, join raw span texts with "\n\n")
 
-assemble_document is two phases. page_partial does each page's own work
-(sanitize, boilerplate drop, content hash, media ordinals, the raster-page
-test, the page's raw text); merge_pages does the document-wide work over
-the page partials, in any order (first-wins dedupe across pages,
-first-sighting captions, raster captions, page assembly, the raw-text
-fallback). The Arrow map of whole documents and the oracle call
-assemble_document, which runs both phases in one call; the salted plan for
-mega-documents (pipeline_salted) runs page_partial per (doc, page) group
-and merge_pages per document, in different tasks.
+The kernel runs on a document's spans as parallel field sequences
+(kinds, texts, refs, pages), ordered by (page, offset) with ties in input
+order, so a page is a run of equal pages. It is two phases. page_partial
+does one run's own work (sanitize, boilerplate drop, media ordinals, the
+raster-page test, the page's raw text); merge_pages does the
+document-wide work over the page partials, in any order (first-wins
+dedupe across pages, first-sighting captions, raster captions, page
+assembly, the raw-text fallback) and appends the output spans to an
+OutSpans. The dedupe key is the sanitized text itself: two texts have
+equal sha256s (the reference's key) exactly when they are equal, barring
+a collision.
 
-extract_document is the whole per-document extraction the engine runs (the
-Spark pipeline maps it over Arrow batches of whole documents) and the oracle
-calls: HTML-derived spans appended to the input spans, assemble_document,
-and the page count.
+The Arrow map of whole documents (pipeline._extract_batches) flattens a
+whole batch's span fields, sorts them once and runs both phases per
+document over slices of the batch's lists, with a verdict per span from
+kernels.sanitize.unchanged_gates: where a batch gate proves that
+sanitize leaves a text unchanged and how it classifies, page_partial
+skips the scalar calls. The salted plan for mega-documents
+(pipeline_salted) runs page_partial per (input row, page) group and
+merge_pages per input row, in different tasks.
 
-Input spans are mappings or attribute objects (Spark Rows) with fields
-(kind, text, media_ref, page, offset); a None span reads as all-null fields,
-the way the salted path reads a null array element.
+extract_document and assemble_document are the scalar adapter the oracle
+calls: they unzip one document's spans (unzip_spans) and run the same two
+phases with no verdicts, so every span takes the scalar functions and the
+oracle keeps checking the gated engine against them.
+extract_document appends the HTML-derived spans to the input spans, and
+returns the page count too.
+
+The adapter's input spans are mappings or attribute objects (Spark Rows)
+with fields (kind, text, media_ref, page, offset); a None span reads as
+all-null fields, the way the Arrow paths read a null element.
 Kinds: textual = {text, table, equation, header, footer, handwriting,
 unclassified}; media = {image, figure}; raster = {raster} (an empty page that
 exists only as a page bitmap).
@@ -49,7 +62,8 @@ from docproc_spark.kernels.captions import caption_stub
 from docproc_spark.kernels.html import html_main_blocks
 from docproc_spark.kernels.sanitize import (
     DROP_KINDS_DEFAULT,
-    content_hash,
+    GATE_DROP,
+    GATE_NONE,
     sanitize_text,
     sanitized_boilerplate_kind,
 )
@@ -69,9 +83,201 @@ FIGURES_CLOSE = "]"
 PAGE_MARKER = "[Page {n}]\n"
 PAGE_JOIN = "\n\n"
 
+# (kinds, texts, refs, pages): parallel span field sequences, ordered by
+# (page, offset) within a document
+Fields = tuple[Sequence, Sequence, Sequence, Sequence]
+
+
+class OutSpans:
+    """Output spans as parallel field lists (kind, text, media_ref, page),
+    appended document after document; a span's offset is its position
+    within its document."""
+
+    __slots__ = ("kind", "text", "media_ref", "page")
+
+    def __init__(self):
+        self.kind: list = []
+        self.text: list = []
+        self.media_ref: list = []
+        self.page: list = []
+
+    def __len__(self) -> int:
+        return len(self.kind)
+
+    def rows(self) -> list[dict]:
+        """The spans as dicts, for a single document's OutSpans."""
+        return [
+            {"kind": k, "text": t, "media_ref": r, "page": p, "offset": i}
+            for i, (k, t, r, p) in enumerate(
+                zip(self.kind, self.text, self.media_ref, self.page)
+            )
+        ]
+
+
+def page_partial(
+    page: int,
+    fields: Fields,
+    lo: int,
+    hi: int,
+    verdicts: Optional[Sequence[int]] = None,
+    *,
+    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
+) -> dict:
+    """The work of one page that needs no other page.
+
+    The page's spans are [lo, hi) of ``fields``, in (offset, input) order.
+    A null or empty kind reads as "text". ``verdicts`` (one per span of
+    ``fields``, kernels.sanitize.unchanged_gates) lets a textual span
+    skip sanitize and the classifier where a batch gate decided them;
+    without it every span takes the scalar functions. The partial holds:
+
+      page        the page number
+      kinds,      the textual spans that survive sanitize and the
+      texts       boilerplate drop with non-empty text, in order: their
+                  kinds and sanitized texts
+      media_idx,  per media span with a ref: its 0-based ordinal among ALL
+      media_refs  media spans of the page, ref-less ones included (the
+                  first-sighting context counts them), and its ref
+      rasters     the refs of the page's raster spans when the page
+                  qualifies for the full-page caption: no textual span
+                  with non-blank raw text and no media span
+      raw         the page's non-null raw texts joined by "\n\n", None
+                  when it has none or when the page has texts, media or
+                  rasters: then the document assembles some output, and
+                  the raw-text fallback is never read
+    """
+    kinds, texts, refs, _ = fields
+    text_kinds: list = []
+    kept: list = []
+    media_idx: list = []
+    media_refs: list = []
+    n_media = 0
+    has_raw_text = False
+    for i in range(lo, hi):
+        kind = kinds[i] or "text"
+        if kind in TEXTUAL_KINDS:
+            text = texts[i]
+            if verdicts is None or verdicts[i] == GATE_NONE:
+                has_raw_text = has_raw_text or bool(text and str(text).strip())
+                text = sanitize_text(text)
+                if not text or sanitized_boilerplate_kind(text) in drop_kinds:
+                    continue
+            else:
+                # a gate proved sanitize_text(text) == text, a non-blank text
+                has_raw_text = True
+                if verdicts[i] == GATE_DROP:
+                    continue
+            text_kinds.append(kind)
+            kept.append(text)
+        elif kind in MEDIA_KINDS:
+            if refs[i]:
+                media_idx.append(n_media)
+                media_refs.append(refs[i])
+            n_media += 1
+    rasters = []
+    if not has_raw_text and not n_media:
+        rasters = [refs[i] for i in range(lo, hi) if kinds[i] == RASTER_KIND and refs[i]]
+    raw = None
+    if not (kept or media_refs or rasters):
+        raws = [str(texts[i]) for i in range(lo, hi) if texts[i] is not None]
+        raw = PAGE_JOIN.join(raws) if raws else None
+    return {
+        "page": page, "kinds": text_kinds, "texts": kept, "media_idx": media_idx,
+        "media_refs": media_refs, "rasters": rasters, "raw": raw,
+    }
+
+
+def page_partials(
+    fields: Fields,
+    lo: int = 0,
+    hi: Optional[int] = None,
+    verdicts: Optional[Sequence[int]] = None,
+    *,
+    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
+) -> list[dict]:
+    """page_partial over each page run of the document [lo, hi) of
+    ``fields`` (all of it by default)."""
+    pages = fields[3]
+    hi = len(pages) if hi is None else hi
+    partials = []
+    while lo < hi:
+        page, end = pages[lo], lo + 1
+        while end < hi and pages[end] == page:
+            end += 1
+        partials.append(page_partial(page, fields, lo, end, verdicts, drop_kinds=drop_kinds))
+        lo = end
+    return partials
+
+
+def merge_pages(
+    partials: Sequence[dict], out: OutSpans, *, drop_exact_duplicates: bool = True
+) -> str:
+    """The document-wide work over page_partial's partials, given in any
+    order. Appends the document's output spans to ``out`` and returns its
+    markdown.
+
+    In page order: first-wins exact dedupe across pages, one caption per
+    media ref with the context of its first sighting, full-page captions
+    for the refs of raster pages that no media span captioned ("Page N of
+    total", total = the last page with any span + 1), then page assembly
+    and the raw-text fallback. Output spans carry, per page, the
+    surviving text spans (offset order), then one figure span per media
+    occurrence (caption text, original media_ref)."""
+    pages = sorted(partials, key=lambda p: p["page"])
+    total_pages = pages[-1]["page"] + 1 if pages else 0
+
+    captions: dict[str, str] = {}
+    for p in pages:
+        for idx, ref in zip(p["media_idx"], p["media_refs"]):
+            if ref not in captions:
+                ctx = FIRST_SIGHT_CTX.format(page=p["page"] + 1, idx=idx + 1)
+                captions[ref] = caption_stub(ref, ctx)
+    for p in pages:
+        for ref in p["rasters"]:
+            if ref not in captions:
+                ctx = RASTER_CTX.format(page=p["page"] + 1, total=total_pages)
+                captions[ref] = caption_stub(ref, ctx)
+
+    seen: set[str] = set()
+    page_parts: list[str] = []
+    for p in pages:
+        kinds, texts = p["kinds"], p["texts"]
+        if drop_exact_duplicates and texts:
+            first = []
+            for i, t in enumerate(texts):
+                if t not in seen:
+                    seen.add(t)
+                    first.append(i)
+            if len(first) < len(texts):
+                kinds, texts = [kinds[i] for i in first], [texts[i] for i in first]
+        # a raster page has no media span, so at most one list is non-empty
+        refs = p["media_refs"] + p["rasters"]
+        part = PAGE_JOIN.join(texts).strip()
+        figures = [captions[r] for r in refs]
+        if figures:
+            part += FIGURES_OPEN + FIGURES_JOIN.join(figures) + FIGURES_CLOSE
+        if not part:
+            continue
+        page_parts.append(PAGE_MARKER.format(n=p["page"] + 1) + part)
+        out.kind += kinds
+        out.kind += ["figure"] * len(refs)
+        out.text += texts
+        out.text += figures
+        out.media_ref += [None] * len(texts)
+        out.media_ref += refs
+        out.page += [p["page"]] * (len(texts) + len(refs))
+
+    markdown = PAGE_JOIN.join(page_parts)
+    if not markdown:
+        # raw fallback (get_full_text semantics): join raw texts,
+        # unsanitized. No page added a span: a page's spans come with its
+        # non-empty part.
+        markdown = PAGE_JOIN.join(p["raw"] for p in pages if p["raw"] is not None)
+    return markdown
+
 
 def _span_get(s, field: str):
-    # exact dict first: Arrow-decoded spans are dicts, and the Mapping ABC
+    # exact dict first: the oracle's spans are dicts, and the Mapping ABC
     # check costs several times more than the read itself
     if type(s) is dict or isinstance(s, Mapping):
         return s.get(field)
@@ -80,149 +286,20 @@ def _span_get(s, field: str):
     return getattr(s, field)
 
 
-def page_spans(spans: Sequence) -> list[tuple[int, list[dict]]]:
-    """Normalized spans grouped by page: (page, spans) in page order, each
-    page's spans in (offset, input) order.
-
-    A null or empty kind reads as "text", a null page or offset as 0. The
-    sort is stable, so spans that tie on (page, offset) keep their input
-    order."""
-    norm = []
-    for s in spans:
-        norm.append(
-            {
-                "kind": _span_get(s, "kind") or "text",
-                "text": _span_get(s, "text"),
-                "media_ref": _span_get(s, "media_ref"),
-                "page": int(_span_get(s, "page") or 0),
-                "offset": int(_span_get(s, "offset") or 0),
-            }
-        )
-    norm.sort(key=lambda d: (d["page"], d["offset"]))
-    # group once — per-page list comprehensions over the full span list
-    # would be O(pages × spans), hopeless on a 10^6-span mega-doc
-    by_page: dict[int, list[dict]] = {}
-    for d in norm:
-        by_page.setdefault(d["page"], []).append(d)
-    return list(by_page.items())
-
-
-def page_partial(
-    page: int,
-    spans: Sequence[dict],
-    *,
-    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
-    drop_exact_duplicates: bool = True,
-) -> dict:
-    """The work of one page that needs no other page.
-
-    ``spans`` are the page's normalized spans (page_spans) in (offset,
-    input) order. The partial holds:
-
-      page     the page number
-      texts    the textual spans that survive sanitize and the boilerplate
-               drop with non-empty text, in order: {kind, text (sanitized),
-               hash (content_hash, None when exact duplicates are kept)}
-      media    {idx, ref} per media span with a ref; idx is its 0-based
-               ordinal among ALL media spans of the page, ref-less ones
-               included (the first-sighting context counts them)
-      rasters  the refs of the page's raster spans when the page qualifies
-               for the full-page caption: no textual span with non-blank
-               raw text and no media span
-      raw      the page's non-null raw texts joined by "\n\n", None when
-               it has none or when the page has texts, media or rasters:
-               then the document assembles some output, and the raw-text
-               fallback is never read
-    """
-    texts = []
-    media = []
-    n_media = 0
-    has_raw_text = False
-    for d in spans:
-        kind = d["kind"]
-        if kind in TEXTUAL_KINDS:
-            raw = d["text"]
-            has_raw_text = has_raw_text or bool(raw and str(raw).strip())
-            sanitized = sanitize_text(raw)
-            if not sanitized or sanitized_boilerplate_kind(sanitized) in drop_kinds:
-                continue
-            h = content_hash(sanitized) if drop_exact_duplicates else None
-            texts.append({"kind": kind, "text": sanitized, "hash": h})
-        elif kind in MEDIA_KINDS:
-            if d["media_ref"]:
-                media.append({"idx": n_media, "ref": d["media_ref"]})
-            n_media += 1
-    rasters = []
-    if not has_raw_text and not n_media:
-        rasters = [d["media_ref"] for d in spans if d["kind"] == RASTER_KIND and d["media_ref"]]
-    raw = None
-    if not (texts or media or rasters):
-        raws = [str(d["text"]) for d in spans if d["text"] is not None]
-        raw = PAGE_JOIN.join(raws) if raws else None
-    return {"page": page, "texts": texts, "media": media, "rasters": rasters, "raw": raw}
-
-
-def merge_pages(partials: Sequence[dict]) -> tuple[str, list[dict]]:
-    """The document-wide work over page_partial's partials, given in any
-    order. Returns (markdown, output span sequence) like assemble_document.
-
-    In page order: first-wins exact dedupe across pages, one caption per
-    media ref with the context of its first sighting, full-page captions
-    for the refs of raster pages that no media span captioned ("Page N of
-    total", total = the last page with any span + 1), then page assembly
-    and the raw-text fallback."""
-    pages = sorted(partials, key=lambda p: p["page"])
-    total_pages = pages[-1]["page"] + 1 if pages else 0
-
-    captions: dict[str, str] = {}
-    for p in pages:
-        for m in p["media"]:
-            if m["ref"] not in captions:
-                ctx = FIRST_SIGHT_CTX.format(page=p["page"] + 1, idx=m["idx"] + 1)
-                captions[m["ref"]] = caption_stub(m["ref"], ctx)
-    for p in pages:
-        for ref in p["rasters"]:
-            if ref not in captions:
-                ctx = RASTER_CTX.format(page=p["page"] + 1, total=total_pages)
-                captions[ref] = caption_stub(ref, ctx)
-
-    seen_hashes: set[str] = set()
-    out_spans: list[dict] = []
-    page_parts: list[str] = []
-    for p in pages:
-        kept = []
-        for t in p["texts"]:
-            h = t["hash"]
-            if h is not None:
-                if h in seen_hashes:
-                    continue
-                seen_hashes.add(h)
-            kept.append(t)
-        # a raster page has no media span, so at most one list is non-empty
-        refs = [m["ref"] for m in p["media"]] + p["rasters"]
-        part = PAGE_JOIN.join(t["text"] for t in kept).strip()
-        if refs:
-            part += FIGURES_OPEN + FIGURES_JOIN.join(captions[r] for r in refs) + FIGURES_CLOSE
-        if not part:
-            continue
-        page_parts.append(PAGE_MARKER.format(n=p["page"] + 1) + part)
-        for t in kept:
-            out_spans.append(
-                {"kind": t["kind"], "text": t["text"], "media_ref": None,
-                 "page": p["page"], "offset": len(out_spans)}
-            )
-        for ref in refs:
-            out_spans.append(
-                {"kind": "figure", "text": captions[ref], "media_ref": ref,
-                 "page": p["page"], "offset": len(out_spans)}
-            )
-
-    markdown = PAGE_JOIN.join(page_parts)
-    if not markdown:
-        # raw fallback (get_full_text semantics): join raw texts, unsanitized
-        markdown = PAGE_JOIN.join(p["raw"] for p in pages if p["raw"] is not None)
-        out_spans = []
-    return markdown, out_spans
+def unzip_spans(spans: Sequence) -> Fields:
+    """One document's spans (mappings or Rows) as Fields: ordered by
+    (page, offset) with a null page or offset read as 0, spans that tie
+    keeping their input order."""
+    cols = [
+        [_span_get(s, "kind") for s in spans],
+        [_span_get(s, "text") for s in spans],
+        [_span_get(s, "media_ref") for s in spans],
+        [int(_span_get(s, "page") or 0) for s in spans],
+    ]
+    offsets = [int(_span_get(s, "offset") or 0) for s in spans]
+    pages = cols[3]
+    order = sorted(range(len(offsets)), key=lambda i: (pages[i], offsets[i]))
+    return tuple([col[i] for i in order] for col in cols)
 
 
 def assemble_document(
@@ -231,25 +308,21 @@ def assemble_document(
     drop_kinds: frozenset = DROP_KINDS_DEFAULT,
     drop_exact_duplicates: bool = True,
 ) -> tuple[str, list[dict]]:
-    """Assemble one document. Returns (markdown, output span sequence).
-
-    Output spans carry renumbered 0-based offsets in document order:
-    surviving text spans first within each page (offset order), then one
-    figure span per media occurrence (caption text, original media_ref).
-    """
-    return merge_pages(
-        [
-            page_partial(
-                page, on_page,
-                drop_kinds=drop_kinds, drop_exact_duplicates=drop_exact_duplicates,
-            )
-            for page, on_page in page_spans(spans)
-        ]
+    """Assemble one document with the scalar functions (no gates).
+    Returns (markdown, output spans as dicts with renumbered 0-based
+    offsets in document order; see merge_pages)."""
+    out = OutSpans()
+    markdown = merge_pages(
+        page_partials(unzip_spans(spans), drop_kinds=drop_kinds),
+        out,
+        drop_exact_duplicates=drop_exact_duplicates,
     )
+    return markdown, out.rows()
 
 
-def html_spans(raw_html, url=None) -> list[dict]:
-    """HTML doc → input spans on page 0, one per main-content block.
+def html_blocks(raw_html, url=None) -> list[tuple[str, str | None, str | None]]:
+    """HTML doc → its main-content blocks (kind, text, media_ref), the
+    input spans of page 0 at offsets 0, 1, ...
 
     ``url`` anchors relative image srcs; anything but a non-empty str
     (None, bytes, NaN) means no base, never a TypeError that the HTML
@@ -257,9 +330,14 @@ def html_spans(raw_html, url=None) -> list[dict]:
     if not raw_html:
         return []
     base = url if isinstance(url, str) and url else None
+    return html_main_blocks(raw_html, base_url=base)
+
+
+def html_spans(raw_html, url=None) -> list[dict]:
+    """HTML doc → input spans on page 0, one per main-content block."""
     return [
         {"kind": kind, "text": text, "media_ref": ref, "page": 0, "offset": i}
-        for i, (kind, text, ref) in enumerate(html_main_blocks(raw_html, base_url=base))
+        for i, (kind, text, ref) in enumerate(html_blocks(raw_html, url))
     ]
 
 
@@ -274,7 +352,7 @@ def extract_document(
     """Extract one document → (markdown, n_pages, output spans).
 
     The HTML-derived spans follow the input spans, so on a (page, offset)
-    tie the stable sort in assemble_document keeps input spans first.
+    tie the stable sort in unzip_spans keeps input spans first.
     n_pages is page_count of the output spans."""
     merged = [*(spans or ()), *html_spans(raw_html, url)]
     markdown, out_spans = assemble_document(

@@ -38,15 +38,41 @@ sanitizes to the decomposed "e\u0301", which a second pass composes to
 one character and then drops as shorter than 2). So a sanitized string
 that is already NFC (every ASCII string is) is its own sanitize, and
 ``sanitized_boilerplate_kind`` classifies it without the second pass.
+
+The batch gates. The extract map decides, for a whole Arrow text array in
+a few ``pyarrow.compute`` passes, which spans the scalar functions would
+return unchanged and how they would classify them (unchanged_gates). A
+gate only proves "unchanged"; every span it does not mark goes through
+``sanitize_text`` and ``sanitized_boilerplate_kind``. The gates mark only
+ASCII text, where the scalar semantics is simple to restate exactly:
+
+  - sanitize leaves it unchanged: ASCII text is NFC (step 1); with no
+    match of _CHANGEABLE_RE (_GATE_CHANGEABLE, its ASCII part) steps 2-6
+    do nothing (the gate above); with no Python whitespace at either edge
+    (_GATE_CHANGEABLE's edge arms: str.strip's ASCII set) step 7 strips
+    nothing; and a length of at least 2 is kept.
+  - no boilerplate word: every BOILERPLATE_PATTERNS pattern needs one of
+    _GATE_WORDS, case-insensitively, to match. On ASCII text re.I folds
+    only ASCII letters (the non-ASCII folds, the long s to "s" and the
+    Kelvin sign to "k", need a non-ASCII character), so a text without
+    any of the words matches no pattern. Its first line is not blank (no
+    edge whitespace), so _classify returns "title" when it is shorter
+    than TITLE_MAX_LEN and has no newline, else "none".
+
+RE2 (pyarrow.compute) reads ``^`` and ``$`` as the ends of the text and
+the escapes below as the same characters as Python's re.
+tests/test_sanitize_gates.py holds the gates to the scalar functions.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 import unicodedata
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # Cc minus {\t=09, \n=0A, \r=0D}
 _CTRL_RE = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f-\x9f]")
@@ -60,6 +86,14 @@ _NL_RUN_RE = re.compile(r"\n{3,}")
 _CHANGEABLE_RE = re.compile(
     "[\\x00-\\x09\\x0b\\x0c\\x0e-\\x1f\\x7f-\\x9f\\u200b\\u200c\\u200d\\ufeff\\u00ad]"
     "| [ \\n]|\\n(?: |\\n\\n)"
+)
+# the batch gate's restatement of _CHANGEABLE_RE on ASCII text (RE2): its
+# class without the non-ASCII characters, its multi-character triggers,
+# and Python whitespace at either edge (what step 7's strip() removes)
+_PY_WS_ASCII = "\\t\\n\\x0b\\x0c\\r\\x1c-\\x1f "
+_GATE_CHANGEABLE = (
+    "[\\x00-\\x09\\x0b\\x0c\\x0e-\\x1f\\x7f]| [ \\n]|\\n(?: |\\n\\n)"
+    f"|^[{_PY_WS_ASCII}]|[{_PY_WS_ASCII}]$"
 )
 
 MIN_CONTENT_LENGTH = 2
@@ -120,6 +154,10 @@ _ANY_BOILERPLATE = re.compile(
     "|".join(f"(?:{pat.pattern})" for _, pat in BOILERPLATE_PATTERNS), re.I
 )
 
+# a word that every BOILERPLATE_PATTERNS pattern needs in order to match
+# (case-insensitive; the batch gate's restatement of the patterns)
+_GATE_WORDS = "thank|gracias|merci|question|&|append|reference|agenda|objective|learning"
+
 DROP_KINDS_DEFAULT = frozenset({"thank_you", "questions", "blank"})
 
 TITLE_MAX_LEN = 20  # shorter than this and single-line → title
@@ -158,6 +196,33 @@ def _classify(cleaned: str) -> str:
     return "none"
 
 
-def content_hash(sanitized: str) -> str:
-    """sha256 hex of sanitized content (dedupe key; dedupe.py:81-83)."""
-    return hashlib.sha256(sanitized.encode("utf-8")).hexdigest()
+# unchanged_gates' verdicts: the scalar path decides (GATE_NONE), or
+# sanitize_text leaves the text unchanged and its class is kept (GATE_KEEP)
+# or in drop_kinds (GATE_DROP)
+GATE_NONE, GATE_KEEP, GATE_DROP = 0, 1, 2
+
+
+def unchanged_gates(text: pa.Array, drop_kinds: frozenset) -> np.ndarray:
+    """One verdict per element of a string array (the module docstring's
+    batch gates): GATE_KEEP or GATE_DROP where ``sanitize_text(t) == t``
+    and ``sanitized_boilerplate_kind(t) in drop_kinds`` is proved false or
+    true, GATE_NONE where the scalar functions must decide (nulls
+    included)."""
+    unchanged = pc.and_kleene(
+        pc.and_kleene(
+            pc.string_is_ascii(text),
+            pc.greater_equal(pc.binary_length(text), MIN_CONTENT_LENGTH),
+        ),
+        pc.invert(pc.match_substring_regex(text, _GATE_CHANGEABLE)),
+    )
+    plain = pc.and_kleene(
+        unchanged, pc.invert(pc.match_substring_regex(text, _GATE_WORDS, ignore_case=True))
+    )
+    title = pc.and_kleene(
+        pc.less(pc.binary_length(text), TITLE_MAX_LEN),
+        pc.invert(pc.match_substring(text, "\n")),
+    )
+    plain = pc.fill_null(plain, False).to_numpy(zero_copy_only=False)
+    title = pc.fill_null(title, False).to_numpy(zero_copy_only=False)
+    dropped = np.where(title, "title" in drop_kinds, "none" in drop_kinds)
+    return np.where(plain, np.where(dropped, GATE_DROP, GATE_KEEP), GATE_NONE).astype(np.int8)

@@ -6,17 +6,22 @@ holds one row per document with its span array, so extract() is one
 narrow Arrow map over whole documents:
 
     scan → select(doc_id, spans[, raw_html[, url]])
-         → mapInArrow: kernels.assembly.extract_document on every row
+         → mapInArrow: the kernels.assembly kernel on every row
            (HTML-derived spans, sanitize, boilerplate drop, first-wins
            dedupe, media captions, raster fallback, page assembly and
            the raw-text fallback), one output row per input row
 
 No exchange, no join, no union, one scan. Python is entered once per
 Arrow batch of whole documents, not once per span or per expression, and
-it runs the very function the oracle calls. Per batch that is decode,
-kernel, encode (_extract_batches): the span lists are decoded one struct
-field at a time (_pylist), equal to pyarrow's per-struct to_pylist() and
-under half its cost, and the kernel sanitizes each textual span once.
+it runs the kernel functions the oracle calls (page_partial,
+merge_pages). Per batch (_extract_batches) the kernel runs on the span
+field arrays, with no per-span dict: the batch's spans are flattened
+once, the HTML-derived spans appended, the whole batch ordered by one
+stable sort, the sanitize/classifier gates decided for the whole text
+array in pyarrow.compute (kernels.sanitize.unchanged_gates), each
+document's page runs walked over plain lists, and the output encoded as
+columns. The oracle runs the same phases through a scalar adapter with
+no gates, so it checks the gated engine against the scalar functions.
 
   Skew: a document is one row and one Python call. A document with more
   than ``mega_doc_threshold`` spans would be a straggler task, so extract()
@@ -35,20 +40,28 @@ under half its cost, and the kernel sanitizes each textual span once.
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 from urllib.parse import unquote, urlparse
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from docproc_spark.kernels.assembly import extract_document, html_spans
-from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
+from docproc_spark.kernels.assembly import (
+    OutSpans,
+    html_blocks,
+    html_spans,
+    merge_pages,
+    page_partials,
+)
+from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT, unchanged_gates
 from docproc_spark.partition import INTROSPECTION_ERRORS, fast_path_disabled
 from docproc_spark.schema import OUT_SPAN_STRUCT, SPAN_STRUCT
 
@@ -324,10 +337,10 @@ def extract(
     """Full pipeline: documents(doc_id, doc_type, raw_html, spans) → result.
 
     Output: doc_id, markdown, n_pages, spans (renumbered 0-based offsets),
-    one row per input row. A document is extracted by one
-    kernels.assembly.extract_document call inside a mapInArrow over
-    whole-document rows: no shuffle, and nothing to build per call beyond
-    the DataFrame calls themselves.
+    one row per input row. The documents are extracted inside a
+    mapInArrow over whole-document rows, the assembly kernel running on
+    each Arrow batch's span field arrays (_extract_batches): no shuffle,
+    and nothing to build per call beyond the DataFrame calls themselves.
 
     Documents with more than ``mega_doc_threshold`` input spans are routed
     through the salted two-phase path (pipeline_salted.extract_salted) —
@@ -481,75 +494,146 @@ def _extract_batches(
     drop_kinds: frozenset,
     drop_exact_duplicates: bool,
 ) -> Iterator[pa.RecordBatch]:
-    """extract_document on every row of every batch, in row order; doc_id
-    passes through as the input's Arrow column.
+    """The assembly kernel on every row of every batch, in row order;
+    doc_id passes through as the input's Arrow column.
 
-    Three steps per batch: decode the input columns to Python values
-    (_pylist: the span lists field by field), run the kernel per row, and
-    encode its results as Arrow arrays. The kernel is most of the cost.
-    Decoding the spans with ``to_pylist()`` cost over a third of the
-    kernel's time again; _pylist returns the same lists for about a
-    third of that."""
+    Per batch, on the span field arrays, not on per-span Python objects:
+    flatten the ``spans`` list column to its five field arrays and a row
+    index (_span_columns), append each row's HTML-derived spans with that
+    row's index (_with_html), order the batch by (row, page, offset) and
+    decide the batch gates on its text array (_sorted_spans), run
+    page_partials and merge_pages per document over slices of the
+    batch's field lists, and encode the output spans as columns
+    (_out_spans_array). A document's spans are a contiguous run of the
+    sorted batch, and its pages are runs within it."""
+    spans_t = schema.field("spans").type
     for batch in batches:
         names = batch.schema.names
-
-        def values(name: str) -> list:
-            if name in names:
-                return _pylist(batch.column(name))
-            return [None] * batch.num_rows
-
-        done = [
-            extract_document(
-                spans,
-                raw_html,
-                url,
-                drop_kinds=drop_kinds,
-                drop_exact_duplicates=drop_exact_duplicates,
+        n = batch.num_rows
+        rows, cols = _span_columns(batch.column("spans") if "spans" in names else None)
+        if "raw_html" in names:
+            url = batch.column("url") if "url" in names else pa.nulls(n, pa.string())
+            rows, cols = _with_html(rows, cols, batch.column("raw_html"), url)
+        rows, fields, verdicts = _sorted_spans(rows, cols, drop_kinds)
+        starts = np.searchsorted(rows, np.arange(n + 1)).tolist()
+        out = OutSpans()
+        ends = [0]
+        markdown, n_pages = [], []
+        for lo, hi in zip(starts, starts[1:]):
+            partials = page_partials(fields, lo, hi, verdicts, drop_kinds=drop_kinds)
+            markdown.append(
+                merge_pages(partials, out, drop_exact_duplicates=drop_exact_duplicates)
             )
-            for spans, raw_html, url in zip(
-                values("spans"), values("raw_html"), values("url")
-            )
-        ]
-        markdown, n_pages, out_spans = zip(*done) if done else ((), (), ())
+            n_pages.append(out.page[-1] + 1 if len(out) > ends[-1] else 0)
+            ends.append(len(out))
         yield pa.RecordBatch.from_arrays(
             [
                 batch.column("doc_id"),
                 pa.array(markdown, schema.field("markdown").type),
                 pa.array(n_pages, schema.field("n_pages").type),
-                pa.array(out_spans, schema.field("spans").type),
+                _out_spans_array(out, ends, spans_t),
             ],
             schema=schema,
         )
 
 
-def _pylist(column: pa.Array) -> list:
-    """``column.to_pylist()``, built field by field for a list of structs.
+_SPAN_FIELDS = ("kind", "text", "media_ref", "page", "offset")
+_SPAN_TYPES = (pa.string(), pa.string(), pa.string(), pa.int32(), pa.int32())
 
-    pyarrow converts each struct element through its per-scalar path, one
-    dict at a time. Here each struct field converts in one call, the
-    fields are zipped into row dicts, and the rows are cut per list by the
-    offsets. The result equals ``to_pylist()``, including on a sliced
-    array, null and empty lists, null struct elements and null fields.
-    Any other column is converted by ``to_pylist()`` itself."""
-    t = column.type
-    if not (
-        pa.types.is_list(t)
-        and pa.types.is_struct(t.value_type)
-        and t.value_type.num_fields
-    ):
-        return column.to_pylist()
-    offsets = column.offsets.to_pylist()
-    lo = offsets[0]
-    # .values ignores the list's slice; the offsets index into it directly
-    structs = column.values.slice(lo, offsets[-1] - lo)
-    fields = [f.name for f in t.value_type]
-    rows: list = [
-        dict(zip(fields, row))
-        for row in zip(*(structs.field(i).to_pylist() for i in range(len(fields))))
+
+def _list_fields(column: pa.Array) -> tuple[np.ndarray, dict[str, pa.Array]]:
+    """(length of each list, {field name: field array of the flattened
+    elements}) of a list<struct> array.
+
+    A null list counts 0 elements, since list_flatten skips the child
+    range a null list may span, and StructArray.flatten() applies the
+    struct's validity, so a null element reads as all-null fields.
+    Both handle a sliced array."""
+    lengths = pc.fill_null(pc.list_value_length(column), 0).to_numpy()
+    structs = pc.list_flatten(column)
+    return lengths, dict(zip((f.name for f in structs.type), structs.flatten()))
+
+
+def _span_columns(spans: pa.Array | None) -> tuple[np.ndarray, list[pa.Array]]:
+    """(row index, [kind, text, media_ref, page, offset]) of every element
+    of a spans column; a field the struct lacks (the canonical input has
+    no page) reads as nulls, and no column as no spans."""
+    if spans is None:
+        return np.zeros(0, np.int64), [pa.nulls(0, t) for t in _SPAN_TYPES]
+    lengths, by_name = _list_fields(spans)
+    rows = np.repeat(np.arange(len(spans)), lengths)
+    return rows, [
+        by_name[name] if name in by_name else pa.nulls(len(rows), t)
+        for name, t in zip(_SPAN_FIELDS, _SPAN_TYPES)
     ]
-    if structs.null_count:
-        rows = [r if ok else None for r, ok in zip(rows, structs.is_valid().to_pylist())]
-    lists: list = [rows[a - lo : b - lo] for a, b in zip(offsets, offsets[1:])]
-    if column.null_count:
-        lists = [v if ok else None for v, ok in zip(lists, column.is_valid().to_pylist())]
-    return lists
+
+
+def _with_html(
+    rows: np.ndarray, cols: list[pa.Array], raw_html: pa.Array, url: pa.Array
+) -> tuple[np.ndarray, list[pa.Array]]:
+    """``rows``/``cols`` followed by every row's HTML-derived spans
+    (kernels.assembly.html_blocks), on page 0 at offsets 0, 1, ... with
+    that row's index: after all input spans, so the stable sort keeps a
+    row's input spans first on a (page, offset) tie, as extract_document
+    merges them."""
+    html_rows, offsets, blocks = [], [], []
+    for row, (h, u) in enumerate(zip(raw_html.to_pylist(), url.to_pylist())):
+        got = html_blocks(h, u)
+        html_rows += [row] * len(got)
+        offsets += range(len(got))
+        blocks += got
+    if not blocks:
+        return rows, cols
+    kinds, texts, refs = zip(*blocks)
+    extra = [kinds, texts, refs, [0] * len(blocks), offsets]
+    return np.concatenate([rows, np.asarray(html_rows, np.int64)]), [
+        pa.concat_arrays([c, pa.array(e, c.type)]) for c, e in zip(cols, extra)
+    ]
+
+
+def _sorted_spans(
+    rows: np.ndarray, cols: list[pa.Array], drop_kinds: frozenset
+) -> tuple[np.ndarray, tuple[list, list, list, list], list]:
+    """(row index, (kinds, texts, refs, pages), gate verdicts) of spans
+    given as a row index and their five field arrays, ordered by (row,
+    page, offset) with a null page or offset read as 0; spans that tie
+    keep their given order (np.lexsort is stable). A batch that arrives
+    in order is not permuted. The verdicts are
+    kernels.sanitize.unchanged_gates over the text array."""
+    page = pc.fill_null(cols[3], 0).to_numpy().astype(np.int64)
+    offset = pc.fill_null(cols[4], 0).to_numpy().astype(np.int64)
+    ordered = (rows[1:] > rows[:-1]) | (rows[1:] == rows[:-1]) & (
+        (page[1:] > page[:-1]) | (page[1:] == page[:-1]) & (offset[1:] >= offset[:-1])
+    )
+    if not ordered.all():
+        order = np.lexsort((offset, page, rows))
+        rows, page = rows[order], page[order]
+        cols = [c.take(order) for c in cols[:3]]
+    verdicts = unchanged_gates(cols[1], drop_kinds).tolist()
+    # to_numpy's object conversion gives to_pylist()'s values (str or
+    # None) at a tenth of its cost or less
+    kinds, texts, refs = (c.to_numpy(zero_copy_only=False).tolist() for c in cols[:3])
+    return rows, (kinds, texts, refs, page.tolist()), verdicts
+
+
+def _list_array(offsets: Sequence[int], columns: dict, list_type: pa.DataType) -> pa.Array:
+    """A list<struct> array of ``list_type`` from list offsets and one
+    sequence per struct field (by name)."""
+    struct_t = list_type.value_type
+    values = pa.StructArray.from_arrays(
+        [pa.array(columns[f.name], f.type) for f in struct_t], fields=list(struct_t)
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values, type=list_type)
+
+
+def _out_spans_array(out: OutSpans, ends: Sequence[int], spans_t: pa.DataType) -> pa.Array:
+    """The spans column of the documents whose output spans are
+    ``out``'s [ends[i], ends[i + 1]); a span's offset is its position in
+    its document."""
+    bounds = np.asarray(ends, np.int64)
+    offset = np.arange(len(out)) - np.repeat(bounds[:-1], np.diff(bounds))
+    columns = {
+        "kind": out.kind, "text": out.text, "media_ref": out.media_ref,
+        "page": out.page, "offset": offset,
+    }
+    return _list_array(ends, columns, spans_t)

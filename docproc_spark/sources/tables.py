@@ -1,37 +1,14 @@
-"""Table loaders for the driver-provided parquet star schema.
+"""Table writes: Iceberg where its runtime is present, else parquet.
 
-Parquet scans get predicate pushdown + column pruning from Catalyst for
-free; these helpers only centralize paths and names. Iceberg is the
-production catalog (snapshots power the lineage/resume design in
-sources/lineage.py) — its runtime jar is not in this container, so the
-writer falls back to plain parquet behind try-import.
+Iceberg is the production catalog (snapshots power the lineage/resume
+design in sources/lineage.py). Its runtime jar is not in this container,
+so write_table falls back to plain parquet when the classes cannot be
+loaded (iceberg_available).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    d = sf_dir or DEFAULT_SF_DIR
-    return spark.read.parquet(f"{d}/{name}.parquet")
 
 
 def iceberg_available(spark: SparkSession) -> bool:

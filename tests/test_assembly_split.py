@@ -1,11 +1,12 @@
 """The assembly kernel's split into a page phase and a document merge.
 
-``assemble_document`` is ``page_partial`` over each page's spans, then
-``merge_pages`` over the partials; the salted plan runs the two phases in
-different tasks and hands the merge its partials in no fixed order. These
-tests hold the merge to the whole-document result on adversarial span
-lists, with the partials shuffled, and hold that result to outputs
-recorded from the kernel before it was split.
+``assemble_document`` is ``page_partial`` over each page run of the
+document's unzipped fields (``page_partials``), then ``merge_pages`` over
+the partials; the salted plan runs the two phases in different tasks and
+hands the merge its partials in no fixed order. These tests hold the
+merge to the whole-document result on adversarial span lists, with the
+partials shuffled, and hold that result, and the Arrow map's gated batch
+kernel, to outputs recorded from the kernel before it was split.
 """
 
 from __future__ import annotations
@@ -18,13 +19,17 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import pyarrow as pa
+
 from docproc_spark.kernels.assembly import (
+    OutSpans,
     assemble_document,
     merge_pages,
-    page_partial,
-    page_spans,
+    page_partials,
+    unzip_spans,
 )
 from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
+from docproc_spark.pipeline import _extract_batches
 
 KINDS = ["text", "table", "header", "code", "", None, "bogus", "image", "figure",
          "raster"]
@@ -66,12 +71,30 @@ def _digest(outputs) -> str:
 
 def _merged(spans: list, drop_kinds: frozenset, dedupe: bool, rng) -> tuple:
     """merge_pages over the page partials of ``spans``, shuffled by ``rng``."""
-    partials = [
-        page_partial(page, on_page, drop_kinds=drop_kinds, drop_exact_duplicates=dedupe)
-        for page, on_page in page_spans(spans)
-    ]
+    partials = page_partials(unzip_spans(spans), drop_kinds=drop_kinds)
     rng.shuffle(partials)
-    return merge_pages(partials)
+    out = OutSpans()
+    return merge_pages(partials, out, drop_exact_duplicates=dedupe), out.rows()
+
+
+SPAN_T = pa.struct(
+    [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()),
+     ("page", pa.int32()), ("offset", pa.int32())]
+)
+OUT_T = pa.schema([("doc_id", pa.string()), ("markdown", pa.string()),
+                   ("n_pages", pa.int32()), ("spans", pa.list_(SPAN_T))])
+
+
+def _batch_kernel(docs: list, drop_kinds: frozenset, dedupe: bool) -> list:
+    """(markdown, spans) per document from pipeline._extract_batches, the
+    gated kernel of the Arrow map, in batches of 50 documents."""
+    table = pa.table({"doc_id": [str(i) for i in range(len(docs))],
+                      "spans": pa.array(docs, pa.list_(SPAN_T))})
+    return [
+        (row["markdown"], row["spans"])
+        for batch in _extract_batches(iter(table.to_batches(50)), OUT_T, drop_kinds, dedupe)
+        for row in batch.to_pylist()
+    ]
 
 
 # md5 of assemble_document's outputs on 400 random span lists
@@ -101,6 +124,7 @@ def test_split_kernel_matches_recorded_outputs(setting):
     rng = random.Random(0)
     merged = (_merged(spans, drop_kinds, dedupe, rng) for spans in docs)
     assert _digest(merged) == RECORDED[setting]
+    assert _digest(_batch_kernel(docs, drop_kinds, dedupe)) == RECORDED[setting]
 
 
 SPAN = st.one_of(

@@ -328,3 +328,29 @@ def test_salted_map_and_oracle_agree_on_edge_spans(spark, spans):
         assert got["markdown"] == want["markdown"]
         assert got["n_pages"] == want["n_pages"]
         assert _tuples(got["spans"]) == _tuples(want["spans"])
+
+
+def test_routed_rows_that_share_a_doc_id_stay_separate(spark):
+    """Two input rows with one doc_id are two documents on the one-map
+    path, so the salted path must not merge their pages and dedupe: it
+    groups by a per-input-row key, and carries doc_id through."""
+    rows = [
+        {"doc_id": "same", "doc_type": "pdf", "raw_html": None,
+         "spans": [_span(BODY, 0), _span("Only in the first row, page one.", 0, page=1)]},
+        {"doc_id": "same", "doc_type": "pdf", "raw_html": None,
+         "spans": [_span(BODY, 0), _span("Only in the second row.", 1)]},
+        {"doc_id": "other", "doc_type": "pdf", "raw_html": None,
+         "spans": [_span("A third document with its own text.", 0)]},
+    ]
+    df = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+
+    def result(frame):
+        return sorted(
+            (r["doc_id"], r["markdown"], r["n_pages"], _tuples(r["spans"]))
+            for r in frame.collect()
+        )
+
+    one_map = result(extract(df, mega_doc_threshold=None))
+    assert len(one_map) == 3
+    assert result(extract(df, mega_doc_threshold=1)) == one_map
+    assert result(extract_salted(df)) == one_map
