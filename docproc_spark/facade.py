@@ -85,12 +85,13 @@ class DocprocSpark:
         stage (pipeline.py:124-141) runs after extraction: markdown is
         replaced by the chunk→chat→rejoin output of
         ``ingest.refine_provider`` (per-document failure falls back to the
-        raw text). The extract result is materialized (eager
-        localCheckpoint) BEFORE the refine join: both join sides derive
-        from it and DataFrame fan-out gets no common-subexpression reuse —
-        uncheckpointed, the full extraction pipeline would execute twice.
+        raw text). The extract result is staged lazily for the refine
+        join: both join sides derive from it and DataFrame fan-out gets no
+        common-subexpression reuse — unstaged, the full extraction
+        pipeline would execute twice.
         The join exchange that remains is noise next to the LLM calls the
         stage exists to make."""
+        from docproc_spark.materialize import stage
         from docproc_spark.pipeline import extract
 
         result = extract(
@@ -101,7 +102,7 @@ class DocprocSpark:
         if self.config.ingest.use_llm_refine:
             from docproc_spark.operators.refine import refine_table
 
-            result = result.localCheckpoint(eager=True)
+            result = stage(result, eager=False)
             refined = refine_table(
                 result, provider_id=self.config.ingest.refine_provider
             ).withColumnRenamed("refined", "markdown")
@@ -355,8 +356,8 @@ class DocprocSpark:
 
         Why checkpoint instead of feeding ``load_files`` straight to
         ``extract_table``: (a) extract() stages a mapInPandas-derived
-        frame in the block manager once per CALL (a lazy localCheckpoint
-        its routing probe computes), so each extract of the same
+        frame in the block manager once per CALL (a lazy stage its
+        routing probe computes), so each extract of the same
         directory parses every file again and holds a copy of its spans
         until the result is dropped; a parquet scan is routed from its
         footers' statistics with no job where they prove that no

@@ -20,8 +20,9 @@ the corpus itself, Spark-first:
     regardless of summation order — integer sums are associative where
     float sums are not, which makes the operator oracle-able and its
     output stable across partitionings/cluster sizes. One join + one
-    aggregation shuffle per iteration; lineage cut per round with an
-    eager localCheckpoint (same contract as operators/dedupe.dup_clusters).
+    aggregation shuffle per iteration; lineage cut per round by an eager
+    stage, the previous round released (materialize; the dup_components
+    discipline).
 
 Link-resolution rules (mirrored bit-for-bit by the SQL oracles):
   - ``http(s)://...`` (any case) → kept as-is;
@@ -57,6 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from docproc_spark.functions.web import canonicalize_url, registered_domain
+from docproc_spark.materialize import release, stage
 
 # href + first text run; character classes only (no lazy quantifiers, no
 # boundary assertions) so Java regex and DuckDB's RE2 agree byte-for-byte.
@@ -204,23 +206,21 @@ def pagerank(
     a single division of two exactly-representable integers).
 
     Scale shape: edges join their out-degree ONCE up front and the result
-    is checkpointed (materialized, lineage cut); per iteration there is
-    one rank⋈edges shuffle join on ``src`` and one ``dst``-keyed sum with
-    map-side partial aggregation. Per-round eager localCheckpoint keeps
-    the plan O(1) in ``iters`` (single-JVM durability caveat as in
-    operators/dedupe.dup_clusters — on a real cluster use
-    ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``).
+    is staged (materialized, lineage cut); per iteration there is one
+    rank⋈edges shuffle join on ``src`` and one ``dst``-keyed sum with
+    map-side partial aggregation. Each round's ranks are staged, which
+    keeps the plan O(1) in ``iters``, and the previous round's released;
+    the node and edge tables are released before returning.
     """
     mass = 1 << scale_bits
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    nodes = (
+    nodes = stage(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
@@ -233,10 +233,10 @@ def pagerank(
     base = ((100 - damping_pct) * share) // 100
 
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    ew = e.join(outdeg, "src").localCheckpoint(eager=True)
+    ew = stage(e.join(outdeg, "src"))
 
     ranks = nodes.select("node", F.lit(share).cast("long").alias("rank_bits"))
-    for _ in range(iters):
+    for i in range(iters):
         contribs = (
             ew.join(ranks, ew["src"] == ranks["node"])
             .select(
@@ -246,9 +246,8 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("in_sum"))
         )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
+        new_ranks = stage(
+            nodes.join(contribs, nodes["node"] == contribs["dst"], "left").select(
                 "node",
                 (
                     F.lit(base)
@@ -257,8 +256,13 @@ def pagerank(
                     )
                 ).cast("long").alias("rank_bits"),
             )
-            .localCheckpoint(eager=True)
         )
+        if i:
+            release(ranks)
+        ranks = new_ranks
+    release(ew)
+    if iters:
+        release(nodes)  # with no round, the returned ranks read nodes
     return ranks.select(
         "node",
         "rank_bits",

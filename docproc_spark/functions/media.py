@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docproc_spark.materialize import stage
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -372,17 +374,12 @@ def image_neardup_pairs(
     sigs = image_signatures(media, blob_col).filter(
         F.col("dhash64").isNotNull()
     )
-    # materialize BEFORE the banded join: its bucket-accounting collect
-    # plus the left/right self-join branches would otherwise re-run the
-    # full pixel-decode mapInPandas 3-4x over the corpus. A lazy
-    # localCheckpoint (not .cache()): checkpoint blocks are reclaimed by
-    # the ContextCleaner as soon as the result frame is dropped, so
-    # repeated corpus-scale invocations no longer accumulate decode
-    # output in executor storage (the r5-ADVICE unpersist leak).
-    uniq = (
-        sigs.select("media_ref", "dhash64")
-        .dropDuplicates(["media_ref"])
-        .localCheckpoint(eager=False)
+    # staged BEFORE the banded join: its bucket-accounting collect plus
+    # the left/right self-join branches would otherwise re-run the full
+    # pixel-decode mapInPandas 3-4x over the corpus
+    uniq = stage(
+        sigs.select("media_ref", "dhash64").dropDuplicates(["media_ref"]),
+        eager=False,
     )
     return hamming_neardup_pairs(
         uniq,
@@ -492,16 +489,14 @@ def perceptual_dup_clusters(
         hamming_neardup_pairs,
     )
 
-    # materialized: consumed by the banded pair join (bucket accounting +
-    # two self-join branches) AND the final cluster mapping — without
-    # it the upstream signature decode re-executes per consumer. Lazy
-    # localCheckpoint so the blocks are ContextCleaner-reclaimed when the
-    # result frame is dropped (no unpersist leak across invocations).
-    uniq = (
+    # staged: consumed by the banded pair join (bucket accounting + two
+    # self-join branches) AND the final cluster mapping — without it the
+    # upstream signature decode re-executes per consumer
+    uniq = stage(
         sig_table.filter(F.col("dhash64").isNotNull())
         .select("media_ref", "dhash64")
-        .dropDuplicates(["media_ref"])
-        .localCheckpoint(eager=False)
+        .dropDuplicates(["media_ref"]),
+        eager=False,
     )
     pairs = hamming_neardup_pairs(
         uniq,

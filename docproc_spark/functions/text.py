@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from docproc_spark.materialize import release, stage
 from docproc_spark.operators.dedupe import fingerprint_col, tokens_col
 from docproc_spark.pipeline import context_pandas_udf
 
@@ -541,22 +542,21 @@ def lm_surprisal_buckets(
     uses operators/rank.global_row_number — range-bucketed exact
     ranking, NOT a single-partition window — plus the closed-form
     ntile_expr, so no stage ever funnels the corpus through one task.
-    The staged token frame is localCheckpointed: four consumers, and
-    fan-out gets no common-subexpression reuse.
+    The token frame is staged (four consumers, and fan-out gets no
+    common-subexpression reuse) and released once the per-doc scores
+    are.
     """
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
     from docproc_spark.operators.rank import global_row_number, ntile_expr
 
-    staged = (
+    staged = stage(
         docs.select(
             F.col(id_col).alias("doc_id"),
             tokens_col(F.lower(F.coalesce(F.col(text_col), F.lit("")))).alias(
                 "_lt"
             ),
-        )
-        .withColumn("_bg", _bigrams_from_tokens(F.col("_lt")))
-        .localCheckpoint(eager=True)
+        ).withColumn("_bg", _bigrams_from_tokens(F.col("_lt")))
     )
     uni = (
         staged.select(F.explode("_lt").alias("w"))
@@ -586,7 +586,9 @@ def lm_surprisal_buckets(
         F.sum("_bits").alias("lm_bits"),
         F.count("*").alias("n_bigrams"),
     )
-    base = (
+    # three consumers downstream (boundary probe, bucket sizes, the ranked
+    # output) and fan-out gets no CSE — freeze the join pipeline once
+    base = stage(
         staged.select("doc_id")
         .join(per, "doc_id", "left")
         .select(
@@ -605,11 +607,8 @@ def lm_surprisal_buckets(
             .otherwise(F.lit(10**9))
             .cast("long"),
         )
-        # three consumers downstream (boundary probe, bucket sizes, the
-        # ranked output) and fan-out gets no CSE — freeze the join
-        # pipeline once instead of re-running it per consumer
-        .localCheckpoint(eager=True)
     )
+    release(staged)
     ranked, n_total = global_row_number(
         base, "mean_millibits", "doc_id", out_col="_grank", rank_buckets=rank_buckets
     )
@@ -653,16 +652,16 @@ def build_vocab(
     if k <= 0:
         raise ValueError("k must be positive")
     ltoks = tokens_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
-    grouped = (
+    # two consumers (top-k and the total_tf scalar) and fan-out gets no
+    # CSE — freeze the exploded/grouped frame once
+    grouped = stage(
         docs.select(F.col(id_col).alias("doc_id"), F.explode(ltoks).alias("token"))
         .groupBy("token")
         .agg(
             F.count("*").alias("tf"),
             F.count_distinct("doc_id").alias("df"),
-        )
-        # two consumers (top-k and the total_tf scalar) and fan-out gets
-        # no CSE — freeze the exploded/grouped frame once
-        .localCheckpoint(eager=True)
+        ),
+        eager=False,
     )
     top = grouped.orderBy(F.col("tf").desc(), F.col("token").asc()).limit(k)
     total = grouped.agg(F.sum("tf").cast("long").alias("total_tf"))
@@ -895,30 +894,29 @@ def nb_classify(
     labels (languages, sources, tiers), so the per-doc candidate fan-out
     is ×k, never ×corpus; the doc-term -> class-count join shuffles on
     the token key (the canonical LM-count join, AQE handles token skew);
-    one per-doc re-aggregation + min_by. The staged token frame is
-    localCheckpointed: three consumers, and fan-out gets no
-    common-subexpression reuse.
+    one per-doc re-aggregation + min_by. The token frame is staged:
+    three consumers, and fan-out gets no common-subexpression reuse.
     """
     for col in ("_nb_lt", "_nb_label"):
         if col in docs.columns:
             raise ValueError(f"docs already has a {col!r} column")
     ltoks = tokens_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
-    staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(label_col).alias("_nb_label"),
-        ltoks.alias("_nb_lt"),
-    ).localCheckpoint(eager=True)
+    staged = stage(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(label_col).alias("_nb_label"),
+            ltoks.alias("_nb_lt"),
+        )
+    )
     train = staged.filter(F.col("_nb_label").isNotNull())
-    # class-token counts — localCheckpointed: this is the ONLY
-    # corpus-scale shuffle of the job (explode + groupBy), and it feeds
-    # the vocabulary count, the class totals AND the scoring join; without
-    # the checkpoint, fan-out (no common-subexpression reuse) re-runs the
-    # token explode once per consumer
-    ctc = (
+    # class-token counts, staged: this is the ONLY corpus-scale shuffle of
+    # the job (explode + groupBy), and it feeds the vocabulary count, the
+    # class totals AND the scoring join; unstaged, fan-out (no
+    # common-subexpression reuse) re-runs the token explode per consumer
+    ctc = stage(
         train.select("_nb_label", F.explode("_nb_lt").alias("w"))
         .groupBy("_nb_label", "w")
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     # class metadata is k rows — collect it ONCE and re-enter the plan as
     # a literal frame (three consumers below: the scoring broadcast, the
@@ -1047,9 +1045,9 @@ def dsir_weights(
     Select by dsir_bits DESC (deterministic top-k; the paper adds Gumbel
     noise for soft sampling — compose with hash_sample for that).
 
-    Scale shape: one staged tokenization (localCheckpoint — the bigram
-    HOF must reference a materialized column, and the frame feeds both
-    the raw counts and the per-doc counts), two bucket-count
+    Scale shape: one staged tokenization (the bigram HOF must reference
+    a materialized column, and the frame feeds both the raw counts and
+    the per-doc counts), two bucket-count
     aggregations with map-side combine, a bucket-level score table of
     exactly ``n_buckets`` rows broadcast into the per-doc join, one
     re-aggregation. Nothing is ever corpus × corpus.
@@ -1075,28 +1073,27 @@ def dsir_weights(
                 F.col("_df"), lambda t: _hash_bucket_col(t, n_buckets)
             ).alias("_fb"),
         )
-        return out.localCheckpoint(eager=True)
+        return stage(out)
 
     raw = staged_feats(docs, with_id=True)
     tgt = staged_feats(target, with_id=False)
     # the two bucket-count aggregations are the heavy shuffles of the job
     # and each feeds two consumers (its total AND the score table) —
-    # localCheckpoint so the feature explode runs once per corpus, not
-    # twice (fan-out gets no common-subexpression reuse); post-agg they
-    # are <= n_buckets rows, so the checkpoint itself is metadata-sized
-    raw_c = (
+    # staged so the feature explode runs once per corpus, not twice
+    # (fan-out gets no common-subexpression reuse); post-agg they are
+    # <= n_buckets rows, so the stage itself is metadata-sized
+    raw_c = stage(
         raw.select(F.explode("_fb").alias("b"))
         .groupBy("b")
         .agg(F.count("*").cast("long").alias("cr"))
-        .localCheckpoint(eager=True)
     )
-    tgt_c = (
+    tgt_c = stage(
         tgt.select(F.explode("_fb").alias("b"))
         .groupBy("b")
         .agg(F.count("*").cast("long").alias("ct"))
-        .localCheckpoint(eager=True)
     )
-    # the totals are two scalars over the checkpointed counts — collect
+    release(tgt)
+    # the totals are two scalars over the staged counts — collect
     # them and inline as literals rather than crossJoining live plans
     tr = int(raw_c.agg(F.sum("cr")).collect()[0][0] or 0)
     tt = int(tgt_c.agg(F.sum("ct")).collect()[0][0] or 0)

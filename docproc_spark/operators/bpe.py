@@ -13,10 +13,10 @@ weighted by word freq, map-side partial aggs), a distributed top-1
 (TakeOrdered, never a global window), and a leftmost-non-overlapping
 merge applied as a per-word string fold — for vocabularies too large to
 collect (cap n_merges in the hundreds there: cost is O(rounds) jobs). The
-initial vocabulary is localCheckpoint'ed (cuts the corpus lineage); each
-round's merged vocabulary is cached, materialized, and its predecessor
-unpersisted (the dup_components iterative-operator discipline, both
-halves), so storage stays at one vocabulary copy however many rounds run.
+initial vocabulary is staged (cuts the corpus lineage); each round's
+merged vocabulary is staged and its predecessor released (the
+dup_components iterative-operator discipline), so storage stays at one
+vocabulary copy however many rounds run, and none once training returns.
 At 100-TB corpus scale the vocabulary (distinct words) is orders smaller
 than the corpus, so rounds are cheap after the single corpus reduction.
 
@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from docproc_spark.materialize import release, stage
 from docproc_spark.operators.dedupe import tokens_col
 
 
@@ -209,7 +210,7 @@ def train_bpe(
     w = docs.select(F.explode(words).alias("w"))
     if word_pattern is not None:
         w = w.filter(F.col("w").rlike(word_pattern))
-    vocab = (
+    vocab = stage(
         w.groupBy("w")
         .agg(F.count("*").cast("long").alias("freq"))
         .select(
@@ -218,13 +219,12 @@ def train_bpe(
                 F.regexp_extract_all(F.col("w"), F.lit("(?s)."), 0), " "
             ).alias("syms"),
         )
-        .localCheckpoint(eager=True)
     )
     if strategy == "auto":
         strategy = "local" if vocab.count() <= local_vocab_max else "distributed"
     if strategy == "local":
         rows = [(r["freq"], r["syms"]) for r in vocab.collect()]
-        vocab.unpersist()
+        release(vocab)
         return spark.createDataFrame(
             _local_refine(rows, n_merges),
             "rank long, x string, y string, merged string, cnt long",
@@ -243,20 +243,18 @@ def train_bpe(
         merges.append((r + 1, bx, by, bx + by, bc))
         if r == n_merges - 1:
             break  # the last round's rebuilt vocabulary is never read
-        # per-round cache + unpersist (the dup_components discipline,
-        # BOTH halves): materialize the merged vocabulary from the
-        # superseded frame's blocks, then free them — thousands of
-        # merge rounds must not accumulate a copy per round. Lineage
-        # depth grows one projection per round (fine); an evicted round
-        # replays folds from the round-0 checkpoint, never the corpus.
-        new_vocab = vocab.select(
-            "freq",
-            merge_fold_col(F.col("syms"), F.lit(bx), F.lit(by)).alias("syms"),
-        ).cache()
-        new_vocab.count()
-        vocab.unpersist()
+        # stage the merged vocabulary from the superseded frame's blocks,
+        # then free them — thousands of merge rounds must not accumulate
+        # a copy per round
+        new_vocab = stage(
+            vocab.select(
+                "freq",
+                merge_fold_col(F.col("syms"), F.lit(bx), F.lit(by)).alias("syms"),
+            )
+        )
+        release(vocab)
         vocab = new_vocab
-    vocab.unpersist()
+    release(vocab)
     return spark.createDataFrame(
         merges, "rank long, x string, y string, merged string, cnt long"
     )

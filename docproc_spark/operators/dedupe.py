@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from docproc_spark.materialize import release, stage
+
 # Java \s, written out: [ \t\n\x0b\f\r]. Explicit because engines disagree
 # about \s — RE2 (the DuckDB oracle) excludes \x0b — and an implicit class
 # silently breaks bit-parity the first time a document carries a vertical tab.
@@ -226,7 +228,7 @@ def minhash_dropped_buckets(
     """Accounting for the candidate-pair skew guard: per band, how many
     buckets (and docs) the ``max_bucket`` cap drops. Companion to
     minhash_candidate_pairs so the cap is never a silent coverage hole.
-    Pass a precomputed (ideally cached) ``sig`` to avoid recomputing the
+    Pass a precomputed (ideally staged) ``sig`` to avoid recomputing the
     signatures."""
     if sig is None:
         sig = minhash_signature(docs, text_col, id_col, k)
@@ -269,12 +271,9 @@ def minhash_neardup_pairs(
     never a second tokenize+hash pass over the corpus) and any loss is
     logged as a warning.
     """
-    # always materialized: candidate generation references the band table on
-    # both sides of its bucket join (no fan-out CSE → a re-tokenize per side
-    # otherwise). Lazy localCheckpoint (not .cache()), as simhash_neardup_pairs:
-    # the ContextCleaner reclaims the blocks once the result frame is dropped,
-    # so repeated calls do not accumulate signature frames in storage
-    sig = minhash_signature(docs, text_col, id_col, k).localCheckpoint(eager=False)
+    # staged: candidate generation reads the band table on both sides of
+    # its bucket join, and the result reads it
+    sig = stage(minhash_signature(docs, text_col, id_col, k), eager=False)
     if log_dropped:
         import logging
 
@@ -332,23 +331,20 @@ def dup_components(
     round — bounded by max_iter.
     """
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # cache the symmetrized edge table AND the round-0 labels: `pairs` is
+    # stage the symmetrized edge table AND each round's labels: `pairs` is
     # typically a whole candidate-generation pipeline (banding, bucket
-    # joins, shingle explodes over the corpus) — uncached, EVERY round's
+    # joins, shingle explodes over the corpus) — unstaged, EVERY round's
     # join + convergence count() re-executes that full lineage, turning
     # O(E)-per-round label propagation into O(rounds × pipeline)
-    edges = (
+    edges = stage(
         edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .cache()
+        ).distinct(),
+        eager=False,
     )
-    labels = (
-        edges.select(F.col("src").alias("v"))
-        .distinct()
-        .withColumn("label", F.col("v"))
-        .cache()
+    labels = stage(
+        edges.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v")),
+        eager=False,
     )
     for _ in range(max_iter):
         neigh = (
@@ -356,23 +352,21 @@ def dup_components(
             .groupBy("src")
             .agg(F.min("label").alias("nlabel"))
         )
-        new_labels = (
-            labels.join(neigh, labels.v == neigh.src, "left")
-            .select(
+        new_labels = stage(
+            labels.join(neigh, labels.v == neigh.src, "left").select(
                 "v",
                 F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias(
                     "label"
                 ),
             )
         )
-        new_labels = new_labels.cache()
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "v")
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels.unpersist()
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
@@ -388,22 +382,12 @@ def dup_components(
             max_iter,
             changed,
         )
-    # Cut the returned frame's lineage with an eager localCheckpoint
-    # BEFORE unpersisting: labels' lineage threads back through every
-    # round's (already-unpersisted) predecessor and the edges cache, so a
-    # cache eviction under memory pressure would silently replay the
-    # entire candidate-generation pipeline once per propagation round —
-    # the exact blowup the caches exist to prevent. The checkpoint is
-    # cheap (labels is materialized; blocks are MEMORY_AND_DISK, spill-
-    # not-evict) and both caches can then be dropped immediately. On a
-    # multi-executor cluster, executor loss invalidates localCheckpoint
-    # blocks — jobs needing fault tolerance should set a checkpoint dir
-    # and swap in .checkpoint() at the call site.
-    final = labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("component")
-    ).localCheckpoint(eager=True)
-    labels.unpersist()
-    edges.unpersist()
+    # the result is renamed labels, staged on its own so that the last
+    # round and the edge table can be released before returning
+    final = stage(
+        labels.select(F.col("v").alias("doc_id"), F.col("label").alias("component"))
+    )
+    release(labels, edges)
     return final
 
 
@@ -711,9 +695,9 @@ def remove_repeated_windows(
         # would null both counts)
         tokens_col(F.coalesce(F.col(text_col), F.lit(""))).alias("_tk"),
     ).withColumn("_sh", rolling_hashes_from_tokens(F.col("_tk"), window))
-    # three consumers below (freq count, cov join, final join) and
-    # fan-out gets no CSE — freeze tokenize+shingle-md5 once
-    staged = staged.localCheckpoint(eager=True)
+    # three consumers below (freq count, cov join, final join), all in
+    # the returned plan — tokenize + shingle-md5 once
+    staged = stage(staged, eager=False)
     wins = staged.select("doc_id", F.posexplode(F.col("_sh")).alias("pos", "h"))
     freq = (
         wins.groupBy("h")
@@ -813,10 +797,7 @@ def simhash_neardup_pairs(
     hamming join (:func:`hamming_neardup_pairs` — also the engine for
     perceptual-image dedupe via functions/media.image_neardup_pairs).
     """
-    # lazy localCheckpoint (not .cache()): blocks are ContextCleaner-
-    # reclaimed when the result frame is dropped — repeated invocations
-    # no longer accumulate signature frames in executor storage
-    sig = simhash64(docs, text_col, id_col, n_bits).localCheckpoint(eager=False)
+    sig = stage(simhash64(docs, text_col, id_col, n_bits), eager=False)
     return hamming_neardup_pairs(
         sig,
         sig_col="simhash",
@@ -1070,21 +1051,23 @@ def build_minhash_index(
         cache-staging helpers (_commit_staging_dir) probe to tell a
         complete committed index from a crashed partial build.
 
-    One corpus scan computes signatures (cached — the cap accounting and
-    the band write share it; the bucket counts are likewise cached so
+    One corpus scan computes signatures (staged — the cap accounting and
+    the band write share it; the bucket counts are likewise staged so
     the corpus-sized band aggregation shuffles once, not once per
-    consumer), one computes shingles; sizes aggregate from the WRITTEN
-    shingles so tokenization never runs a third time.
+    consumer; both are released before the shingle pass), one computes
+    shingles; sizes aggregate from the WRITTEN shingles so tokenization
+    never runs a third time.
     """
     import os
 
     spark = docs.sparkSession
-    sig = minhash_signature(docs, text_col, id_col, k).cache()
+    sig = stage(minhash_signature(docs, text_col, id_col, k), eager=False)
     bands = _band_table(sig, k, rows_per_band).withColumn(
         "bucket", _hash_bucket_col(F.col("band_key"), n_buckets)
     )
-    counts = (
-        bands.groupBy("band_id", "band_key").agg(F.count("*").alias("n")).cache()
+    counts = stage(
+        bands.groupBy("band_id", "band_key").agg(F.count("*").alias("n")),
+        eager=False,
     )
     try:
         counts.filter(F.col("n") > max_bucket).write.mode("overwrite").parquet(
@@ -1100,8 +1083,7 @@ def build_minhash_index(
             .parquet(f"{path}/bands")
         )
     finally:
-        counts.unpersist()
-        sig.unpersist()
+        release(counts, sig)
     (
         _exploded_shingles(docs, text_col, id_col, n)
         .select(
@@ -1175,7 +1157,7 @@ def neardup_vs_index(
     multiply against a full old bucket (the quadratic the batch
     operator's cap exists to prevent).
 
-    Scale shape: the new batch is staged once (localCheckpoint — sig and
+    Scale shape: the new batch is staged once (sig and
     shingles both consume it; fan-out gets no CSE) and is assumed
     batch-sized, not corpus-sized. The distinct (band_id, bucket) combos
     of the batch are collected — bounded by n_bands x bucket_mod, NEVER
@@ -1199,9 +1181,9 @@ def neardup_vs_index(
     k, rpb = int(meta["k"]), int(meta["rows_per_band"])
     n, m = int(meta["n"]), int(meta["bucket_mod"])
     doc_mod = int(meta["doc_bucket_mod"])
-    staged = new_docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).localCheckpoint(eager=True)
+    staged = stage(
+        new_docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    )
     sig = minhash_signature(staged, "text", "doc_id", k)
     bands_all = _band_table(sig, k, rpb)
     key_counts = (
@@ -1227,16 +1209,14 @@ def neardup_vs_index(
                 over.count(),
                 n_docs_touched,
             )
-    bands_new = (
+    # consumed twice (combo collect + candidate join)
+    bands_new = stage(
         bands_all.join(
             key_counts.filter(F.col("n") <= max_bucket).select(
                 "band_id", "band_key"
             ),
             ["band_id", "band_key"],
-        )
-        .withColumn("bucket", _hash_bucket_col(F.col("band_key"), m))
-        # consumed twice (combo collect + candidate join)
-        .localCheckpoint(eager=True)
+        ).withColumn("bucket", _hash_bucket_col(F.col("band_key"), m))
     )
     per_band: dict[int, list[int]] = {}
     for r in bands_new.select("band_id", "bucket").distinct().collect():
@@ -1285,7 +1265,8 @@ def neardup_vs_index(
         # one re-execution of the candidate join for a fully-lazy
         # returned plan (plan-shape tests assert the partition pruning
         # on the bands scan, which a checkpoint would hide)
-        cands = cands.localCheckpoint(eager=True)
+        cands = stage(cands)
+        release(bands_new)
     old_buckets = [
         int(r["b"])
         for r in cands.select(
@@ -1294,12 +1275,13 @@ def neardup_vs_index(
         .distinct()
         .collect()
     ]
-    sh_new = (
-        _exploded_shingles(staged, "text", "doc_id", n)
-        .select(F.col("doc_id").alias("new_id"), F.md5("shingle").alias("h"))
-        # consumed twice (shared join + sizes agg)
-        .localCheckpoint(eager=True)
+    # consumed twice (shared join + sizes agg)
+    sh_new = stage(
+        _exploded_shingles(staged, "text", "doc_id", n).select(
+            F.col("doc_id").alias("new_id"), F.md5("shingle").alias("h")
+        )
     )
+    release(staged)
     sizes_new = sh_new.groupBy("new_id").agg(F.count("*").alias("n_new"))
     # always prune — an empty bucket list means no candidates, and the
     # empty In() keeps the old-corpus scans at zero partitions

@@ -16,7 +16,7 @@ order-defined result with bounded parallelism:
    numeric ids, a seeded sample otherwise — the RESULT is invariant to
    where the boundaries fall: any order-consistent bucketing yields the
    same global cumsum);
-2. ONE pass over the text (the localCheckpoint job) materializes
+2. ONE pass over the text (the staging job) materializes
    (id, n_tokens, bucket) — three narrow fields per doc — so the two
    consumers below never re-run the tokenization (DataFrame fan-out gets
    no common-subexpression reuse in Catalyst) and nondeterministic
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from docproc_spark.functions.text import token_count_col
+from docproc_spark.materialize import stage
 from docproc_spark.operators.topk import topk_per_group
 
 __all__ = ["pack_sequences", "cap_per_group"]
@@ -96,11 +97,10 @@ def pack_sequences(
     (whitespace tokens) unless ``n_tokens_col`` names a precomputed
     column.
 
-    EAGER: the assignment is materialized at call time (a localCheckpoint
+    EAGER: the assignment is materialized at call time (a staged frame
     of three narrow fields per doc — the price of running the
     tokenization exactly once and freezing nondeterministic sources; the
-    blocks are freed by the ContextCleaner once the returned frame is
-    garbage collected).
+    blocks go with the returned frame, see materialize).
 
     Output: (id_col, n_tokens, start_offset, end_offset, first_chunk,
     last_chunk, n_chunks) — an assignment table; join back on ``id_col``
@@ -130,14 +130,14 @@ def pack_sequences(
     bucket = F.lit(0)
     for b in boundaries:
         bucket = bucket + F.when(F.col(id_col) > F.lit(b), 1).otherwise(0)
-    # The ONE full pass over the text: tokenize + bucket, checkpointed.
+    # The ONE full pass over the text: tokenize + bucket, staged.
     # Without this, the totals job AND the window job would each re-run
     # the whole upstream derivation (fan-out = no CSE in Catalyst), and a
     # nondeterministic source could give the two branches different rows
     # (totals from one materialization, offsets from another).
-    withb = base.withColumn("_b", bucket.cast("int")).localCheckpoint(eager=True)
+    withb = stage(base.withColumn("_b", bucket.cast("int")))
 
-    # Per-bucket token totals over the checkpointed longs -> driver-side
+    # Per-bucket token totals over the staged longs -> driver-side
     # prefix sums. <= n_buckets rows cross the driver; exact long math.
     # `or 0` not a .get default: an all-NULL-token bucket (every doc has
     # NULL text) yields SUM() = NULL under a PRESENT key.

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from docproc_spark.materialize import stage
+
 
 def global_row_number(
     df: DataFrame,
@@ -101,7 +103,7 @@ def assign_shards(
 
     Scale shape: the only global coordination is the range-bucketed exact
     rank (global_row_number — never a single-reducer window); the narrow
-    (id, n_tokens) frame is localCheckpointed so the rank's probe jobs and
+    (id, n_tokens) frame is staged so the rank's probe jobs and
     the final pass tokenize each document ONCE. Null/empty texts count 0
     tokens and are still assigned — a shard writer must place every row.
 
@@ -124,10 +126,10 @@ def assign_shards(
         F.coalesce(nt, F.lit(0)).alias("n_tokens"),
     ).withColumn(neg, -F.col("n_tokens"))
     # freeze the narrow frame: global_row_number runs eager probe jobs and
-    # a final window — uncheckpointed, each one re-tokenizes the corpus
+    # a final window — unstaged, each one re-tokenizes the corpus
     # (fan-out gets no CSE) and a nondeterministic source could feed the
     # probe and the window different rows
-    base = base.localCheckpoint(eager=True)
+    base = stage(base)
     ranked, _ = global_row_number(
         base, neg, id_col, out_col="rank", rank_buckets=rank_buckets
     )

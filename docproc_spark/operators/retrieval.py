@@ -134,7 +134,6 @@ def build_text_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_term_buckets: int = 64,
-    single_pass: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Inverted index for BM25 serving: returns ``(postings, doclens)``
     with postings (term, term_bucket, doc_id, tf, n_term_buckets) — one
@@ -153,12 +152,9 @@ def build_text_index(
     (lowercased whitespace), so ``bm25_topk_indexed`` over this index is
     bit-equal to the scan path.
 
-    The two returned frames each re-derive the staged tokenization —
-    materializing both costs two corpus scans (fan-out gets no CSE).
-    ``single_pass=True`` localCheckpoints the token frame eagerly so
-    both outputs share one tokenization pass — right when building both
-    outputs now on an expensive source; leave False when the caller
-    persists only one side or checkpoints upstream itself.
+    The two returned frames each re-derive the tokenization —
+    materializing both costs two corpus scans (fan-out gets no CSE);
+    stage ``docs`` upstream when its source is expensive.
     """
     if n_term_buckets <= 0:
         raise ValueError("n_term_buckets must be positive")
@@ -166,8 +162,6 @@ def build_text_index(
         F.col(id_col).alias("doc_id"),
         tokens_col(F.lower(F.coalesce(F.col(text_col), F.lit("")))).alias("_lt"),
     )
-    if single_pass:
-        staged = staged.localCheckpoint(eager=True)
     doclens = staged.select(
         "doc_id", F.size("_lt").cast("long").alias("dl")
     )

@@ -28,6 +28,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from docproc_spark.materialize import release, stage
+
 
 def dot_col(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -237,7 +239,6 @@ def cosine_neardup_pairs_lsh(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pin_lifetime: str = "session",
 ) -> DataFrame:
     """Approximate near-dup pairs with band-OR amplification.
 
@@ -251,26 +252,15 @@ def cosine_neardup_pairs_lsh(
     near-dup thresholds (low θ); at loose thresholds prefer the exact
     operator on a bounded candidate set.
 
-    Cache contract (``pin_lifetime``): the banded-bucket table is cached
-    because the self-join reads it on both sides (fan-out gets no CSE).
-    With the default ``"session"`` the returned frame is lazy and the
-    cache stays pinned until spark.catalog.clearCache() — the batch-job
-    contract shared with minhash_neardup_pairs / simhash_neardup_pairs.
-    ``"call"`` is the long-lived-service contract: the result is
-    materialized via an eager localCheckpoint (lineage cut, blocks owned
-    by the returned frame and freed by the ContextCleaner when it is
-    garbage collected) and the bucket cache is unpersisted before
-    returning — repeated calls leave NO residual pinned tables
-    (asserted in tests/test_plans.py).
+    The banded-bucket table is staged lazily: the self-join reads it on
+    both sides, and its blocks go with the returned frame.
     """
-    if pin_lifetime not in ("session", "call"):
-        raise ValueError(f"pin_lifetime must be session|call: {pin_lifetime!r}")
     dims = _dims_of(emb, vec_col)  # one probe for all bands
-    # one corpus scan for all bands, cached: the self-join references the
-    # bucket table on both sides (no fan-out CSE)
-    b = _banded_buckets(
-        emb, n_bands, planes_per_band, seed, id_col, vec_col, dims
-    ).cache()
+    # one corpus scan for all bands
+    b = stage(
+        _banded_buckets(emb, n_bands, planes_per_band, seed, id_col, vec_col, dims),
+        eager=False,
+    )
     left = b.select(
         "band", "bucket", F.col("vec_id").alias("a"), F.col(vec_col).alias("va")
     )
@@ -282,7 +272,7 @@ def cosine_neardup_pairs_lsh(
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", "va", "vb")
     )
-    out = (
+    return (
         pairs.dropDuplicates(["a", "b"])
         .select(
             "a",
@@ -291,10 +281,6 @@ def cosine_neardup_pairs_lsh(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-    if pin_lifetime == "call":
-        out = out.localCheckpoint(eager=True)
-        b.unpersist()
-    return out
 
 
 def semdedup(
@@ -304,7 +290,6 @@ def semdedup(
     kmeans_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pin_lifetime: str = "session",
     fit_fraction: float | None = None,
     deterministic_fit: bool = True,
 ) -> DataFrame:
@@ -324,7 +309,7 @@ def semdedup(
     with the corpus so cluster sizes stay bounded, and the assignment is
     one scan with a broadcast centroid table. The within-cluster self-join
     shuffles on cent_id only, and each vector's norm is computed ONCE in
-    the cached assignment table, not per pair (HOF folds are interpreted —
+    the staged assignment table, not per pair (HOF folds are interpreted —
     no subexpression elimination across pairs). At 100-TB scale fit the
     quantizer on a sample: ``fit_fraction`` filters the fit input by the
     engine-portable md5 hash of the id (sampling.hash_sample — still
@@ -333,15 +318,11 @@ def semdedup(
     massive-fit path, bit-reproducibility traded away). The defaults
     (full-corpus, deterministic) are the oracle-checkable configuration.
 
-    Cache contract (``pin_lifetime``): the assignment table feeds both
-    sides of the self-join plus the final left join (fan-out gets no CSE),
-    so it is cached. ``"session"`` (batch default) leaves the cache pinned
-    until clearCache; ``"call"`` materializes the result via an eager
-    localCheckpoint and unpersists before returning — the long-lived
-    service contract shared with cosine_neardup_pairs_lsh.
+    The assignment table feeds both sides of the self-join plus the final
+    left join, so it is staged, and the returned frame holds it. It is
+    staged eagerly because the centroids it reads are released before
+    returning.
     """
-    if pin_lifetime not in ("session", "call"):
-        raise ValueError(f"pin_lifetime must be session|call: {pin_lifetime!r}")
     fit_input = emb
     if fit_fraction is not None:
         if not 0.0 < fit_fraction <= 1.0:
@@ -357,11 +338,12 @@ def semdedup(
         vec_col=vec_col,
         deterministic=deterministic_fit,
     )
-    assigned = (
-        _assign_to_centroids(emb, cents, id_col, vec_col)
-        .withColumn("_sd_norm", norm_col(F.col(vec_col)))
-        .cache()
+    assigned = stage(
+        _assign_to_centroids(emb, cents, id_col, vec_col).withColumn(
+            "_sd_norm", norm_col(F.col(vec_col))
+        )
     )
+    release(cents)
     left = assigned.select(
         "cent_id",
         F.col("vec_id").alias("a"),
@@ -394,17 +376,12 @@ def semdedup(
         )
         .select(F.col("b").alias("vec_id"), "mx")
     )
-    out = assigned.select("vec_id", "cent_id").join(sims, "vec_id", "left").select(
+    return assigned.select("vec_id", "cent_id").join(sims, "vec_id", "left").select(
         "vec_id",
         "cent_id",
         F.round(F.col("mx"), 4).alias("max_prior_sim"),
         (F.col("mx").isNull() | (F.col("mx") < F.lit(threshold))).alias("keep"),
     )
-    if pin_lifetime == "call":
-        out = out.localCheckpoint(eager=True)
-        assigned.unpersist()
-        cents.unpersist()  # kmeans_centroids returns its frame cached
-    return out
 
 
 def kmeans_centroids(
@@ -432,12 +409,18 @@ def kmeans_centroids(
     oracle. The sorted fold costs a per-group collect; for massive fits
     (where k-means runs over a sample anyway) pass deterministic=False to
     use streaming avg.
+
+    Each round's centroids are staged and the previous round's released;
+    the returned frame is the last round's staged table (tiny: n_lists
+    rows).
     """
-    cents = emb.orderBy(id_col).limit(n_lists).select(
-        F.col(id_col).alias("cent_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cvec"),
+    cents = stage(
+        emb.orderBy(id_col).limit(n_lists).select(
+            F.col(id_col).alias("cent_id"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cvec"),
+        ),
+        eager=False,
     )
-    cents = cents.cache()
     for _ in range(n_iter):
         # one assignment rule for fit AND index build — a second inline
         # copy could silently drift on the tie-break
@@ -468,19 +451,16 @@ def kmeans_centroids(
                 ).alias("new_cvec")
             )
         )
-        new_cents = (
-            cents.join(means, "cent_id", "left")
-            .select(
+        # staged each round: the next round reads cents on BOTH the
+        # assignment and the join side (no fan-out CSE) — unstaged, the
+        # plan re-executes every earlier round, ~2^n_iter blowup
+        new_cents = stage(
+            cents.join(means, "cent_id", "left").select(
                 "cent_id",
                 F.coalesce("new_cvec", "cvec").alias("cvec"),  # keep empty clusters
             )
-            # cache each round: the next round references cents on BOTH the
-            # assignment and the join side (no fan-out CSE) — uncached, the
-            # plan re-executes every earlier round, ~2^n_iter blowup
-            .cache()
         )
-        new_cents.count()  # materialize before dropping the parent
-        cents.unpersist()
+        release(cents)
         cents = new_cents
     return cents
 
@@ -540,7 +520,6 @@ def lsh_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pin_lifetime: str = "session",
 ) -> DataFrame:
     """Approximate top-k: exact cosine within the query's LSH bucket,
     band-OR amplified (union of the query's bucket across b independent
@@ -550,19 +529,14 @@ def lsh_topk(
     build_lsh_index + lsh_index_topk below — and a query reads b/2^r of
     the data via partition pruning.
 
-    Cache contract (``pin_lifetime``): "session" (default) caches the
-    banded-bucket table for the session (candidate join reads it on both
-    sides; clearCache() between corpora); "call" materializes the k-row
-    result via eager localCheckpoint and unpersists the bucket cache
-    before returning — the long-lived-service mode, no residual pinned
-    tables per call (asserted in tests/test_plans.py).
+    The banded-bucket table is staged lazily (the candidate join reads it
+    on both sides), and its blocks go with the returned frame.
     """
-    if pin_lifetime not in ("session", "call"):
-        raise ValueError(f"pin_lifetime must be session|call: {pin_lifetime!r}")
     dims = _dims_of(emb, vec_col)  # one probe for all bands
-    b = _banded_buckets(
-        emb, n_bands, planes_per_band, seed, id_col, vec_col, dims
-    ).cache()
+    b = stage(
+        _banded_buckets(emb, n_bands, planes_per_band, seed, id_col, vec_col, dims),
+        eager=False,
+    )
     qrows = b.filter(F.col("vec_id") == query_vec_id).select(
         "band", "bucket", F.col(vec_col).alias("_qvec")
     )
@@ -571,7 +545,7 @@ def lsh_topk(
         .filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", F.col(vec_col).alias("_v"), "_qvec")
     )
-    out = (
+    return (
         cands.dropDuplicates(["vec_id"])
         .select(
             "vec_id",
@@ -580,20 +554,16 @@ def lsh_topk(
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )
-    if pin_lifetime == "call":
-        out = out.localCheckpoint(eager=True)
-        b.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
-# Persisted ANN indexes — the 100-TB query path
+# Persisted ANN index — the 100-TB query path
 # ---------------------------------------------------------------------------
-# Build once (one scan of the corpus), write partitioned by the coarse key;
-# every query is then a partition-PRUNED scan of ~b/2^r (LSH) or
-# ~n_probe/n_lists (IVF) of the data plus an exact-cosine re-rank. Index
-# parameters (bands/planes/seed, n_lists) are the caller's contract — at
-# scale they live in a catalog entry next to the table.
+# Build once (one scan of the corpus), write partitioned by (band, bucket);
+# every query is then a partition-PRUNED scan of ~b/2^r of the data plus an
+# exact-cosine re-rank. Index parameters (bands/planes/seed) are the
+# caller's contract — at scale they live in a catalog entry next to the
+# table.
 
 
 def build_lsh_index(
@@ -673,63 +643,4 @@ def _assign_to_centroids(
         )
         .filter(F.col("rn") == 1)
         .select(F.col(id_col).alias("vec_id"), F.col(vec_col), F.col("cent_id"))
-    )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    kmeans_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fit the coarse quantizer and write the inverted lists partitioned by
-    cent_id (plus the tiny centroid table at <path>_centroids). At scale
-    the k-means fit runs over a sample; the assignment is one scan."""
-    cents = kmeans_centroids(
-        emb, n_lists=n_lists, n_iter=kmeans_iter, id_col=id_col, vec_col=vec_col
-    )
-    cents = cents.cache()
-    assigned = _assign_to_centroids(emb, cents, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cent_id").parquet(path)
-    cents.write.mode("overwrite").parquet(path + "_centroids")
-    cents.unpersist()
-
-
-def ivf_index_topk(
-    spark,
-    path: str,
-    query_vec,
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Top-k against a built IVF index: pick the n_probe nearest centroids
-    driver-side (the centroid table is tiny — n_lists rows), then an exact
-    cosine re-rank over a cent_id-PRUNED scan of the inverted lists."""
-    import math
-
-    q = [float(x) for x in query_vec]
-    qn = math.sqrt(sum(x * x for x in q))
-
-    def cos(c):
-        num = sum(x * y for x, y in zip(c, q))
-        return num / (math.sqrt(sum(x * x for x in c)) * qn)
-
-    cents = spark.read.parquet(path + "_centroids").collect()
-    ranked = sorted(((cos(r["cvec"]), -r["cent_id"]) for r in cents), reverse=True)
-    probes = [int(-c) for _, c in ranked[:n_probe]]
-    qlit = F.array(*[F.lit(x) for x in q])
-    idx = spark.read.parquet(path).filter(F.col("cent_id").isin(probes))
-    if exclude_vec_id is not None:
-        idx = idx.filter(F.col("vec_id") != exclude_vec_id)
-    return (
-        idx.select(
-            "vec_id",
-            F.round(cosine_col(F.col(vec_col), qlit), 4).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(k)
     )

@@ -62,6 +62,7 @@ from docproc_spark.kernels.assembly import (
     page_partials,
 )
 from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT, unchanged_gates
+from docproc_spark.materialize import stage
 from docproc_spark.partition import INTROSPECTION_ERRORS, fast_path_disabled
 from docproc_spark.schema import OUT_SPAN_STRUCT, SPAN_STRUCT
 
@@ -306,8 +307,8 @@ def _footer_bound(docs: DataFrame, plan: Any) -> int | None:
 
 
 def _staged(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans, n_spans) of a derived input, as a lazy
-    localCheckpoint: ``spans`` is derived_spans (the HTML-derived spans
+    """(doc_id, spans, n_spans) of a derived input, staged lazily:
+    ``spans`` is derived_spans (the HTML-derived spans
     merged in, so no raw_html is left to parse) and ``n_spans`` its exact
     size.
 
@@ -316,13 +317,14 @@ def _staged(docs: DataFrame) -> DataFrame:
     parse, a join) runs once per call, and a page is routed on the blocks
     it really holds. The HTML spans are made by the masked html_spans_udf:
     only raw_html and url cross into Python, never the input spans. A
-    fresh checkpoint per call reads a rewritten input again, and the
-    ContextCleaner releases its blocks once the result is dropped."""
+    fresh stage per call reads a rewritten input again, and the blocks go
+    with the result."""
     spans = derived_spans(docs)
-    return (
-        docs.select("doc_id", spans.alias("spans"))
-        .withColumn("n_spans", F.size("spans"))
-        .localCheckpoint(eager=False)
+    return stage(
+        docs.select("doc_id", spans.alias("spans")).withColumn(
+            "n_spans", F.size("spans")
+        ),
+        eager=False,
     )
 
 
@@ -332,7 +334,6 @@ def extract(
     drop_kinds: frozenset = DROP_KINDS_DEFAULT,
     drop_exact_duplicates: bool = True,
     mega_doc_threshold: int | None = 100_000,
-    probe_routing: bool = True,
 ) -> DataFrame:
     """Full pipeline: documents(doc_id, doc_type, raw_html, spans) → result.
 
@@ -360,10 +361,10 @@ def extract(
     (below) routes on its exact span count instead. Fallback without the
     column is F.size on the source array. Pass None to disable routing.
 
-    ``probe_routing`` (default True): when the input carries the
-    ingest-time ``n_spans`` column, prove at plan-construction time that
-    no row can cross the threshold, and then do not build the salted
-    union branch at all: the common no-mega-doc table gets the
+    When the input carries the ingest-time ``n_spans`` column, routing
+    first tries to prove at plan-construction time that no row can cross
+    the threshold, and then does not build the salted union branch at
+    all: the common no-mega-doc table gets the
     single-branch plan (the empty salted branch still costs an extra scan
     + empty shuffle stages per run, measured ~0.7 s at sf0.1). On a
     scan-like plan (_scan_plan) over one parquet relation whose own
@@ -377,13 +378,13 @@ def extract(
     decides, reading only the routing columns. A derived plan
     (facade.load_files' mapInPandas parses, joins, unions) is first
     staged (_staged): its rows, with the HTML-derived spans merged in and
-    their exact count as ``n_spans``, become one lazy localCheckpoint that
-    the probe's job computes and both branches read. The derivation then
+    their exact count as ``n_spans``, are staged lazily once, and the
+    probe's job computes them for both branches to read. The derivation then
     runs once per call, and an HTML page is routed on the blocks it holds,
     not on len(raw_html)/8. The probe is skipped (static two-branch plan
     kept) for streaming inputs and for tables without ``n_spans`` (the
-    estimate would need the full spans array — not a cheap probe).
-    ``probe_routing=False`` disables it outright. The probe job runs with
+    estimate would need the full spans array — not a cheap probe). The
+    probe job runs with
     the job description ``docproc extract: routing probe``; the caller's
     description is restored afterwards.
     """
@@ -398,7 +399,7 @@ def extract(
                 mega_doc_threshold=None,
             )
 
-        probe = probe_routing and "n_spans" in docs.columns and not docs.isStreaming
+        probe = "n_spans" in docs.columns and not docs.isStreaming
         if probe:
             plan = _scan_plan(docs)
             if plan is None:

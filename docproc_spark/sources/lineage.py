@@ -16,6 +16,8 @@ Design (Iceberg semantics, parquet fallback in this container):
     succeeds, so a crash between data-write and lineage-append is safe
     (the bucket is simply redone, overwriting identical output).
   - resume = anti-join pending buckets against completed lineage parts.
+  - the bucketed corpus is staged lazily once (materialize.stage), so the
+    buckets do not re-run its lineage, and released when the run ends.
 
 On a real cluster each bucket is itself fully distributed (a bucket is a
 filter, not a coalesce) — bucket count controls checkpoint granularity,
@@ -29,6 +31,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from docproc_spark.materialize import release, stage
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -143,7 +147,7 @@ def run_with_lineage(
             "transform output already has a 'part' column — it would "
             "collide with the lineage partition layout; rename it upstream"
         )
-    parted = with_part(docs, n_parts).cache()
+    parted = stage(with_part(docs, n_parts), eager=False)
     processed: list[int] = []
     _emit_progress(
         progress_path,
@@ -166,7 +170,7 @@ def run_with_lineage(
             result = transform(bucket).withColumn("part", F.lit(p))
             # Observation metrics piggyback on the write job itself — a
             # separate result.agg() would re-run the whole extraction
-            # transform (nothing is cached), doubling checkpointed cost.
+            # transform (nothing is staged), doubling checkpointed cost.
             from pyspark.sql import Observation
 
             obs = Observation(f"lineage_part_{p}")
@@ -197,6 +201,6 @@ def run_with_lineage(
                  "ts": time.time()},
             )
     finally:
-        parted.unpersist()
+        release(parted)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     return processed

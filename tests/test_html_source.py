@@ -273,7 +273,7 @@ def test_extract_resolves_media_identity_against_page_url(spark):
     ).withColumn("spans", F.lit(None).cast(SPANS_T))
     rows = {
         r["doc_id"]: r.asDict(recursive=True)
-        for r in extract(df, probe_routing=False).collect()
+        for r in extract(df).collect()
     }
     refs = {
         d: [s["media_ref"] for s in r["spans"] if s["kind"] == "figure"]

@@ -397,7 +397,7 @@ def test_extract_runs_on_ooxml_output(spark):
     table = load_ooxml(spark.createDataFrame(pdf)).drop(
         "sheet_names", "parse_error"
     )
-    rows = {r["doc_id"]: r for r in extract(table, probe_routing=False).collect()}
+    rows = {r["doc_id"]: r for r in extract(table).collect()}
     assert set(rows) == {"d1", "x1"}
     assert rows["d1"]["markdown"]  # non-empty assembled output
     assert all(s["offset"] == i for i, s in enumerate(rows["d1"]["spans"]))

@@ -338,32 +338,6 @@ def test_lsh_index_build_and_pruned_query(spark, tmp_path):
     ]
 
 
-def test_ivf_index_build_and_pruned_query(spark, tmp_path):
-    """Persisted IVF index: probed-list query is a cent_id-pruned scan with
-    recall vs brute force matching the inline operator."""
-    from docproc_spark.operators.similarity import (
-        brute_force_topk,
-        build_ivf_index,
-        ivf_index_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    path = str(tmp_path / "ivf_idx")
-    build_ivf_index(emb, path, n_lists=16, kmeans_iter=2)
-
-    got = ivf_index_topk(spark, path, qvec, k=10, n_probe=4, exclude_vec_id=0)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    pf = re.search(r"PartitionFilters: \[([^\]]*)", plan)
-    assert pf and "cent_id" in pf.group(1), plan[:800]
-    bf = {r["vec_id"] for r in brute_force_topk(emb, 0, 10).collect()}
-    idx = {r["vec_id"] for r in got.collect()}
-    recall = len(bf & idx) / 10
-    assert recall >= 0.8, f"IVF index recall {recall}"
-
-
 def test_minhash_neardup_composition_finds_planted_dups(spark):
     """Composed candidates→verify pipeline: every planted near-dup pair is
     found; unrelated pairs are rejected by the Jaccard verify; the
@@ -1371,7 +1345,7 @@ def test_semdedup_cluster_scoped_first_wins(spark):
     """SemDeDup contract: within a cluster, a vector whose cosine to a
     LOWER-id member reaches the threshold is dropped; the lowest-id member
     of every cluster survives with a NULL max_prior_sim; near-orthogonal
-    members survive. pin_lifetime="call" leaves the SQL cache empty."""
+    members survive, and the call leaves the SQL cache empty."""
     from docproc_spark.operators.similarity import semdedup
 
     # two tight clusters along axes 0 and 1, plus an odd vector per cluster
@@ -1404,12 +1378,10 @@ def test_semdedup_cluster_scoped_first_wins(spark):
     spark.catalog.clearCache()
     got_call = {
         r["vec_id"]: r["keep"]
-        for r in semdedup(
-            emb, threshold=0.95, n_lists=2, kmeans_iter=1, pin_lifetime="call"
-        ).collect()
+        for r in semdedup(emb, threshold=0.95, n_lists=2, kmeans_iter=1).collect()
     }
     assert got_call == {k: v["keep"] for k, v in got.items()}
-    assert cache_mgr.isEmpty(), "semdedup call-mode left a pinned cache"
+    assert cache_mgr.isEmpty(), "semdedup left a pinned cache"
 
     # scale-path knobs: fit_fraction=1.0 is the identity sample; the
     # streaming-avg fit still separates these clearly-split clusters
@@ -1424,8 +1396,6 @@ def test_semdedup_cluster_scoped_first_wins(spark):
 
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="pin_lifetime"):
-        semdedup(emb, pin_lifetime="forever")
     with _pytest.raises(ValueError, match="fit_fraction"):
         semdedup(emb, fit_fraction=0.0)
 

@@ -138,7 +138,7 @@ def test_extract_runs_on_pdf_output(spark):
         pd.DataFrame({"doc_id": ["p1"], "content": [make_pdf()]})
     )
     table = load_pdf(src).drop("sheet_names", "parse_error")
-    rows = {r["doc_id"]: r for r in extract(table, probe_routing=False).collect()}
+    rows = {r["doc_id"]: r for r in extract(table).collect()}
     assert rows["p1"]["n_pages"] == 2
     assert "Hello world" in rows["p1"]["markdown"]
 

@@ -160,11 +160,11 @@ def test_extract_on_canonical_span_only_shape(spark, tmp_path):
     path = str(tmp_path / "span_only")
     no_html.select("doc_id", "spans", "n_spans").write.parquet(path)
     span_only = spark.read.parquet(path)
-    # probe_routing=False keeps the static two-branch plan this test is
-    # about; the default eager probe would elide the salted branch here
-    # (max n_spans=300 < threshold) — that path is covered by
+    # a threshold under the corpus maximum keeps the two-branch plan this
+    # test is about; at the default threshold the probe would elide the
+    # salted branch — that path is covered by
     # test_probe_elides_dead_salted_branch.
-    res = extract(span_only, probe_routing=False)
+    res = extract(span_only, mega_doc_threshold=5)
     # both branches scan in the one executed plan
     plan = res._jdf.queryExecution().executedPlan().toString()
     pushed = set(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
@@ -193,17 +193,13 @@ def test_probe_elides_dead_salted_branch(spark, tmp_path):
     plan = elided._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan, plan[:2000]
 
-    static = extract(docs, probe_routing=False)
-    static_plan = static._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" in static_plan
-
     # threshold below the corpus max estimate (10) → probe must KEEP the union
     routed = extract(docs, mega_doc_threshold=5)
     routed_plan = routed._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" in routed_plan
 
     want = {
-        r["doc_id"]: (r["markdown"], r["n_pages"]) for r in static.collect()
+        r["doc_id"]: (r["markdown"], r["n_pages"]) for r in routed.collect()
     }
     got = {r["doc_id"]: (r["markdown"], r["n_pages"]) for r in elided.collect()}
     assert got == want
@@ -220,8 +216,7 @@ def _span_doc(doc_id: str, n: int) -> dict:
 
 def test_derived_input_is_parsed_once_and_routed_on_real_spans(spark):
     """A mapInPandas-derived input is staged once per extract call: the
-    parse runs once per row (the static union of probe_routing=False runs
-    it once per branch), the plan is the single Arrow map when no document
+    parse runs once per row, the plan is the single Arrow map when no document
     crosses the threshold, and the salted union when one document's real
     span count does, though the table's n_spans column says 0."""
     import pandas as pd
@@ -264,10 +259,6 @@ def test_derived_input_is_parsed_once_and_routed_on_real_spans(spark):
                for r in res.collect()}
         assert got == want
         return parsed.value - before, plan
-
-    calls, plan = run(probe_routing=False)
-    assert "Union" in plan
-    assert calls == 4, "the static union parses once per branch"
 
     calls, plan = run()
     assert "Union" not in plan and plan.count("MapInArrow") == 1, plan

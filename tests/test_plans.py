@@ -41,10 +41,11 @@ def test_extract_is_single_pass(spark, tmp_path):
     # with the r4 stats probe, the DEFAULT plan for a no-mega-doc corpus
     # is the same single-pass shape (dead salted branch elided)
     assert_one_arrow_map(extract(docs))
-    # probe disabled → the static routed plan carries the salted branch:
-    # two grouped Arrow maps (page partials, document merge), no join or
-    # window, and no Python UDF but the masked pandas html_spans_udf
-    routed = extract(docs, probe_routing=False)
+    # a threshold under the corpus maximum keeps the routed plan with the
+    # salted branch: two grouped Arrow maps (page partials, document
+    # merge), no join or window, and no Python UDF but the masked pandas
+    # html_spans_udf
+    routed = extract(docs, mega_doc_threshold=5)
     s3 = plan_summary(routed)
     assert s3["unions"] >= 1
     plan = _plan(routed)
@@ -117,11 +118,10 @@ def test_minhash_candidates_aqe_broadcasts_small_bucket_list(spark):
     )
 
 
-def test_pin_lifetime_call_leaves_no_cached_tables(spark):
-    """pin_lifetime="call" must leave the SQL cache EMPTY after each call
-    (long-lived-service contract): the result is localCheckpoint-
-    materialized and the banded-bucket cache unpersisted before return.
-    Default "session" keeps the documented pinned cache (cleared here)."""
+def test_lsh_operators_leave_no_cached_tables(spark):
+    """lsh_topk and cosine_neardup_pairs_lsh leave the SQL cache EMPTY
+    after each call: the banded-bucket table is staged with the result,
+    not cached, so repeated calls pin nothing and give equal results."""
     from docproc_spark.operators.similarity import (
         cosine_neardup_pairs_lsh,
         lsh_topk,
@@ -139,35 +139,23 @@ def test_pin_lifetime_call_leaves_no_cached_tables(spark):
     assert cache_mgr.isEmpty()
 
     want_topk = [tuple(r) for r in lsh_topk(corpus(), k=5).collect()]
-    spark.catalog.clearCache()
+    assert cache_mgr.isEmpty()
 
     for _ in range(3):  # repeated calls: no growth
-        got = [tuple(r) for r in lsh_topk(corpus(), k=5, pin_lifetime="call").collect()]
+        got = [tuple(r) for r in lsh_topk(corpus(), k=5).collect()]
         assert got == want_topk
-        assert cache_mgr.isEmpty(), "call-mode left a pinned cache"
+        assert cache_mgr.isEmpty(), "lsh_topk left a pinned cache"
 
     want_pairs = {
         (r["a"], r["b"]) for r in cosine_neardup_pairs_lsh(corpus(), threshold=0.5).collect()
     }
-    spark.catalog.clearCache()
+    assert cache_mgr.isEmpty()
     got_pairs = {
         (r["a"], r["b"])
-        for r in cosine_neardup_pairs_lsh(
-            corpus(), threshold=0.5, pin_lifetime="call"
-        ).collect()
+        for r in cosine_neardup_pairs_lsh(corpus(), threshold=0.5).collect()
     }
     assert got_pairs == want_pairs
     assert cache_mgr.isEmpty()
-
-    # session default still pins (the documented batch contract)
-    lsh_topk(corpus(), k=5).collect()
-    assert not cache_mgr.isEmpty()
-    spark.catalog.clearCache()
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="pin_lifetime"):
-        lsh_topk(corpus(), pin_lifetime="forever")
 
 
 def test_bm25_index_partition_pruning(spark, tmp_path):
@@ -202,33 +190,38 @@ def test_bm25_index_partition_pruning(spark, tmp_path):
     assert any("In(term, [scan,shuffle" in f for f in pf), pf
 
 
-def test_semdedup_plan_shape(spark):
+def test_semdedup_plan_shape(spark, monkeypatch):
     """semdedup at scale: the centroid assignment must be a BROADCAST
     nested-loop against the tiny centroid table (never a shuffled or
     cartesian join of the corpus), the pairwise stage must join on
     cent_id (cluster-scoped — the O(n^2) guard), and no driver-side
-    single-partition exchange anywhere."""
-    from docproc_spark.operators.similarity import semdedup
+    single-partition exchange anywhere. The assignment table is staged,
+    and its LogicalRDD hides the broadcast from the result's plan, so
+    that part is read from the plan of the frame semdedup staged."""
+    from docproc_spark import materialize
+    from docproc_spark.operators import similarity
 
+    staged = []
+
+    def recording_stage(df, **kw):
+        staged.append(df)
+        return materialize.stage(df, **kw)
+
+    monkeypatch.setattr(similarity, "stage", recording_stage)
     emb = spark.createDataFrame(
         [(i, [float((i * 13 + d * 5) % 17) - 8.0 for d in range(8)]) for i in range(60)],
         "vec_id long, embedding array<double>",
     )
-    out = semdedup(emb, threshold=0.9, n_lists=4, kmeans_iter=1, pin_lifetime="call")
+    out = similarity.semdedup(emb, threshold=0.9, n_lists=4, kmeans_iter=1)
     plan = _plan(out)
-    assert "CartesianProduct" not in plan, "unguarded cartesian in semdedup"
-    assert "Exchange SinglePartition" not in plan
-    spark.catalog.clearCache()
-
-    # static plan of a fresh (uncollected) call shows the structure:
-    # broadcast assignment + a cent_id-keyed equi-join for the pairs
-    out2 = semdedup(emb, threshold=0.9, n_lists=4, kmeans_iter=1)
-    plan2 = _plan(out2)
-    assert "BroadcastNestedLoopJoin" in plan2, "centroid table not broadcast"
-    assert re.search(r"hashpartitioning\(cent_id", plan2), (
+    assigned = _plan(staged[-1])  # the last stage: the assignment table
+    for p in (plan, assigned):
+        assert "CartesianProduct" not in p, "unguarded cartesian in semdedup"
+        assert "Exchange SinglePartition" not in p
+    assert "BroadcastNestedLoopJoin" in assigned, "centroid table not broadcast"
+    assert re.search(r"hashpartitioning\(cent_id", plan), (
         "pairwise stage is not cluster-scoped (no cent_id shuffle)"
     )
-    spark.catalog.clearCache()
 
 
 def test_assign_shards_no_global_window(spark):
