@@ -361,11 +361,13 @@ class DocprocSpark:
         directory parses every file again and holds a copy of its spans
         until the result is dropped; a parquet scan is routed from its
         footers' statistics with no job where they prove that no
-        document crosses the threshold, and by a probe of its routing
-        columns alone otherwise; (b) the ingest-time ``n_spans`` column only prunes
-        parquet row groups from a real scan; (c) DataFrame fan-out gets
-        no common-subexpression reuse, so every additional consumer of
-        the un-checkpointed frame re-parses every byte. One write makes
+        document crosses pipeline.MEGA_DOC_SPANS, and by one probe job
+        over its routing columns alone otherwise; (b) the ingest-time
+        ``n_spans`` column only prunes parquet row groups from a real
+        scan, and without it the probe reads every span list; (c)
+        DataFrame fan-out gets no common-subexpression reuse, so every
+        additional consumer of the un-checkpointed frame re-parses every
+        byte. One write makes
         all downstream consumers scan-cheap.
 
         The parquet table keeps the ``parse_error`` column; both returned

@@ -11,15 +11,13 @@ the reference; here deterministic layout heuristics stand in:
   footer  block's vertical center in the bottom HEADER_BAND of the page
   text    everything else
 
-Blocks with blank text are dropped (pdf_loader.py:27). Both a pure-python
-kernel (oracle/tests) and a native Column implementation (cluster path)
-are provided; they must agree.
+Blocks with blank text (by Python str.strip()) are dropped
+(pdf_loader.py:27). The kernel is plain Python over a document's
+blocks: sources.pdf calls blocks_to_spans inside its mapInPandas parse,
+so the cluster path and the tests run the same function.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
 
 HEADER_BAND = 0.08  # fraction of page height treated as header/footer zone
 
@@ -65,72 +63,3 @@ def blocks_to_spans(
             }
         )
     return out
-
-
-def classify_block_col(text: Column, y_center: Column, page_height: Column) -> Column:
-    # has_nonblank_col, NOT F.trim != "": the scalar twin uses python
-    # str.strip() (Unicode + \t\n); F.trim strips U+0020 only, so a
-    # '\t\t' line would count as non-blank here but not in the kernel
-    from docproc_spark.pipeline import has_nonblank_col
-
-    lines = F.filter(
-        F.split(F.coalesce(text, F.lit("")), "\n"), lambda l: has_nonblank_col(l)
-    )
-    n_table_lines = F.size(F.filter(lines, lambda l: l.contains(" | ")))
-    return (
-        F.when(n_table_lines >= 2, F.lit("table"))
-        .when(
-            (page_height > 0) & (y_center < HEADER_BAND * page_height), F.lit("header")
-        )
-        .when(
-            (page_height > 0) & (y_center > (1 - HEADER_BAND) * page_height),
-            F.lit("footer"),
-        )
-        .otherwise(F.lit("text"))
-    )
-
-
-def blocks_df_to_spans(
-    blocks: DataFrame,
-    page_height: float = 0.0,
-    doc_col: str = "doc_id",
-    pos_col: str | None = None,
-) -> DataFrame:
-    """Native path: DataFrame of (doc_id, page, x0, y0, x1, y1, text) →
-    (doc_id, kind, text, media_ref, page, offset) in reading order.
-
-    One window keyed by doc_id — same clustering as the extraction shuffle,
-    so this stage composes with pipeline.extract with no extra exchange.
-
-    Tie-break contract: the must-agree scalar kernel stable-sorts by
-    (page, y0, x0), which preserves INPUT order for coordinate ties
-    (stacked/overlapping boxes) — a window orderBy alone breaks such ties
-    arbitrarily per run. Pass ``pos_col`` (an input-position column, the
-    same fix the fulltext operators use) for bit-stable kernel parity; it
-    defaults to a column literally named 'pos' when one exists. Without
-    one, remaining coordinates + text are appended to the ordering so the
-    output is at least DETERMINISTIC (equal-coordinate equal-text blocks
-    are interchangeable), never partition-order-dependent.
-    """
-    # pystrip/has_nonblank, NOT F.trim: the must-agree scalar kernel uses
-    # python str.strip() — F.trim (U+0020 only) kept '\t\t' blocks the
-    # kernel drops and emitted '\tfoo' where the kernel emits 'foo',
-    # shifting every later offset (the recurring trim-vs-strip bug class)
-    from docproc_spark.pipeline import has_nonblank_col, pystrip_col
-
-    kept = blocks.filter(has_nonblank_col(F.col("text")))
-    if pos_col is None and "pos" in blocks.columns:
-        pos_col = "pos"
-    tie = [F.col(pos_col)] if pos_col else [
-        F.col("y1"), F.col("x1"), F.col("text")
-    ]
-    w = Window.partitionBy(doc_col).orderBy(F.col("page"), F.col("y0"), F.col("x0"), *tie)
-    yc = (F.col("y0") + F.col("y1")) / 2
-    return kept.select(
-        F.col(doc_col),
-        classify_block_col(F.col("text"), yc, F.lit(float(page_height))).alias("kind"),
-        pystrip_col(F.col("text")).alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.col("page").cast("int").alias("page"),
-        (F.row_number().over(w) - 1).alias("offset"),
-    )

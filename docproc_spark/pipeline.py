@@ -2,8 +2,8 @@
 
 DataFrame-first engine for the reference's deterministic extraction path
 (docproc_spark.oracle is the single-process truth). The input already
-holds one row per document with its span array, so extract() is one
-narrow Arrow map over whole documents:
+holds one row per document with its span array, so extract_map() is
+one narrow Arrow map over whole documents:
 
     scan → select(doc_id, spans[, raw_html[, url]])
          → mapInArrow: the kernels.assembly kernel on every row
@@ -24,17 +24,20 @@ columns. The oracle runs the same phases through a scalar adapter with
 no gates, so it checks the gated engine against the scalar functions.
 
   Skew: a document is one row and one Python call. A document with more
-  than ``mega_doc_threshold`` spans would be a straggler task, so extract()
-  routes it to pipeline_salted, which runs the same kernel in two phases
-  (page partials per (doc, page), then a merge per document) so that one
-  document's spans spread across tasks. A parquet scan whose footers
-  prove that no document crosses the threshold gets the single map with
-  no job (_footer_bound). A derived input (a load_files parse) is staged
-  once first (_staged), so it is parsed once and routed on its real span
-  count. The rest of this module serves that routing, the staging and
-  the operators: the derived span array (derived_spans, with the masked
+  than MEGA_DOC_SPANS spans would be a straggler task, so extract() is a
+  router over two plans: extract_map, the single map above, and
+  pipeline_salted.extract_salted, which runs the same kernel in two
+  phases (page partials per (doc, page), then a merge per document) so
+  that one document's spans spread across tasks. A derived input (a
+  load_files parse) is staged once first (_staged), so it is parsed once
+  and routed on its real span count; a parquet scan whose footers prove
+  that no document crosses the threshold gets the single map with no job
+  (_footer_bound); any other input is routed by one probe job, and the
+  union of both plans is built only when the probe finds a mega document.
+  The rest of this module serves that routing, the staging and the
+  operators: the derived span array (derived_spans, with the masked
   html_spans_udf), the per-SparkContext memo of Columns and pandas UDFs
-  (_program) and the Python-whitespace Column helpers.
+  (_program) and the Python-whitespace Column helper.
 """
 
 from __future__ import annotations
@@ -107,7 +110,7 @@ def html_spans_udf(raw_html: pd.Series, url: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# Python-whitespace helpers (JVM-side)
+# Python-whitespace helper (JVM-side)
 # ---------------------------------------------------------------------------
 # Python str.strip()/str.isspace() whitespace = Unicode White_Space plus the
 # C0 separators U+001C..U+001F. Java \s is ASCII-only by default and F.trim
@@ -122,11 +125,6 @@ def pystrip_col(c: Column) -> Column:
     return F.regexp_replace(
         F.regexp_replace(c, f"(?U)^[{_PY_WS}]+", ""), f"(?U)[{_PY_WS}]+$", ""
     )
-
-
-def has_nonblank_col(c: Column) -> Column:
-    """`bool(text.strip())` equivalent, null-safe (null → false)."""
-    return F.coalesce(c.rlike(f"(?U)[^{_PY_WS}]"), F.lit(False))
 
 
 # ---------------------------------------------------------------------------
@@ -328,141 +326,127 @@ def _staged(docs: DataFrame) -> DataFrame:
     )
 
 
+# A document with more spans than this (by the routing estimate) is
+# extracted by pipeline_salted instead of the one-map plan: beyond ~10^5
+# spans one document's Python call becomes a straggler task.
+MEGA_DOC_SPANS = 100_000
+
+
 def extract(
     docs: DataFrame,
     *,
     drop_kinds: frozenset = DROP_KINDS_DEFAULT,
     drop_exact_duplicates: bool = True,
-    mega_doc_threshold: int | None = 100_000,
 ) -> DataFrame:
     """Full pipeline: documents(doc_id, doc_type, raw_html, spans) → result.
 
     Output: doc_id, markdown, n_pages, spans (renumbered 0-based offsets),
-    one row per input row. The documents are extracted inside a
-    mapInArrow over whole-document rows, the assembly kernel running on
-    each Arrow batch's span field arrays (_extract_batches): no shuffle,
-    and nothing to build per call beyond the DataFrame calls themselves.
+    one row per input row. extract() only routes: a document whose routing
+    estimate exceeds MEGA_DOC_SPANS goes through the salted two-phase plan
+    (pipeline_salted.extract_salted), every other one through extract_map,
+    and the salted branch is built only when some document needs it. The
+    estimate is the ingest-time ``n_spans`` column (corpus writers and the
+    loaders materialize it), or the size of ``spans`` without it, plus
+    len(raw_html)/8 where the table carries raw_html (a main-content block
+    costs ≥ ~8 chars of source; its HTML is parsed after routing).
 
-    Documents with more than ``mega_doc_threshold`` input spans are routed
-    through the salted two-phase path (pipeline_salted.extract_salted) —
-    beyond ~10^5 spans one document's call becomes a straggler task. The
-    routing predicate prefers an ingest-time ``n_spans`` column when
-    present (corpus writers materialize it). On the canonical span-only
-    input shape (doc_id, spans) the predicate is then a BARE int
-    comparison that reaches the parquet scan as a pushed filter — the
-    salted branch skips every row group whose n_spans max is under the
-    threshold (verified: ``PushedFilters: [GreaterThan(n_spans,…)]``) —
-    where F.size(spans) can never push down. Scan-like tables carrying
-    raw_html add an OR'd len(raw_html)/8 conservative estimate of
-    HTML-derived spans (a main-content block costs ≥ ~8 chars of source;
-    their HTML is parsed after routing), which disables parquet pushdown
-    for that branch — over-routing a medium doc to the salted path is
-    correct, just a different physical plan. A staged derived input
-    (below) routes on its exact span count instead. Fallback without the
-    column is F.size on the source array. Pass None to disable routing.
+    One decision chain, in order:
 
-    When the input carries the ingest-time ``n_spans`` column, routing
-    first tries to prove at plan-construction time that no row can cross
-    the threshold, and then does not build the salted union branch at
-    all: the common no-mega-doc table gets the
-    single-branch plan (the empty salted branch still costs an extra scan
-    + empty shuffle stages per run, measured ~0.7 s at sf0.1). On a
-    scan-like plan (_scan_plan) over one parquet relation whose own
-    ``n_spans``/``raw_html`` columns reach the output, the proof comes
-    from the files' footers (_footer_bound: per row group, the ``n_spans``
-    max statistic plus ``raw_html``'s chunk size over 8), the decision a
-    catalog answers from manifest min/max, and no Spark job runs. When
-    the footers cannot prove it (any other scan-like input, a computed or
-    partition ``n_spans``, a missing statistic, a bound over the
-    threshold), ONE eager driver-side ``max(routing estimate)`` job
-    decides, reading only the routing columns. A derived plan
-    (facade.load_files' mapInPandas parses, joins, unions) is first
-    staged (_staged): its rows, with the HTML-derived spans merged in and
-    their exact count as ``n_spans``, are staged lazily once, and the
-    probe's job computes them for both branches to read. The derivation then
-    runs once per call, and an HTML page is routed on the blocks it holds,
-    not on len(raw_html)/8. The probe is skipped (static two-branch plan
-    kept) for streaming inputs and for tables without ``n_spans`` (the
-    estimate would need the full spans array — not a cheap probe). The
-    probe job runs with
-    the job description ``docproc extract: routing probe``; the caller's
-    description is restored afterwards.
+    1. A derived plan (_scan_plan: facade.load_files' mapInPandas parses,
+       joins, unions) is staged lazily (_staged): its rows, with the
+       HTML-derived spans merged in and their exact count as ``n_spans``,
+       so the derivation runs once per call, and an HTML page is routed
+       on the blocks it holds, not on len(raw_html)/8.
+    2. A scan/project/filter plan over one parquet relation whose own
+       ``n_spans``/``raw_html`` columns reach the output is answered from
+       the files' footers (_footer_bound: per row group, the ``n_spans``
+       max statistic plus ``raw_html``'s chunk size over 8), the decision
+       a catalog answers from manifest min/max, with no Spark job, when
+       they prove that no document crosses the threshold.
+    3. Anything else runs ONE ``max(estimate)`` aggregate job (the
+       routing probe, job description ``docproc extract: routing probe``;
+       the caller's description is restored afterwards), reading only the
+       routing columns.
+    4. Only when the probe finds a document over the threshold is the plan
+       the union of both branches. With ``n_spans`` and no raw_html, each
+       branch filter is a BARE int comparison that reaches the parquet
+       scan as a pushed filter (``PushedFilters: [GreaterThan(n_spans,…)]``
+       and its complement), where F.size(spans) never pushes down.
+
+    A streaming frame raises ValueError: the routing needs a batch input,
+    and streaming.ingest.extract_stream runs extract() on each micro-batch.
     """
-    if mega_doc_threshold is not None:
-        from docproc_spark.pipeline_salted import extract_salted
+    from docproc_spark.pipeline_salted import extract_salted
 
-        def one_map(frame: DataFrame) -> DataFrame:
-            return extract(
-                frame,
-                drop_kinds=drop_kinds,
-                drop_exact_duplicates=drop_exact_duplicates,
-                mega_doc_threshold=None,
-            )
-
-        probe = "n_spans" in docs.columns and not docs.isStreaming
-        if probe:
-            plan = _scan_plan(docs)
-            if plan is None:
-                docs = _staged(docs)
-            else:
-                bound = _footer_bound(docs, plan)
-                if bound is not None and bound <= mega_doc_threshold:
-                    return one_map(docs)
-        # Both branch predicates are written out explicitly (not one
-        # expression and its ~negation): `n_spans > T` is null for
-        # null-n_spans rows, and a naive negation would silently drop them
-        # from BOTH branches. The explicit pair keeps every leaf a bare
-        # pushable comparison and the branches a disjoint cover.
-        if "n_spans" in docs.columns:
-            base = F.coalesce(F.col("n_spans"), F.lit(0)).cast("long")
-            mega = F.col("n_spans") > mega_doc_threshold
-            not_mega = (F.col("n_spans") <= mega_doc_threshold) | F.col(
-                "n_spans"
-            ).isNull()
-        else:
-            base = F.when(F.col("spans").isNull(), F.lit(0)).otherwise(
-                F.size("spans")
-            ).cast("long")
-            mega = base > mega_doc_threshold
-            not_mega = ~mega
-        if "raw_html" in docs.columns:
-            # route on the COMBINED estimate (a doc can cross the threshold
-            # with each source below it); this branch is non-pushable
-            # anyway once raw_html participates, so the sum costs nothing —
-            # the bare pushable pair above is kept for span-only tables
-            html_est = (
-                F.coalesce(F.length("raw_html"), F.lit(0)) / F.lit(8)
-            ).cast("long")
-            combined_mega = (base + html_est) > mega_doc_threshold
-            mega = mega | combined_mega
-            not_mega = not_mega & ~combined_mega
-        if probe:
-            # Upper bound of the routing estimate over the whole input:
-            # `base` is coalesce(n_spans,0) >= every n_spans arm, and the
-            # combined arm is exactly base+html_est, so max(estimate) <= T
-            # proves filter(mega) is empty and the union branch is dead.
-            estimate = base
-            if "raw_html" in docs.columns:
-                estimate = base + html_est
-            sc = docs.sparkSession.sparkContext
-            caller_desc = sc.getLocalProperty("spark.job.description")
-            sc.setJobDescription("docproc extract: routing probe")
-            try:
-                mx = docs.agg(F.max(estimate).alias("mx")).first()["mx"]
-            finally:
-                sc.setJobDescription(caller_desc)
-            if mx is None or mx <= mega_doc_threshold:
-                mega_doc_threshold = None
-        if mega_doc_threshold is None:
-            return one_map(docs)
-        normal = one_map(docs.filter(not_mega))
-        salted = extract_salted(
-            docs.filter(mega),
-            drop_kinds=drop_kinds,
-            drop_exact_duplicates=drop_exact_duplicates,
+    if docs.isStreaming:
+        raise ValueError(
+            "extract() takes a batch DataFrame; extract a stream with "
+            "docproc_spark.streaming.ingest.extract_stream"
         )
-        return normal.unionByName(salted)
+    opts = dict(drop_kinds=drop_kinds, drop_exact_duplicates=drop_exact_duplicates)
+    plan = _scan_plan(docs)
+    if plan is None:
+        docs = _staged(docs)
+    elif "n_spans" in docs.columns:
+        bound = _footer_bound(docs, plan)
+        if bound is not None and bound <= MEGA_DOC_SPANS:
+            return extract_map(docs, **opts)
+    estimate, mega, not_mega = _routing(docs)
+    sc = docs.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("docproc extract: routing probe")
+    try:
+        mx = docs.agg(F.max(estimate).alias("mx")).first()["mx"]
+    finally:
+        sc.setJobDescription(caller_desc)
+    if mx is None or mx <= MEGA_DOC_SPANS:
+        return extract_map(docs, **opts)
+    return extract_map(docs.filter(not_mega), **opts).unionByName(
+        extract_salted(docs.filter(mega), **opts)
+    )
 
+
+def _routing(docs: DataFrame) -> tuple[Column, Column, Column]:
+    """(estimate, mega, not_mega): extract's routing estimate of a row,
+    and the predicates of its two branches.
+
+    Both predicates are written out (not one and its negation): with
+    ``n_spans``, ``n_spans > T`` is null on a null n_spans, and a naive
+    negation would drop such a row from BOTH branches. The explicit pair
+    keeps every leaf a bare pushable comparison and the branches a
+    disjoint cover. With raw_html the rows route on the combined estimate
+    (a document can cross the threshold with each source below it), which
+    no longer pushes down. max(estimate) <= T proves the mega branch
+    empty: the estimate is at least every arm's value."""
+    if "n_spans" in docs.columns:
+        estimate = F.coalesce(F.col("n_spans"), F.lit(0)).cast("long")
+        mega = F.col("n_spans") > MEGA_DOC_SPANS
+        not_mega = (F.col("n_spans") <= MEGA_DOC_SPANS) | F.col("n_spans").isNull()
+    else:
+        estimate = F.when(F.col("spans").isNull(), F.lit(0)).otherwise(
+            F.size("spans")
+        ).cast("long")
+        mega = estimate > MEGA_DOC_SPANS
+        not_mega = ~mega
+    if "raw_html" in docs.columns:
+        estimate = estimate + (
+            F.coalesce(F.length("raw_html"), F.lit(0)) / F.lit(8)
+        ).cast("long")
+        combined_mega = estimate > MEGA_DOC_SPANS
+        mega, not_mega = mega | combined_mega, not_mega & ~combined_mega
+    return estimate, mega, not_mega
+
+
+def extract_map(
+    docs: DataFrame,
+    *,
+    drop_kinds: frozenset = DROP_KINDS_DEFAULT,
+    drop_exact_duplicates: bool = True,
+) -> DataFrame:
+    """extract's one-map plan on every row, unrouted: a mapInArrow over
+    whole-document rows, the assembly kernel running on each Arrow batch's
+    span field arrays (_extract_batches). No shuffle, and nothing to build
+    per call beyond the DataFrame calls themselves."""
     cols = ["doc_id", "spans"]
     if "raw_html" in docs.columns:
         # the page URL (WARC tables carry one) anchors relative image srcs

@@ -24,7 +24,7 @@ two phases so that no task runs a whole mega-document's span work:
 
 This is the intermediate-reduce phase of FP-Hadoop applied to the heavy
 keys only: pipeline.extract routes a document here when its span count
-exceeds mega_doc_threshold. No join, window, union or checkpoint; the only
+exceeds pipeline.MEGA_DOC_SPANS. No join, window, union or checkpoint; the only
 per-row Python UDF is derived_spans' masked html_spans_udf. Both paths
 equal the oracle (tests/test_salted_pipeline.py runs class-by-class
 parity plus a 120k-span document).

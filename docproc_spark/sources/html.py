@@ -120,10 +120,10 @@ def load_html(
     shared loader contract): ``raw_html`` carries the decoded markup,
     ``spans`` stays null (the extraction pipeline derives HTML spans
     through the density kernel), ``n_spans`` is 0 — no pre-parsed spans.
-    The pipeline's mega-doc router stages this derived table and routes
-    each page on its real HTML-derived span count (pipeline._staged); a
-    parquet copy of it is routed on n_spans plus a len(raw_html)/8
-    estimate for HTML-borne content, so the routing contract holds.
+    pipeline.extract stages this derived table and routes each page on
+    its real HTML-derived span count (pipeline._staged); a parquet copy
+    of it is routed on n_spans plus a len(raw_html)/8 estimate for
+    HTML-borne content, from the footers or by the routing probe.
     """
     import pandas as pd
 

@@ -9,7 +9,7 @@ import time
 
 import pytest
 
-from docproc_spark import oracle
+from docproc_spark import oracle, pipeline
 from docproc_spark.facade import DocprocSpark
 from docproc_spark.pipeline import _staged, extract
 from docproc_spark.plans.explain import executed_plan
@@ -104,11 +104,12 @@ def test_script_heavy_page_takes_the_map_path(loaded):
     assert _got(res) == want
 
 
-def test_page_over_a_small_threshold_takes_the_salted_path(loaded):
+def test_page_over_a_small_threshold_takes_the_salted_path(loaded, monkeypatch):
     """With a threshold of 10 only the long page crosses: the plan carries
     the salted branch, and both branches together equal the oracle."""
     docs, want = loaded
-    res = extract(docs, mega_doc_threshold=10)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 10)
+    res = extract(docs)
     assert "Union" in executed_plan(res)
     assert _got(res) == want
 

@@ -14,7 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from docproc_spark import corpus, oracle
+from docproc_spark import corpus, oracle, pipeline
 from docproc_spark.pipeline import extract
 from docproc_spark.plans.explain import executed_plan
 
@@ -57,7 +57,7 @@ def _write(rows: list[dict], path: str, **options) -> str:
     return path
 
 
-def _extract_counting_jobs(spark, docs, **kwargs):
+def _extract_counting_jobs(spark, docs):
     """extract(docs), and the number of Spark jobs it ran while it built
     its result, read from the status tracker under a job group of its
     own."""
@@ -65,7 +65,7 @@ def _extract_counting_jobs(spark, docs, **kwargs):
     group = f"footer-routing-{next(_groups)}"
     sc.setJobGroup(group, group)
     try:
-        res = extract(docs, **kwargs)
+        res = extract(docs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -112,11 +112,14 @@ def test_computed_n_spans_takes_the_probe(spark, spark_written, rows):
     _assert_oracle(res, rows)
 
 
-def test_mega_document_in_parquet_takes_the_salted_union(spark, spark_written, rows):
+def test_mega_document_in_parquet_takes_the_salted_union(
+    spark, spark_written, rows, monkeypatch
+):
     threshold = 150
     assert max(r["n_spans"] for r in rows) > threshold
     docs = spark.read.parquet(spark_written)
-    res, jobs = _extract_counting_jobs(spark, docs, mega_doc_threshold=threshold)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", threshold)
+    res, jobs = _extract_counting_jobs(spark, docs)
     assert jobs > 0
     assert "Union" in executed_plan(res)
     _assert_oracle(res, rows)
@@ -152,7 +155,7 @@ def test_unprovable_footers_take_the_probe(spark, tmp_path, rows, options):
     _assert_oracle(res, rows)
 
 
-def test_row_group_bound_over_threshold_runs_the_probe(spark, tmp_path, rows):
+def test_row_group_bound_over_threshold_runs_the_probe(spark, tmp_path, rows, monkeypatch):
     """A row group's bound (max n_spans + all its raw_html bytes / 8) can
     cross the threshold while no document does: the probe job decides, and
     finds the single map."""
@@ -160,7 +163,8 @@ def test_row_group_bound_over_threshold_runs_the_probe(spark, tmp_path, rows):
     html_bytes = sum(len((r["raw_html"] or "").encode()) for r in rows)
     assert max(r["n_spans"] for r in rows) + html_bytes // 8 > threshold
     docs = spark.read.parquet(_write(rows, str(tmp_path / "docs")))
-    res, jobs = _extract_counting_jobs(spark, docs, mega_doc_threshold=threshold)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", threshold)
+    res, jobs = _extract_counting_jobs(spark, docs)
     assert jobs > 0
     assert _single_map(res), executed_plan(res)
     _assert_oracle(res, rows)

@@ -1602,30 +1602,6 @@ def test_stage_flagship_expected_param_keyed_cache(tmp_path):
     assert n3 == 12
 
 
-def test_blocks_df_to_spans_tie_break_stability(spark):
-    """Coordinate-tied blocks must order deterministically: with a pos
-    column the INPUT order wins (scalar-kernel stable-sort parity);
-    without one the text tie-break still gives a deterministic result."""
-    from docproc_spark.kernels.pdf_layout import blocks_df_to_spans
-
-    rows = [
-        ("d", 0, 0.0, 10.0, 5.0, 12.0, "second in input", 1),
-        ("d", 0, 0.0, 10.0, 5.0, 12.0, "first in input", 0),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id string, page int, x0 double, y0 double, "
-        "x1 double, y1 double, text string, pos int"
-    )
-    got = {r["text"]: r["offset"] for r in blocks_df_to_spans(df).collect()}
-    assert got == {"first in input": 0, "second in input": 1}
-    # without pos: deterministic fallback (text ordering)
-    got2 = {
-        r["text"]: r["offset"]
-        for r in blocks_df_to_spans(df.drop("pos")).collect()
-    }
-    assert got2 == {"first in input": 0, "second in input": 1}
-
-
 def test_build_vocab_counts_and_coverage(spark):
     """Counts/ranks against a hand Counter; deterministic tie order
     (tf desc, token asc); cum_tf telescopes to total_tf when k covers

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from docproc_spark import oracle
-from docproc_spark.pipeline import extract
+from docproc_spark.pipeline import extract_map
 from docproc_spark.pipeline_salted import extract_salted
 from docproc_spark.schema import DOCUMENTS_SCHEMA
 
@@ -93,7 +93,7 @@ def edge_df(spark):
 
 @pytest.mark.parametrize("plan", ["array", "salted"])
 def test_edge_docs_match_oracle(spark, edge_df, plan):
-    fn = (lambda d: extract(d, mega_doc_threshold=None)) if plan == "array" else extract_salted
+    fn = extract_map if plan == "array" else extract_salted
     got = {r["doc_id"]: r.asDict(recursive=True) for r in fn(edge_df).collect()}
     for doc in EDGE_DOCS:
         want = oracle.extract_doc(doc)

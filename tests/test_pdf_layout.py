@@ -1,8 +1,8 @@
-"""PDF layout kernels: reading order + region detection, python↔Spark parity."""
+"""PDF layout kernel: reading order + region detection."""
 
 from __future__ import annotations
 
-from docproc_spark.kernels.pdf_layout import blocks_df_to_spans, blocks_to_spans
+from docproc_spark.kernels.pdf_layout import blocks_to_spans
 
 BLOCKS = [
     # page 0, out of order on purpose
@@ -36,65 +36,43 @@ def test_reading_order_and_regions():
     assert [s["offset"] for s in spans] == list(range(6))
 
 
-def test_spark_matches_python(spark):
-    rows = [{"doc_id": "d1", **b} for b in BLOCKS]
-    df = spark.createDataFrame(rows)
-    got = sorted(
-        (r["offset"], r["kind"], r["text"], r["page"])
-        for r in blocks_df_to_spans(df, page_height=PAGE_H).collect()
-    )
-    want = sorted(
-        (s["offset"], s["kind"], s["text"], s["page"])
-        for s in blocks_to_spans(BLOCKS, page_height=PAGE_H)
-    )
-    assert got == want
-
-
 def test_feeds_extraction_pipeline(spark):
     """Layout output composes with the flagship pipeline."""
-    from pyspark.sql import functions as F
-
     from docproc_spark.pipeline import extract
+    from docproc_spark.schema import DOCUMENTS_SCHEMA
 
-    rows = [{"doc_id": "d1", **b} for b in BLOCKS]
-    spans = blocks_df_to_spans(spark.createDataFrame(rows), page_height=PAGE_H)
-    docs = spans.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct("kind", "text", "media_ref", "page", "offset")
-        ).alias("spans")
-    ).withColumn("doc_type", F.lit("pdf")).withColumn("raw_html", F.lit(None).cast("string"))
-    res = extract(docs).collect()[0]
+    doc = {"doc_id": "d1", "doc_type": "pdf", "raw_html": None,
+           "spans": blocks_to_spans(BLOCKS, page_height=PAGE_H)}
+    res = extract(spark.createDataFrame([doc], schema=DOCUMENTS_SCHEMA)).collect()[0]
     assert "[Page 1]" in res["markdown"] and "[Page 2]" in res["markdown"]
     assert "left column" in res["markdown"]
     assert "Page 1 of 9" in res["markdown"]  # footer kept (not boilerplate-dropped)
 
 
-def test_df_path_matches_kernel_on_whitespace_blocks(spark):
-    """The DataFrame path must agree with the scalar kernel on blocks that
-    differ under str.strip() vs F.trim (tabs, NBSP): '\\t\\t' dropped,
-    '\\tfoo' emitted as 'foo' (offsets shift identically)."""
-    import pandas as pd
-
-    from docproc_spark.kernels.pdf_layout import blocks_df_to_spans, blocks_to_spans
-
+def test_whitespace_blocks_strip_like_str_strip():
+    """Blank means blank under Python str.strip(), not F.trim: '\\t\\t' is
+    dropped and '\\tfoo' emitted as 'foo', so later offsets shift."""
     blocks = [
         {"page": 0, "x0": 0.0, "y0": 10.0, "x1": 100.0, "y1": 20.0, "text": "\t\t"},
         {"page": 0, "x0": 0.0, "y0": 30.0, "x1": 100.0, "y1": 40.0, "text": "\tfoo"},
-        {"page": 0, "x0": 0.0, "y0": 50.0, "x1": 100.0, "y1": 60.0, "text": " "},
-        {"page": 0, "x0": 0.0, "y0": 70.0, "x1": 100.0, "y1": 80.0, "text": "bar "},
+        {"page": 0, "x0": 0.0, "y0": 50.0, "x1": 100.0, "y1": 60.0, "text": "\u00a0"},
+        {"page": 0, "x0": 0.0, "y0": 70.0, "x1": 100.0, "y1": 80.0, "text": "bar "},
     ]
-    want = [
+    got = [
         (s["kind"], s["text"], s["page"], s["offset"])
         for s in blocks_to_spans(blocks, page_height=800.0)
     ]
-    df = spark.createDataFrame(
-        pd.DataFrame([{**b, "doc_id": "d1"} for b in blocks])
-    )
-    got = [
-        (r["kind"], r["text"], r["page"], r["offset"])
-        for r in blocks_df_to_spans(df, page_height=800.0)
-        .orderBy("offset")
-        .collect()
-    ]
     # y-center 35 < 0.08*800: the surviving first block is a header
-    assert got == want == [("header", "foo", 0, 0), ("text", "bar", 0, 1)]
+    assert got == [("header", "foo", 0, 0), ("text", "bar", 0, 1)]
+
+
+def test_coordinate_ties_keep_input_order():
+    """Blocks with equal (page, y0, x0) keep their input order: the sort is
+    stable, so stacked or overlapping boxes read as the loader gave them."""
+    rows = [
+        {"page": 0, "x0": 0.0, "y0": 10.0, "x1": 5.0, "y1": 12.0, "text": "first in input"},
+        {"page": 0, "x0": 0.0, "y0": 10.0, "x1": 5.0, "y1": 12.0, "text": "second in input"},
+    ]
+    for blocks in (rows, rows[::-1]):
+        got = [s["text"] for s in blocks_to_spans(blocks)]
+        assert got == [b["text"] for b in blocks]

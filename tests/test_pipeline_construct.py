@@ -20,7 +20,7 @@ from py4j.clientserver import ClientServerConnection
 from docproc_spark import corpus, oracle
 from docproc_spark.kernels.assembly import assemble_document
 from docproc_spark.kernels.sanitize import DROP_KINDS_DEFAULT
-from docproc_spark.pipeline import _program, extract
+from docproc_spark.pipeline import _program, extract, extract_map
 from tests.test_footer_routing import _write
 
 REPO = Path(__file__).resolve().parent.parent
@@ -70,9 +70,9 @@ def _round_trips(monkeypatch, fn) -> int:
 def test_repeated_extract_makes_few_round_trips(spark, monkeypatch):
     docs = corpus.corpus_df(spark, 24, seed=23, mega_spans=200, partitions=2)
     # an option set no other test uses
-    opts = dict(drop_kinds=frozenset({"questions"}), mega_doc_threshold=None)
-    first = _round_trips(monkeypatch, lambda: extract(docs, **opts))
-    again = _round_trips(monkeypatch, lambda: extract(docs, **opts))
+    opts = dict(drop_kinds=frozenset({"questions"}))
+    first = _round_trips(monkeypatch, lambda: extract_map(docs, **opts))
+    again = _round_trips(monkeypatch, lambda: extract_map(docs, **opts))
     # extract's own DataFrame calls are py4j commands, so a counter that
     # counts nothing reads 0 here
     assert 0 < first <= 200, first
@@ -118,7 +118,7 @@ def test_alternating_options_each_match_the_oracle(spark):
     want_a, want_b = _want(rows, **a), _want(rows, **b)
     assert want_a != want_b, "the sample must tell the option sets apart"
     for opts, want in ((a, want_a), (b, want_b), (a, want_a)):
-        assert _got(extract(docs, mega_doc_threshold=None, **opts)) == want
+        assert _got(extract_map(docs, **opts)) == want
 
 
 @pytest.mark.parametrize("caller_desc", ["caller job", None], ids=["set", "unset"])
@@ -165,7 +165,7 @@ runs = []
 for _ in range(2):
     spark = get_spark(master="local[2]", shuffle_partitions=2)
     docs = corpus.corpus_df(spark, n, seed=seed, mega_spans=200, partitions=2)
-    rows = pipeline.extract(docs, mega_doc_threshold=None).collect()
+    rows = pipeline.extract_map(docs).collect()
     text.lang_id_ngram_udf(F.col("t")), text._mojibake_fix_udf(F.col("t"))
     own = spark.sparkContext._javaAccumulator
     runs.append({

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from docproc_spark import corpus, oracle
+from docproc_spark import corpus, oracle, pipeline
 from docproc_spark.pipeline import extract
 
 N_DOCS = 180  # ≥2× the class-weight cycle → every fixture class ≥2 instances
@@ -145,7 +145,7 @@ def test_empty_string_kind_treated_as_text(spark):
     assert _tuples(got["spans"]) == _tuples(want["spans"])
 
 
-def test_extract_on_canonical_span_only_shape(spark, tmp_path):
+def test_extract_on_canonical_span_only_shape(spark, tmp_path, monkeypatch):
     """The engine's input contract is just (doc_id, spans); extract must
     run without raw_html, produce identical results, and — with the
     ingest-time n_spans column — push BOTH routing-branch filters into the
@@ -160,25 +160,26 @@ def test_extract_on_canonical_span_only_shape(spark, tmp_path):
     path = str(tmp_path / "span_only")
     no_html.select("doc_id", "spans", "n_spans").write.parquet(path)
     span_only = spark.read.parquet(path)
+    want = {
+        r["doc_id"]: (r["markdown"], r["n_pages"])
+        for r in extract(no_html).collect()
+    }
     # a threshold under the corpus maximum keeps the two-branch plan this
     # test is about; at the default threshold the probe would elide the
     # salted branch — that path is covered by
     # test_probe_elides_dead_salted_branch.
-    res = extract(span_only, mega_doc_threshold=5)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 5)
+    res = extract(span_only)
     # both branches scan in the one executed plan
     plan = res._jdf.queryExecution().executedPlan().toString()
     pushed = set(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
     assert any("GreaterThan(n_spans" in p for p in pushed), pushed
     assert any("Or(LessThanOrEqual(n_spans" in p for p in pushed), pushed
-    want = {
-        r["doc_id"]: (r["markdown"], r["n_pages"])
-        for r in extract(no_html).collect()
-    }
     got = {r["doc_id"]: (r["markdown"], r["n_pages"]) for r in res.collect()}
     assert got == want
 
 
-def test_probe_elides_dead_salted_branch(spark, tmp_path):
+def test_probe_elides_dead_salted_branch(spark, tmp_path, monkeypatch):
     """With an ingest-time n_spans column whose max is under the routing
     threshold, the default eager probe builds the single-branch plan (no
     Union, one scan); with a doc over the threshold the union survives.
@@ -194,7 +195,8 @@ def test_probe_elides_dead_salted_branch(spark, tmp_path):
     assert "Union" not in plan, plan[:2000]
 
     # threshold below the corpus max estimate (10) → probe must KEEP the union
-    routed = extract(docs, mega_doc_threshold=5)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 5)
+    routed = extract(docs)
     routed_plan = routed._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" in routed_plan
 
@@ -214,11 +216,12 @@ def _span_doc(doc_id: str, n: int) -> dict:
     return {"doc_id": doc_id, "doc_type": "pdf", "raw_html": None, "spans": spans}
 
 
-def test_derived_input_is_parsed_once_and_routed_on_real_spans(spark):
-    """A mapInPandas-derived input is staged once per extract call: the
-    parse runs once per row, the plan is the single Arrow map when no document
-    crosses the threshold, and the salted union when one document's real
-    span count does, though the table's n_spans column says 0."""
+def test_derived_input_is_parsed_once_and_routed_on_real_spans(spark, monkeypatch):
+    """A mapInPandas-derived input is staged once per extract call, with or
+    without an n_spans column: the parse runs once per row, the plan is the
+    single Arrow map when no document crosses the threshold, and the salted
+    union when one document's real span count does, though the table's
+    n_spans column says 0."""
     import pandas as pd
 
     from docproc_spark.plans.explain import executed_plan
@@ -227,44 +230,90 @@ def test_derived_input_is_parsed_once_and_routed_on_real_spans(spark):
     docs = [_span_doc(d, n) for d, n in sizes.items()]
     parsed = spark.sparkContext.accumulator(0)
     by_id = {d["doc_id"]: d for d in docs}
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                parsed.add(1)
-                rows.append({**by_id[doc_id], "n_spans": 0})
-            yield pd.DataFrame(rows, columns=["doc_id", "raw_html", "spans", "n_spans"])
-
     src = spark.createDataFrame(pd.DataFrame({"doc_id": list(sizes)}))
-    derived = src.mapInPandas(
-        parse, "doc_id string, raw_html string, "
-        "spans array<struct<kind:string,text:string,media_ref:string,page:int,offset:int>>, "
-        "n_spans int",
+    span_schema = (
+        "doc_id string, raw_html string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,page:int,offset:int>>"
     )
+
+    def derived_input(with_n_spans: bool):
+        columns = ["doc_id", "raw_html", "spans"] + (["n_spans"] if with_n_spans else [])
+
+        def parse(batches):
+            for pdf in batches:
+                rows = []
+                for doc_id in pdf["doc_id"]:
+                    parsed.add(1)
+                    rows.append({**by_id[doc_id], "n_spans": 0})
+                yield pd.DataFrame(rows, columns=columns)
+
+        schema = span_schema + (", n_spans int" if with_n_spans else "")
+        return src.mapInPandas(parse, schema)
 
     want = {}
     for d in docs:
         w = oracle.extract_doc(d)
         want[d["doc_id"]] = (w["markdown"], w["n_pages"], _tuples(w["spans"]))
 
-    def run(**opts) -> tuple[int, str]:
+    def run(derived) -> tuple[int, str]:
         """(parse calls, executed plan) of one extract call, construction
         included: the routing probe's job parses while extract() builds
         the plan."""
         before = parsed.value
-        res = extract(derived, **opts)
+        res = extract(derived)
         plan = executed_plan(res)
         got = {r["doc_id"]: (r["markdown"], r["n_pages"], _tuples(r["spans"]))
                for r in res.collect()}
         assert got == want
         return parsed.value - before, plan
 
-    calls, plan = run()
-    assert "Union" not in plan and plan.count("MapInArrow") == 1, plan
-    assert "MapInPandas" not in plan, "the parse sits behind the staged rows"
-    assert calls == 2
+    for with_n_spans in (False, True):
+        derived = derived_input(with_n_spans)
+        assert ("n_spans" in derived.columns) == with_n_spans
+        with monkeypatch.context() as m:
+            calls, plan = run(derived)
+            assert "Union" not in plan and plan.count("MapInArrow") == 1, plan
+            assert "MapInPandas" not in plan, "the parse sits behind the staged rows"
+            assert calls == 2
 
-    calls, plan = run(mega_doc_threshold=10)
-    assert "Union" in plan and "FlatMapGroupsInArrow" in plan, "the salted branch is planned"
-    assert calls == 2
+            m.setattr(pipeline, "MEGA_DOC_SPANS", 10)
+            calls, plan = run(derived)
+            assert "Union" in plan and "FlatMapGroupsInArrow" in plan, (
+                "the salted branch is planned"
+            )
+            assert calls == 2
+
+
+def test_canonical_input_without_n_spans_is_probed(spark, tmp_path, monkeypatch):
+    """A (doc_id, spans) parquet table without the n_spans column is routed
+    by the probe job on size(spans): one Arrow map and no union when no
+    document crosses the threshold, the salted union when one does; both
+    plans equal the oracle."""
+    from docproc_spark.plans.explain import executed_plan
+
+    n, seed, mega = 40, 13, 300
+    rows = [corpus.gen_doc(i, seed=seed, mega_spans=mega) for i in range(n)]
+    rows = [r for r in rows if not r["raw_html"]]
+    path = str(tmp_path / "canonical")
+    corpus.corpus_df(spark, n, seed=seed, mega_spans=mega, partitions=4).filter(
+        "raw_html IS NULL OR length(raw_html) = 0"
+    ).select("doc_id", "spans").write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def summary(d) -> tuple:
+        return d["markdown"], d["n_pages"], _tuples(d["spans"])
+
+    want = {r["doc_id"]: summary(oracle.extract_doc(r)) for r in rows}
+
+    res = extract(docs)
+    plan = executed_plan(res)
+    assert "Union" not in plan and plan.count("MapInArrow") == 1, plan
+    assert {r["doc_id"]: summary(r) for r in res.collect()} == want
+
+    sizes = sorted(len(r["spans"] or []) for r in rows)
+    assert sizes[0] < sizes[-1] - 1
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", sizes[-1] - 1)
+    res = extract(docs)
+    plan = executed_plan(res)
+    assert "Union" in plan and "FlatMapGroupsInArrow" in plan, plan
+    assert {r["doc_id"]: summary(r) for r in res.collect()} == want

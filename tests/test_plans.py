@@ -17,9 +17,9 @@ from docproc_spark.plans.explain import executed_plan as _plan
 from docproc_spark.plans.explain import pushed_filters, read_schemas
 
 
-def test_extract_is_single_pass(spark, tmp_path):
-    from docproc_spark import corpus
-    from docproc_spark.pipeline import extract
+def test_extract_is_single_pass(spark, tmp_path, monkeypatch):
+    from docproc_spark import corpus, pipeline
+    from docproc_spark.pipeline import extract, extract_map
 
     src = str(tmp_path / "docs")
     corpus.corpus_df(spark, 50, seed=3, mega_spans=100, partitions=2).write.parquet(src)
@@ -37,7 +37,7 @@ def test_extract_is_single_pass(spark, tmp_path):
         assert s["unions"] == 0
         assert s["windows"] == 0
 
-    assert_one_arrow_map(extract(docs, mega_doc_threshold=None))
+    assert_one_arrow_map(extract_map(docs))
     # with the r4 stats probe, the DEFAULT plan for a no-mega-doc corpus
     # is the same single-pass shape (dead salted branch elided)
     assert_one_arrow_map(extract(docs))
@@ -45,7 +45,8 @@ def test_extract_is_single_pass(spark, tmp_path):
     # salted branch: two grouped Arrow maps (page partials, document
     # merge), no join or window, and no Python UDF but the masked pandas
     # html_spans_udf
-    routed = extract(docs, mega_doc_threshold=5)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 5)
+    routed = extract(docs)
     s3 = plan_summary(routed)
     assert s3["unions"] >= 1
     plan = _plan(routed)

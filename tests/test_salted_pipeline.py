@@ -12,8 +12,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from docproc_spark import corpus, oracle
-from docproc_spark.pipeline import extract
+from docproc_spark import corpus, oracle, pipeline
+from docproc_spark.pipeline import extract, extract_map
 from docproc_spark.pipeline_salted import extract_salted
 from docproc_spark.schema import DOCUMENTS_SCHEMA
 
@@ -67,7 +67,7 @@ def test_salted_markdown_and_pages(results):
     )
 
 
-def test_routing_splits_by_span_count(spark):
+def test_routing_splits_by_span_count(spark, monkeypatch):
     """extract() routes >threshold docs through the salted branch and the
     union reproduces every doc exactly once with oracle parity."""
     docs = [corpus.gen_doc(i, seed=5, mega_spans=3000) for i in range(40)]
@@ -75,10 +75,8 @@ def test_routing_splits_by_span_count(spark):
         pd.DataFrame(docs, columns=["doc_id", "doc_type", "raw_html", "spans"]),
         schema=DOCUMENTS_SCHEMA,
     )
-    got = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in extract(df, mega_doc_threshold=1000).collect()
-    }
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 1000)
+    got = {r["doc_id"]: r.asDict(recursive=True) for r in extract(df).collect()}
     assert len(got) == 40  # no doc lost or duplicated by the split
     for d in docs:
         want = oracle.extract_doc(d)
@@ -159,7 +157,7 @@ def test_salted_equals_array_path_fresh_seed(spark):
     docs = corpus.corpus_df(spark, 90, seed=99, mega_spans=300, partitions=4)
     a = {
         r["doc_id"]: r.asDict(recursive=True)
-        for r in extract(docs, mega_doc_threshold=None).collect()
+        for r in extract_map(docs).collect()
     }
     b = {
         r["doc_id"]: r.asDict(recursive=True)
@@ -195,7 +193,7 @@ def test_drop_kinds_parity_both_plans(spark, drop_kinds):
         differs += md != assemble_document(spans)[0]
     assert differs, "the sample must exercise drop_kinds"
     for res in (
-        extract(docs, drop_kinds=drop_kinds, mega_doc_threshold=None),
+        extract_map(docs, drop_kinds=drop_kinds),
         extract_salted(docs, drop_kinds=drop_kinds),
     ):
         got = {
@@ -219,7 +217,7 @@ def _page(word: str, big: bool) -> str:
     )
 
 
-def test_rewritten_routed_file_is_read_again(spark, tmp_path):
+def test_rewritten_routed_file_is_read_again(spark, tmp_path, monkeypatch):
     """A salted-routed page rewritten under the same path between two
     extract calls: the second call extracts the new bytes, as it does for
     a small page in the same directory."""
@@ -229,11 +227,12 @@ def test_rewritten_routed_file_is_read_again(spark, tmp_path):
     d = tmp_path / "in"
     d.mkdir()
     eng = DocprocSpark(spark=spark)
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 10)
     for word in ("ALPHA", "BRAVO"):  # same length: the file sizes do not change
         (d / "big.html").write_text(_page(word, big=True))
         (d / "small.html").write_text(_page(word, big=False))
         docs = eng.load_files(str(d)).filter("parse_error IS NULL")
-        res = extract(docs, mega_doc_threshold=10)
+        res = extract(docs)
         assert "Union" in executed_plan(res), "the big page takes the salted branch"
         md = {r["doc_id"]: r["markdown"] for r in res.collect()}
         assert set(md) == {"big.html", "small.html"}
@@ -323,14 +322,14 @@ def test_salted_map_and_oracle_agree_on_edge_spans(spark, spans):
     want = oracle.extract_doc(doc)
     if any(s and s["text"] == BODY for s in spans or ()):
         assert BODY in want["markdown"]
-    for res in (extract(df, mega_doc_threshold=None), extract_salted(df)):
+    for res in (extract_map(df), extract_salted(df)):
         (got,) = res.collect()
         assert got["markdown"] == want["markdown"]
         assert got["n_pages"] == want["n_pages"]
         assert _tuples(got["spans"]) == _tuples(want["spans"])
 
 
-def test_routed_rows_that_share_a_doc_id_stay_separate(spark):
+def test_routed_rows_that_share_a_doc_id_stay_separate(spark, monkeypatch):
     """Two input rows with one doc_id are two documents on the one-map
     path, so the salted path must not merge their pages and dedupe: it
     groups by a per-input-row key, and carries doc_id through."""
@@ -350,7 +349,8 @@ def test_routed_rows_that_share_a_doc_id_stay_separate(spark):
             for r in frame.collect()
         )
 
-    one_map = result(extract(df, mega_doc_threshold=None))
+    one_map = result(extract_map(df))
     assert len(one_map) == 3
-    assert result(extract(df, mega_doc_threshold=1)) == one_map
+    monkeypatch.setattr(pipeline, "MEGA_DOC_SPANS", 1)
+    assert result(extract(df)) == one_map
     assert result(extract_salted(df)) == one_map

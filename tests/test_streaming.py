@@ -305,3 +305,20 @@ def test_extract_stream_refuses_mixed_output_lineage(spark, tmp_path):
     run_extract_stream_once(spark, src, out_b, ckpt_b)
     with _pytest.raises(ValueError, match="refusing to mix"):
         run_extract_stream_once(spark, src, out, ckpt_b)
+
+
+def test_extract_rejects_a_streaming_frame(spark, tmp_path):
+    """extract() routes batch inputs only: a readStream frame is refused
+    with a ValueError naming extract_stream while the plan is built, and
+    extract_stream's foreachBatch frames are batch frames."""
+    import pytest as _pytest
+
+    from docproc_spark.corpus import corpus_df
+    from docproc_spark.pipeline import extract
+
+    src = str(tmp_path / "src")
+    corpus_df(spark, 4, seed=3, partitions=1).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    assert stream.isStreaming
+    with _pytest.raises(ValueError, match="extract_stream"):
+        extract(stream)
